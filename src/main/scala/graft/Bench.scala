@@ -112,8 +112,9 @@ object Bench {
   private def writeBenchFile(
       path: String, updates: Seq[(String, String)], partial: Boolean): Unit = {
     val p = java.nio.file.Paths.get(path)
-    // A fresh SPARK_GRAFT_OUT dir must not silently lose the artifacts
-    // (the exception fires after the stdout line, so the run LOOKS fine).
+    // A fresh SPARK_GRAFT_OUT dir is created, not a failed write: the
+    // files are written before each metric line prints, so a missing dir
+    // would kill the run with no line at all.
     Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
     val existing =
       if (partial && java.nio.file.Files.exists(p))
@@ -135,7 +136,7 @@ object Bench {
     "q_layout_zorder", "q_pipeline_e2e", "q_decontaminate")
 
   /** One full battery attempt's measurements + its ambient verdict. */
-  private final case class Battery(
+  private[graft] final case class Battery(
       results: Seq[(String, Double)],
       runsRaw: Seq[(String, Seq[Double])],
       failed: Seq[String],
@@ -144,6 +145,80 @@ object Bench {
       loadStart: Seq[Double], loadEnd: Seq[Double],
       stealPct: Double, cotenantCores: Double, loadOk: Boolean,
       waitedSec: Long, deferred: Boolean)
+
+  /** What shaped a battery's timings, echoed into the line's `conf` block
+    * so every artifact describes the run that produced it. */
+  private[graft] final case class RunConf(
+      sfDir: String, cpus: Int, shufflePartitions: Int, runs: Int,
+      warmup: Boolean, partial: Boolean)
+
+  /** One rendering of a run: the metric JSON line, each BENCH_*.json
+    * file's (key → raw JSON value) entries, and the flagged regressions
+    * as (key, seconds, baseline seconds, 1-min load at the key's end). */
+  private[graft] final case class Report(
+      line: String, files: Seq[(String, Seq[(String, String)])],
+      regressions: Seq[(String, Double, Double, Double)])
+
+  /** Render the best attempt so far — load_ok first, then the lowest
+    * cotenant_cores, then the lowest total. A key regresses against
+    * `baseline` at > 1.5x AND > 0.2 s absolute (the floor keeps
+    * millisecond noise on tiny keys out of the gate). A failed key is
+    * excluded from the total and written as an explicit null, so a partial
+    * run never keeps its stale timing from an earlier battery. */
+  private[graft] def render(
+      attempts: Seq[Battery], conf: RunConf, baseline: Map[String, Double]): Report = {
+    val best = attempts.minBy(b =>
+      (if (b.loadOk) 0 else 1, b.cotenantCores, b.results.map(_._2).sum))
+    val results = scala.collection.immutable.ListMap(best.results: _*)
+    def r3(v: Double): String = f"$v%.3f"
+    val qs = headline.flatMap(k => results.get(k).map(v => s"\"$k\":${r3(v)}"))
+      .mkString("{", ",", "}")
+    val total = results.values.sum
+    val failedJson = best.failed.map(k => s"\"$k\"").mkString("[", ",", "]")
+    val regressions = results.toSeq.flatMap { case (k, cur) =>
+      baseline.get(k).collect {
+        case base if cur > 1.5 * base && cur - base > 0.2 =>
+          (k, cur, base, best.queryLoad.getOrElse(k, 0.0))
+      }
+    }.sortBy { case (_, cur, base, _) => base - cur }
+    // Each flag carries the 1-min load at its key's completion, so a flag
+    // raised while a co-tenant ran annotates itself.
+    val regJson = regressions.take(12)
+      .map { case (k, cur, base, load) =>
+        s"""\"$k\":[${r3(cur)},${r3(base)},${r3(load)}]""" }
+      .mkString("{", ",", "}")
+    def arr(v: Seq[Double]) = v.map(x => f"$x%.2f").mkString("[", ",", "]")
+    val loadJson =
+      s"""{"start":${arr(best.loadStart)},"end":${arr(best.loadEnd)},""" +
+        f""""steal_pct":${best.stealPct}%.2f,"cotenant_cores":${best.cotenantCores}%.3f,""" +
+        s""""waited_sec":${attempts.map(_.waitedSec).sum},"deferred":${best.deferred},""" +
+        s""""attempts":${attempts.length},"load_ok":${best.loadOk}}"""
+    val confJson =
+      s"""{"cpus":${conf.cpus},"shuffle_partitions":${conf.shufflePartitions},""" +
+        s""""runs":${conf.runs},"warmup":${conf.warmup},"partial":${conf.partial}}"""
+    val line =
+      s"""{"metric":"total_all_${results.size}_queries","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"regressions":$regJson,"load":$loadJson,"conf":$confJson,"sf":"${conf.sfDir}"}"""
+    val files = Seq(
+      "BENCH_LOCAL.json" -> (results.map { case (k, v) => k -> r3(v) }.toSeq ++
+        best.failed.map(k => k -> "null")),
+      // Every raw run per key, for drift-vs-noise analysis; a failed run
+      // is null (NaN is not JSON).
+      "BENCH_RUNS.json" -> best.runsRaw.map { case (k, ts) =>
+        k -> ts.map(t => if (t.isNaN) "null" else r3(t)).mkString("[", ",", "]")
+      },
+      // Logical MB (rchar: every file read incl. page-cache hits),
+      // physical MB (read_bytes: storage traffic, ~0 on a warmed corpus)
+      // and scan records per key.
+      "BENCH_IO.json" -> best.ioProfile.map { case (k, (rc, db, n)) =>
+        k -> (f"""{"logical_mb":${rc / 1048576.0}%.1f,""" +
+          f""""disk_mb":${db / 1048576.0}%.1f,"scan_rows":$n}""")
+      },
+      // Per-key 1-min load at completion plus the battery-level block under
+      // the reserved "_battery" key.
+      "BENCH_LOAD.json" -> (best.queryLoad.toSeq.map { case (k, v) => k -> f"$v%.2f" } :+
+        ("_battery" -> loadJson)))
+    Report(line, files, regressions)
+  }
 
   def main(args: Array[String]): Unit = {
     // SPARK_GRAFT_WAIT_QUIET=<minutes> (r11 verdict ask #7): poll for a
@@ -167,60 +242,7 @@ object Bench {
       waited
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle-partition count, sized to the CORPUS for scale sweeps (the
-    // canonical sf0.1 battery leaves it = cpus). At sf100 a pinned 28
-    // leaves ~21M rows per sort partition — multi-pass external sorts that
-    // measure the spill regime, not the operator (q_tpch_q3's d3 went
-    // 45×→measured-linear once partitions scaled with data). AQE still
-    // coalesces small shuffles down, so oversizing is cheap; a real
-    // cluster sizes this to executors × cores, exactly this knob.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // Non-numeric override falls back to the default rather than feeding
-    // garbage to both the session conf and the JSON artifacts (ADVICE r11).
-    val ohaFallback = sys.env.get("SPARK_GRAFT_OHA_FALLBACK")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(128)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ObjectHashAggregate fallback stays at the 128-key default — the
-      // r10 1M raise regressed unbounded-buffer aggregations ~2× and
-      // bought the bounded topk_pairs family nothing (A/B in Engine.scala).
-      // Env-overridable for A/B profiling of the threshold itself.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        ohaFallback.toString)
-      // (r14 A/B note: canChangeCachedPlanOutputPartitioning=true — AQE
-      // sizing CACHED plans' partitions, which collapses the capped-dedup
-      // kernel's 11 consecutive 32-task stages over 32-row masks/sizes
-      // caches to 1-task stages — was measured and REJECTED as neutral:
-      // strict stash A/B 5.57 s vs 5.58 s on the two capped keys; 32 tiny
-      // tasks launch in parallel and cost nothing at local[32]. Kept at
-      // the Spark default to avoid an unearned harness-conf change.)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The per-query cleanup below unpersists locally-checkpointed RDDs
-    // (iterative operators leave them behind). That is safe here — every
-    // timed run rebuilds its plan from scratch, so a truncated lineage is
-    // never recomputed — but each unpersist logs a scary WARN that floods
-    // the driver's finite log tail. Silence that one logger.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
-    // WindowExec's "No Partition Defined" WARN fires per evaluation on the
-    // allowlisted bounded-domain windows (calendar-day / schema-bounded
-    // relations) and floods the log tail. It cannot be silenced in the
-    // plan: Spark 4's EliminateWindowPartitions strips any constant
-    // partition key back to an empty spec. The real control for
-    // single-reducer windows is PlanSpec's fleet bounded-window invariant
-    // (fails the suite on any NEW unaudited empty-spec window — stronger
-    // than a log line), so the logger goes quiet here.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Engine.session("graft-bench")
     // SPARK_GRAFT_STREAM_METRICS=1 (scale sweeps only): print one stderr
     // line per micro-batch with input rows, watermark, and per-operator
     // state rows — the evidence that streaming state is O(keys), not
@@ -310,6 +332,10 @@ object Bench {
               false
           }
         val sec = (System.nanoTime() - t0) / 1e9
+        // Close the I/O capture before the cleanup below, so the reaper's
+        // deletes are never charged to this key's BENCH_IO.json row.
+        val recs = ioListener.settled()
+        val (rchar1, disk1) = procIo()
         // Query isolation: a query that leaves cached/checkpointed blocks
         // behind (iterative loops) must not bleed memory pressure into the
         // next measurement. Outside the timed region. DataFrame-level caches
@@ -319,16 +345,10 @@ object Bench {
         // plan across runs, so a truncated lineage is never re-executed.
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        // Reap the previous run's renamed scratch tree NOW, in the untimed
-        // window (ADVICE r13: the r13 async reaper thread deleted the
-        // previous run's checkpoint+sink tree CONCURRENTLY with the next
-        // timed run of the same query, smearing janitorial I/O into exactly
-        // the heavy streaming keys being certified). Synchronous here —
-        // outside the timed region, deletes never overlap a measurement.
+        // Reap the previous run's renamed scratch tree synchronously, in
+        // the untimed window: deletes never overlap a measurement.
         Scratch.reapTombstones()
         if (ok) {
-          val recs = ioListener.settled()
-          val (rchar1, disk1) = procIo()
           ioProfile(name) = (rchar1 - rchar0, disk1 - disk0, recs)
           sec
         } else Double.NaN
@@ -413,18 +433,37 @@ object Bench {
         waitedSecIn, deferredIn)
     }
 
-    // Battery-level auto-retry (r12 verdict ask #1, the oldest open item:
-    // three rounds of load_ok=false artifacts). On a gate failure the
-    // canonical full battery retries — outwaiting the co-tenant between
-    // attempts — and the BEST attempt's artifact ships (load_ok first,
-    // then lowest cotenant_cores, then lowest total). Partial runs and
-    // off-sf0.1 sweeps never retry: the gate only certifies the canonical
-    // battery, and sweeps manage their own budget.
+    // Battery-level auto-retry: on a gate failure the canonical full
+    // battery retries, outwaiting the co-tenant between attempts, and the
+    // best attempt's artifact ships. Partial runs and off-sf0.1 sweeps
+    // never retry: the gate only certifies the canonical battery.
     val retryable = sfDir.endsWith("sf0.1") && only.isEmpty && skip.isEmpty
     val maxAttempts =
       if (!retryable) 1
       else sys.env.get("SPARK_GRAFT_ATTEMPTS")
-        .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(3)
+        .flatMap(v => scala.util.Try(v.toInt).toOption).fold(3)(math.max(1, _))
+    val conf = RunConf(sfDir, spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt, nRuns, warmup,
+      partial = only.nonEmpty || skip.nonEmpty)
+    // The committed per-key baseline for the regression gate — only
+    // meaningful for the canonical sf0.1 battery (a sweep at another SF
+    // would flag everything). Relative paths resolve against the working
+    // directory, which is the checkout's root under `sbt run`.
+    val baselinePath = java.nio.file.Paths.get(sys.env.getOrElse(
+      "SPARK_GRAFT_BASELINE", "BENCH_BASELINE.json"))
+    val baseline: Map[String, Double] =
+      if (!sfDir.endsWith("sf0.1") || !java.nio.file.Files.exists(baselinePath)) Map.empty
+      else {
+        import scala.jdk.CollectionConverters._
+        new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(java.nio.file.Files.readString(baselinePath))
+          .fields().asScala.filter(_.getValue.isNumber)
+          .map(e => e.getKey -> e.getValue.asDouble()).toMap
+      }
+    // Off-battery experiments (scale spot-runs at synthetic SFs) redirect
+    // their artifacts so they never merge foreign-scale timings into the
+    // canonical sf0.1 battery files.
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT", ".")
     val attempts = scala.collection.mutable.ArrayBuffer[Battery]()
     var attempt = 0
     while (attempt < maxAttempts && !attempts.exists(_.loadOk)) {
@@ -443,121 +482,28 @@ object Bench {
           f"[bench] RETRY attempt $attempt/$maxAttempts after gate failure " +
             f"(waited ${waited}s, load now ${loadAvg().head}%.2f)")
       attempts += attemptBattery(waited, deferred)
-    }
-    val best = attempts.minBy(b =>
-      (if (b.loadOk) 0 else 1, b.cotenantCores, b.results.map(_._2).sum))
-    val results = scala.collection.immutable.ListMap(best.results: _*)
-    val runs = best.runsRaw
-    val failed = best.failed
-    val ioProfile = best.ioProfile
-    val queryLoad = best.queryLoad
-    val waitedSec = attempts.map(_.waitedSec).sum
-    val deferred = best.deferred
-    def r3(v: Double): String = f"$v%.3f"
-    val qs = headline.flatMap(k => results.get(k).map(v => s"\"$k\":${r3(v)}"))
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val failedJson = failed.map(k => s"\"$k\"").mkString("[", ",", "]")
-    // Per-query regression gate (round-9): compare this battery against
-    // the committed last-round baseline so a slowdown surfaces IN-ROUND
-    // (in this JSON line, which the driver archives as BENCH_r{N}.json)
-    // instead of at judge time. Only meaningful for the canonical sf0.1
-    // battery — sweep runs at other SFs would flag everything. A query
-    // regresses at >1.5× baseline AND >0.2 s absolute (the floor keeps
-    // millisecond-scale noise on tiny queries out of the gate).
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE",
-      "/root/repo/BENCH_BASELINE.json")
-    val regressions: Seq[(String, Double, Double)] =
-      if (!sfDir.endsWith("sf0.1") ||
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(baselinePath))) Seq.empty
-      else {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val tree = mapper.readTree(
-          java.nio.file.Files.readString(java.nio.file.Paths.get(baselinePath)))
-        results.toSeq.flatMap { case (k, cur) =>
-          Option(tree.get(k)).filter(_.isNumber).map(_.asDouble()) match {
-            case Some(base) if cur > 1.5 * base && cur - base > 0.2 =>
-              Some((k, cur, base))
-            case _ => None
-          }
-        }.sortBy { case (_, cur, base) => base - cur }
+      // Report after every completed attempt: the artifacts and the last
+      // stdout line always hold the best attempt so far, so a run killed
+      // during a retry still leaves a parseable result behind.
+      val soFar = render(attempts.toSeq, conf, baseline)
+      soFar.files.foreach { case (name, updates) =>
+        writeBenchFile(s"$outDir/$name", updates, conf.partial)
       }
-    // Every regression carries the 1-min load at ITS completion — a flag
-    // raised while a co-tenant was running annotates itself (ask #1: the
-    // gate MARKS load-suspect flags rather than refusing, so a driver
-    // round never loses its bench to ambient noise; triage stays the
-    // isolated SPARK_GRAFT_ONLY re-run protocol in BENCH_NOTES).
-    regressions.foreach { case (k, cur, base) =>
+      println(soFar.line)
+    }
+    val report = render(attempts.toSeq, conf, baseline)
+    report.regressions.foreach { case (k, cur, base, load) =>
       System.err.println(
         f"[bench] REGRESSION $k: $cur%.3f s vs baseline $base%.3f s " +
-          f"(load1m at query ${queryLoad.getOrElse(k, 0.0)}%.2f)") }
-    val regJson = regressions.take(12)
-      .map { case (k, cur, base) =>
-        s"""\"$k\":[${r3(cur)},${r3(base)},${r3(queryLoad.getOrElse(k, 0.0))}]""" }
-      .mkString("{", ",", "}")
-    def arr(v: Seq[Double]) = v.map(x => f"$x%.2f").mkString("[", ",", "]")
-    val loadJson =
-      s"""{"start":${arr(best.loadStart)},"end":${arr(best.loadEnd)},""" +
-        f""""steal_pct":${best.stealPct}%.2f,"cotenant_cores":${best.cotenantCores}%.3f,""" +
-        s""""waited_sec":$waitedSec,"deferred":$deferred,""" +
-        s""""attempts":${attempts.length},"load_ok":${best.loadOk}}"""
-    // The resolved engine conf that shaped the timings (ADVICE r10: a
-    // battery run with SPARK_GRAFT_OHA_FALLBACK set was silently
-    // incomparable to the baseline) — every battery is self-describing.
-    // The fallback value is parsed to an Int (ADVICE r11: a non-numeric
-    // env value interpolated raw would make the artifact invalid JSON;
-    // the session config above resolves the same way, so what's recorded
-    // is what actually ran).
-    val confJson =
-      s"""{"cpus":$cpus,"shuffle_partitions":$shufflePartitions,""" +
-        s""""oha_fallback":$ohaFallback,""" +
-        s""""runs":$nRuns,"warmup":$warmup,"partial":${only.nonEmpty || skip.nonEmpty}}"""
-    val line =
-      s"""{"metric":"total_all_${results.size}_queries","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"regressions":$regJson,"load":$loadJson,"conf":$confJson,"sf":"$sfDir"}"""
-    // Full per-query detail goes to a file, not stdout (tail budget). A
-    // filtered run (ONLY/SKIP) merges into the existing battery file
-    // instead of truncating it.
-    val partial = only.nonEmpty || skip.nonEmpty
-    // Off-battery experiments (scale spot-runs at synthetic SFs) redirect
-    // their artifacts so they can never merge foreign-scale timings into
-    // the canonical sf0.1 battery files.
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT", "/root/repo")
-    // A failed query writes an explicit null (never silently keeps its
-    // stale timing from a previous battery when this is a partial run).
-    writeBenchFile(s"$outDir/BENCH_LOCAL.json",
-      results.map { case (k, v) => k -> r3(v) }.toSeq ++
-        failed.toSeq.map(k => k -> "null"), partial)
-    // All three raw runs per query, for drift-vs-noise analysis. A failed
-    // run serializes as null (NaN is not JSON).
-    writeBenchFile(s"$outDir/BENCH_RUNS.json",
-      runs.map { case (k, ts) =>
-        k -> ts.map(t => if (t.isNaN) "null" else r3(t)).mkString("[", ",", "]")
-      }.toSeq, partial)
-    // IO profile per query: logical MB (rchar — all file reads incl.
-    // cache hits), physical MB (read_bytes — actual storage traffic,
-    // ~0 on a warmed corpus), scan records. The decomposition the scale
-    // sweeps join against wall time per decade.
-    writeBenchFile(s"$outDir/BENCH_IO.json",
-      ioProfile.toSeq.map { case (k, (rc, db, n)) =>
-        k -> (f"""{"logical_mb":${rc / 1048576.0}%.1f,""" +
-          f""""disk_mb":${db / 1048576.0}%.1f,"scan_rows":$n}""")
-      }, partial)
-    // Per-query 1-min load at completion, plus the battery-level load
-    // block under the reserved "_battery" key (merge-safe like the rest).
-    writeBenchFile(s"$outDir/BENCH_LOAD.json",
-      queryLoad.toSeq.map { case (k, v) => k -> f"$v%.2f" } :+
-        ("_battery" -> loadJson), partial)
-    // Quiesce-then-print (r13 verdict ask #2): the r13 8-core sweep's JSON
-    // line was buried under a post-shutdown RpcEnvStoppedException stack
-    // trace from the state-store MAINTENANCE pool (streaming keys leave
-    // providers registered; their async maintenance raced spark.stop()),
-    // pushing the line out of the driver's finite tail-capture window.
-    // Stop the maintenance pool FIRST, then the session, and only then
-    // print the metric line — the contract is that the one JSON line is
-    // the LAST parseable stdout line of the run.
+          f"(load1m at query $load%.2f)") }
+    // Quiesce-then-print: streaming keys leave state-store providers
+    // registered, and their async maintenance pool racing spark.stop()
+    // prints a stack trace. Stop that pool FIRST, then the session, and
+    // only then print the metric line again — the contract is that the
+    // JSON line is the LAST parseable stdout line of the run.
     scala.util.Try(
       org.apache.spark.sql.execution.streaming.state.StateStore.stop())
     scala.util.Try(spark.stop())
-    println(line)
+    println(report.line)
   }
 }

@@ -65,30 +65,46 @@ object Engine {
       stateDelay = kv.getOrElse("processing.state_delay", "30 days"))
   }
 
-  def session(
-      appName: String = "graft",
-      cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** `local[N]` width: SPARK_GRAFT_CPUS, else every core of the host. */
+  private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The one session builder of the engine: every main, tool and the test
+    * suite go through it, so the correctness dump, the bench and the tests
+    * run under the same resolved config. Shuffle width is
+    * SPARK_GRAFT_SHUFFLE_PARTITIONS, else `cores` (scale sweeps size it to
+    * the corpus; AQE coalesces small shuffles back down). */
+  def session(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
+    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .map(_.toInt).getOrElse(cores)
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // events.ts is parquet TIMESTAMP(NANOS): Spark 4 rejects it unless
+      // read as long (Tables.apply converts it to a µs timestamp).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ObjectHashAggregate fallback threshold stays at Spark's 128-key
-      // default. The r10 first cut raised it to 1M so the bounded
-      // topk_pairs buffers never hit the sort fallback — measured A/B at
-      // sf0.1 showed that REGRESSED every unbounded-buffer aggregation
-      // (percentile/collect/array-agg family) ~2× via hash-map memory
-      // pressure while buying the topk family nothing (128 was equal or
-      // faster on all 8 k-NN keys: 10.2 s vs 12.4 s). The sort fallback
-      // only sorts what overflows the 128-entry map, and topk partials
-      // are tiny rows — the defensive raise was a pure loss.
+      // ObjectHashAggregate's sort fallback threshold stays at Spark's
+      // 128-key default: raising it regressed the unbounded-buffer
+      // aggregations ~2x and bought the bounded topk_pairs buffers nothing
+      // (A/B in BENCH_NOTES.md).
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Two loggers that would flood a finite log tail: MapPartitionsRDD
+    // warns on every unpersist of a superseded localCheckpoint generation
+    // (safe: a truncated lineage is never re-read), and WindowExec warns
+    // "No Partition Defined" per evaluation of the allowlisted
+    // bounded-domain windows, whose real guard is PlanSpec's fleet
+    // bounded-window invariant.
+    Seq("org.apache.spark.rdd.MapPartitionsRDD",
+        "org.apache.spark.sql.execution.window.WindowExec").foreach(
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        _, org.apache.logging.log4j.Level.ERROR))
     spark
   }
 }

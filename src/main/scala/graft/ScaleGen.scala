@@ -60,15 +60,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, copiesStr) = args.take(3)
     val mode = args.lift(3).getOrElse("suffix")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-scalegen")
     try generate(spark, src, dst, copiesStr.toInt, mode)
     finally spark.stop()
   }

@@ -185,27 +185,19 @@ private[graft] object Scratch {
 
   private val CkptMgrKey = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** Scope the local-FS direct-write checkpoint file manager
+  /** Scope the direct-write checkpoint file manager
     * ([[graft.streaming.LocalDirectCheckpointFileManager]] — rationale and
-    * measurement there) over a streaming start+awaitTermination block.
-    * Parameterised for non-local deployments (guide §6 / prompt rule on
-    * scale-dependent settings): SPARK_GRAFT_CKPT_MANAGER names an
-    * alternative manager class, and `default` keeps Spark's stock
-    * rename-based manager — the right choice whenever checkpoints live on
-    * HDFS/S3 where multi-writer rename atomicity is load-bearing. The
-    * bench's checkpoints are per-run local temp dirs, so the direct-write
-    * manager is the local default. */
+    * measurement there) over a streaming start+awaitTermination block. The
+    * manager itself falls back to Spark's stock rename protocol for any
+    * checkpoint path whose scheme is not `file`, so an HDFS/S3 checkpoint
+    * keeps its multi-writer rename atomicity. */
   def withLocalCheckpointIo[T](s: SparkSession)(body: => T): T = {
-    val choice = sys.env.getOrElse("SPARK_GRAFT_CKPT_MANAGER",
+    val prev = s.conf.getOption(CkptMgrKey)
+    s.conf.set(CkptMgrKey,
       classOf[graft.streaming.LocalDirectCheckpointFileManager].getName)
-    if (choice == "default") body
-    else {
-      val prev = s.conf.getOption(CkptMgrKey)
-      s.conf.set(CkptMgrKey, choice)
-      try body finally prev match {
-        case Some(p) => s.conf.set(CkptMgrKey, p)
-        case None => s.conf.unset(CkptMgrKey)
-      }
+    try body finally prev match {
+      case Some(p) => s.conf.set(CkptMgrKey, p)
+      case None => s.conf.unset(CkptMgrKey)
     }
   }
 

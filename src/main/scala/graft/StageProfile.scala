@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage decomposition of one registered query — the measurement the
   * decade-curve root-cause protocol needs (r12 verdict ask #4: "attach the
@@ -24,17 +23,7 @@ object StageProfile {
     val sfDir = args(0)
     val query = args(1)
     val runs = args.lift(2).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "28")
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-stageprofile")
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {

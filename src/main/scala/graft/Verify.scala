@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,34 +8,7 @@ object Verify {
     // Optional extra args: only dump the named queries (local iteration;
     // the driver always calls with exactly two args = full dump).
     val only: Set[String] = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.ts is parquet TIMESTAMP(NANOS): Spark 4 rejects it unless
-      // read as long (Tables.apply converts to a µs timestamp).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ObjectHashAggregate fallback stays at the 128-key default — the
-      // r10 1M raise regressed unbounded-buffer aggregations ~2× and
-      // bought the bounded topk_pairs family nothing (A/B in Engine.scala).
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The iterative operators eagerly unpersist superseded localCheckpoint
-    // generations (safe: a truncated lineage is never re-read); each
-    // unpersist logs a scary per-RDD WARN that would flood the driver's
-    // finite log tail — same silencing as Bench.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
-    // Bounded-domain windows WARN per evaluation ("No Partition Defined");
-    // the fleet bounded-window invariant in PlanSpec is the actual guard —
-    // see the identical silencing + rationale in Bench.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Engine.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

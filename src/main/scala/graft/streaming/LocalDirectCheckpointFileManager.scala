@@ -32,11 +32,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * run restarts from a fresh scratch dir either way).
   *
   * Scope: selected per streaming block by [[graft.Scratch.withStreamShuffle]]
-  * via `spark.sql.streaming.checkpointFileManagerClass`, overridable with
-  * SPARK_GRAFT_CKPT_MANAGER (`default` = Spark's stock manager). A
-  * production deployment checkpointing to HDFS/S3 keeps the default
-  * rename-based manager — multi-writer atomicity is load-bearing there;
-  * this class is the local-mode operating point, not a global swap.
+  * via `spark.sql.streaming.checkpointFileManagerClass`. The direct write
+  * applies only to paths whose scheme is `file`; any other scheme (HDFS,
+  * S3, ...) takes the stock temp-file + rename protocol, because
+  * multi-writer atomicity is load-bearing there. So a checkpoint
+  * configured on a remote store is never written through a local path.
   */
 class LocalDirectCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends FileSystemBasedCheckpointFileManager(path, hadoopConf) {
@@ -44,7 +44,17 @@ class LocalDirectCheckpointFileManager(path: Path, hadoopConf: Configuration)
   private def toNio(p: Path): java.nio.file.Path =
     java.nio.file.Paths.get(p.toUri.getPath)
 
+  /** True when `p` lives on the local filesystem (an unqualified path
+    * resolves against this manager's filesystem). */
+  private def onFileScheme(p: Path): Boolean =
+    Option(p.toUri.getScheme).getOrElse(fs.getUri.getScheme) == "file"
+
   override def createAtomic(
+      p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream =
+    if (!onFileScheme(p)) super.createAtomic(p, overwriteIfPossible)
+    else createDirect(p, overwriteIfPossible)
+
+  private def createDirect(
       p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream = {
     val nio = toNio(p)
     Option(nio.getParent).foreach(java.nio.file.Files.createDirectories(_))

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Config parsing (the reference's whole declared surface — reference
-  * config/config_dev.yaml:1-13). */
+  * config/config_dev.yaml:1-13) and the one session builder's contract. */
 class EngineSpec extends AnyFunSuite {
 
   test("parses the reference's config shape") {
@@ -39,6 +39,32 @@ class EngineSpec extends AnyFunSuite {
         |  top_n: 7  # trailing comment
         |""".stripMargin)
     assert(cfg.topN == 7)
+  }
+
+  test("the shared test session resolves the engine's session contract") {
+    // Verify's parquet bytes depend on these, and the suite runs under the
+    // same Engine.session every main uses.
+    val c = TestSpark.spark.conf
+    assert(c.get("spark.sql.session.timeZone") == "UTC")
+    assert(c.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(c.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
+    assert(c.get("spark.sql.shuffle.partitions") == "4")
+    assert(c.get("spark.sql.adaptive.enabled") == "true")
+    assert(TestSpark.spark.sparkContext.master == "local[4]")
+  }
+
+  test("Engine.session is the only SparkSession builder under src/main") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val files = java.nio.file.Files.walk(root)
+    val builders = try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+      .map(p => root.relativize(p).toString).toList.sorted
+    finally files.close()
+    assert(builders == List("scala/graft/Engine.scala"),
+      s"session builders outside Engine.session: $builders")
   }
 
   test("GraftExtensions injects the function library at session build time") {

@@ -81,6 +81,27 @@ class ScratchInfraSpec extends AnyFunSuite {
       .map(_.getPath.getName).toSet == Set("0"))
   }
 
+  test("LocalDirectCheckpointFileManager: a non-file scheme takes the stock rename path") {
+    // A file-backed FileSystem under its own scheme: the bytes land on the
+    // local disk, but the path says "not file", as an hdfs:// or s3a://
+    // checkpoint would.
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.graftspec.impl", classOf[ScratchInfraSpec.SchemeLocalFs].getName)
+    conf.setBoolean("fs.graftspec.impl.disable.cache", true)
+    val root = java.nio.file.Files.createTempDirectory("graft_ckptmgr_scheme_")
+    val base = new org.apache.hadoop.fs.Path(s"graftspec://${root.toUri.getPath}")
+    val fm = new streaming.LocalDirectCheckpointFileManager(base, conf)
+    val f = new org.apache.hadoop.fs.Path(base, "commits/0")
+    val out = fm.createAtomic(f, overwriteIfPossible = false)
+    out.write("v1".getBytes("UTF-8"))
+    // The stock protocol writes a temp file and renames it into place on
+    // close; a direct write would already have created the target.
+    assert(!java.nio.file.Files.exists(root.resolve("commits/0")),
+      "createAtomic wrote the target directly on a non-file scheme")
+    out.close()
+    assert(java.nio.file.Files.readString(root.resolve("commits/0")) == "v1")
+  }
+
   test("streaming query through the direct manager equals the default manager") {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
@@ -114,5 +135,13 @@ class ScratchInfraSpec extends AnyFunSuite {
     assert(direct.sameElements(stock),
       "direct checkpoint manager changed the query result")
     Scratch.reapTombstones()
+  }
+}
+
+object ScratchInfraSpec {
+  /** The local filesystem registered under the `graftspec` scheme. */
+  class SchemeLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("graftspec:///")
+    override def getScheme: String = "graftspec"
   }
 }

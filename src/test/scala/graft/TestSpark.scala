@@ -3,24 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (suite-level sessions
-  * would pay ~10s startup each). */
+  * would pay ~10s startup each). Built by `Engine.session` like every main;
+  * `cores` is pinned because the suite's expectations assume local[4]
+  * whatever SPARK_GRAFT_CPUS the environment exports. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ObjectHashAggregate fallback stays at the 128-key default — the
-      // r10 1M raise regressed unbounded-buffer aggregations ~2× and
-      // bought the bounded topk_pairs family nothing (A/B in Engine.scala).
-      .config("spark.sql.shuffle.spill.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Engine.session("graft-test", cores = 4)
   val sf: String = "/root/testdata/sf0.001"
 }
