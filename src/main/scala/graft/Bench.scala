@@ -336,15 +336,10 @@ object Bench {
         // deletes are never charged to this key's BENCH_IO.json row.
         val recs = ioListener.settled()
         val (rchar1, disk1) = procIo()
-        // Query isolation: a query that leaves cached/checkpointed blocks
-        // behind (iterative loops) must not bleed memory pressure into the
-        // next measurement. Outside the timed region. DataFrame-level caches
-        // drop through the CacheManager (keeps its registry consistent);
-        // local checkpoints are raw RDD blocks it doesn't track, so those
-        // are unpersisted directly — safe because timeOnce never retains a
-        // plan across runs, so a truncated lineage is never re-executed.
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        // Query isolation, outside the timed region: the query's cached and
+        // checkpointed blocks must not bleed memory pressure into the next
+        // measurement, and timeOnce never re-reads a plan across runs.
+        Tables.releaseAll(spark)
         // Reap the previous run's renamed scratch tree synchronously, in
         // the untimed window: deletes never overlap a measurement.
         Scratch.reapTombstones()

@@ -18,6 +18,7 @@ object Explain {
         try sb.append(fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
         catch { case e: Throwable => sb.append(s"explain failed: ${e.getMessage}\n") }
+        finally Tables.releaseAll(spark)
       }
     }
     print(sb)

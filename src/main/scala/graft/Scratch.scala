@@ -15,11 +15,10 @@ import org.apache.spark.sql.types._
   *     written once and shared by every real-engine streaming query — the
   *     corpus write leaves the timed region after the first run instead of
   *     being paid per query per run (r9 verdict ask #6).
-  *   - [[fresh]]: per-(query, run) scratch. Keyed like
-  *     Tables.runScopedCheckpoint: invoking it again under the same key
-  *     deletes the PREVIOUS run's dir first (safe — that run's read-back
-  *     has been consumed by then), so repeated bench runs hold at most one
-  *     live scratch per key.
+  *   - [[fresh]]: per-(query, run) scratch, keyed by query: invoking it
+  *     again under the same key deletes the PREVIOUS run's dir first
+  *     (safe — that run's read-back has been consumed by then), so
+  *     repeated bench runs hold at most one live scratch per key.
   * Everything registered is also deleted on JVM exit.
   */
 private[graft] object Scratch {

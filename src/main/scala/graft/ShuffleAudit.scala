@@ -65,14 +65,12 @@ object ShuffleAudit {
         try {
           val n = fn(spark, sfDir).count()
           val (sw1, in1) = quiesce()
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
           Some(name -> (sw1 - sw0, in1 - in0, n))
         } catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[shuffleaudit] FAILED $name: ${e.getMessage}")
             None
-        }
+        } finally Tables.releaseAll(spark)
       }
     val updates = rows.map { case (k, (sw, in, n)) =>
       k -> f"""{"shuffle_write_mb":${sw / 1048576.0}%.2f,"input_mb":${in / 1048576.0}%.2f,"out_rows":$n}"""

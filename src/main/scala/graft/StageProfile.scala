@@ -43,12 +43,14 @@ object StageProfile {
     })
     val fn = SparkEntry.queries(query)
     fn(spark, sfDir).count() // warmup (JIT + codegen + footers)
+    Tables.releaseAll(spark)
     var wall = 0.0
     (1 to runs).foreach { _ =>
       rows.clear()
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       wall = (System.nanoTime() - t0) / 1e9
+      Tables.releaseAll(spark)
       println(f"[stageprofile] $query rows=$n wall=$wall%.3f s")
     }
     Thread.sleep(500) // listener bus drain

@@ -62,61 +62,39 @@ object Tables {
       registered.put(spark, dir)
     }
 
-  /** localCheckpoint with run-scoped block reclamation.
-    *
-    * A checkpointed frame's blocks live until the ContextCleaner GC-detects
-    * the RDD — inside a bench loop that runs the same query repeatedly, the
-    * superseded generations pile up and bleed memory pressure into later
-    * runs (the round-5 q_graph_triangles signature: runs degrading
-    * 1.0→4.6 s). This keeps ONE live checkpoint per key: invoking it again
-    * under the same key eagerly unpersists the previous run's blocks first
-    * (safe — the previous run's result has been consumed by then; its
-    * lineage is truncated, so it must not be re-read either way).
-    *
-    * Dataset.unpersist would be a NO-OP here: it only clears CacheManager
-    * (InMemoryRelation) entries, while localCheckpoint persists the
-    * internal RDD directly (ADVICE r6). So the persisted RDD ids are
-    * captured by diffing sparkContext.getPersistentRDDs around the
-    * checkpoint call and those RDDs are unpersisted directly. The id set
-    * is only meaningful within its own SparkContext (ids restart at 0 per
-    * context — test suites churn sessions), hence the `eq` guard; blocks
-    * of a stopped context died with it.
+  /** Checkpoint lifetime rule. [[checkpoint]] materializes a frame (a
+    * local checkpoint: lineage truncated, blocks held by the block
+    * manager) and never frees it. Exactly two things free checkpoint
+    * blocks: a runner calls [[releaseAll]] once it has consumed a query's
+    * result, and an iterative loop frees each superseded generation
+    * through [[Generations]]. So a frame a query returned stays readable
+    * until its runner is done with it, however many other queries share
+    * the relation behind it.
     */
-  /** localCheckpoint plus a release handle that ACTUALLY frees the
-    * checkpoint's blocks (the building block for the iterative operators'
-    * per-generation reclamation — connected components, TextRank). Calling
-    * the handle after the frame's last consumer is safe; calling it and
-    * then re-reading the frame is not (the lineage is truncated).
-    */
-  def checkpointEager(df: DataFrame): (DataFrame, () => Unit) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val chk = df.localCheckpoint()
-    val ids = sc.getPersistentRDDs.keySet.diff(before).toSet
-    val release = () => {
-      scala.util.Try {
-        val live = sc.getPersistentRDDs
-        ids.foreach(id => live.get(id).foreach(_.unpersist(false)))
-      }
-      ()
-    }
-    (chk, release)
+  def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  /** Frees every cached frame and persistent RDD of the session. Dataset
+    * unpersist alone would not reach local checkpoints: they persist
+    * their RDD directly, outside the CacheManager. */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
-  private final case class Chk(
-      sc: org.apache.spark.SparkContext, release: () => Unit)
-  private val checkpoints =
-    java.util.Collections.synchronizedMap(
-      new java.util.HashMap[String, Chk]())
-  def runScopedCheckpoint(key: String, df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val prev = checkpoints.get(key)
-    // Only release within the owning context (RDD ids restart per context;
-    // a stopped context's blocks died with it — checkpointEager's Try
-    // absorbs that case anyway, but don't touch a DIFFERENT live context).
-    if (prev != null && (prev.sc eq sc)) prev.release()
-    val (chk, release) = checkpointEager(df)
-    checkpoints.put(key, Chk(sc, release))
-    chk
+  /** Checkpoints of one iterative loop: `next(df)` checkpoints `df` and
+    * frees the previous generation, whose blocks the new, materialized
+    * generation no longer reads. The last generation stays live for the
+    * caller's plan. */
+  final class Generations {
+    private var live = Set.empty[Int]
+    def next(df: DataFrame): DataFrame = {
+      val sc = df.sparkSession.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val chk = checkpoint(df)
+      val persistent = sc.getPersistentRDDs
+      live.foreach(id => persistent.get(id).foreach(_.unpersist(false)))
+      live = persistent.keySet.diff(before).toSet
+      chk
+    }
   }
 }

@@ -783,7 +783,7 @@ object Curation {
     "q_source_novelty" -> Q(
       fn = (s, d) => {
         graft.functions.VectorFunctions.register(s)
-        val sh = graft.Tables.runScopedCheckpoint("q_source_novelty.sh",
+        val sh = Tables.checkpoint(
           Tables(s, d, "documents")
             .select(col("source"),
               explode(graft.functions.VectorFunctions.shingleSet(
@@ -841,7 +841,7 @@ object Curation {
     "q_dsir" -> Q(
       fn = (s, d) => {
         graft.functions.VectorFunctions.register(s)
-        val tfb = Tables.runScopedCheckpoint("q_dsir.tfb",
+        val tfb = Tables.checkpoint(
           docs(s, d)
             .select(col("doc_id"), col("lang"),
               explode(toks).as("token"))

@@ -615,7 +615,7 @@ object Dedup {
             VectorFunctions.md5Lower(
               concat_ws(" ", slice(col("t"), col("k") * 8 + 1, lit(16))))
               .as("h"))
-        val bySrc = graft.Tables.runScopedCheckpoint("q_dedup_span_rate.by_src",
+        val bySrc = Tables.checkpoint(
           spans.groupBy("h", "source")
             .agg(count(lit(1)).as("cnt"),
               min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")))
@@ -725,8 +725,7 @@ object Dedup {
     // onto the doc spine — the join is doc-keyed, output-sized.
     "q_dedup_coverage" -> Q(
       fn = (s, d) => {
-        val spans = substrSpans(docs(s, d), L = 8,
-          ckKey = "q_dedup_coverage.wins")
+        val spans = substrSpans(docs(s, d), L = 8)
         val base = docs(s, d)
           .select(col("doc_id"),
             size(split(col("text"), " ")).cast(LongType).as("n_tokens"))
@@ -791,8 +790,7 @@ object Dedup {
     // one output-sized pass, no extra corpus exchange beyond the join.
     "q_dedup_substr_apply" -> Q(
       fn = (s, d) => {
-        val spans = substrSpans(docs(s, d), L = 8,
-            ckKey = "q_dedup_substr_apply.wins")
+        val spans = substrSpans(docs(s, d), L = 8)
           .groupBy("doc_id")
           .agg(collect_list(struct(col("start_pos"), col("end_pos"))).as("sp"))
         docs(s, d)
@@ -874,7 +872,7 @@ object Dedup {
     "q_dedup_minhash_audit" -> Q(
       fn = (s, d) => {
         graft.functions.VectorFunctions.register(s)
-        val sh = graft.Tables.runScopedCheckpoint("q_mha_sh", shingles(s, d))
+        val sh = Tables.checkpoint(shingles(s, d))
         val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
         val pairs = sh.select(col("doc_id").as("da"), col("s"))
           .join(sh.select(col("doc_id").as("db"), col("s")), Seq("s"))
@@ -998,7 +996,7 @@ object Dedup {
           .groupBy("vec_id")
           .agg(min(struct(col("d2"), col("cid"))).as("m"))
           .select(col("vec_id"), col("m.cid").as("cid"))
-        val alla = Tables.runScopedCheckpoint("q_dedup_semantic.assigned",
+        val alla = Tables.checkpoint(
           vq.join(assigned, Seq("vec_id"), "left")
             .select(col("vec_id"), coalesce(col("cid"), lit(-1L)).as("cid"),
               col("vq")))
@@ -1076,8 +1074,7 @@ object Dedup {
     * scale notes): maximal per-doc position ranges covered by ≥L-token
     * substrings that occur more than once in the corpus. Input: a
     * (doc_id, text) relation. */
-  private[graft] def substrSpans(docsDF: DataFrame, L: Int,
-      ckKey: String = "q_dedup_substr.wins"): DataFrame = {
+  private[graft] def substrSpans(docsDF: DataFrame, L: Int): DataFrame = {
     VectorFunctions.register(docsDF.sparkSession)
     val docsT = docsDF
       .select(col("doc_id"), split(col("text"), " ").as("t"))
@@ -1094,7 +1091,7 @@ object Dedup {
     // distinct spans on BOTH engines identically. Checkpointed once —
     // census and probe both read the materialized (doc,w,h) relation
     // instead of replaying the explode+concat.
-    val wins = graft.Tables.runScopedCheckpoint(ckKey,
+    val wins = Tables.checkpoint(
       docsT
         .select(col("doc_id"), col("t"),
           explode(sequence(lit(0), size(col("t")) - L)).as("w"))
@@ -1155,12 +1152,8 @@ object Dedup {
     // Materialize the edge list once: it is tiny (near-dup pairs), but its
     // lineage is the whole upstream pair-generation pipeline — without the
     // barrier every iteration's join AND every convergence check re-runs
-    // LSH candidate generation (measured 5.4 s vs 2.5 s at sf0.1).
-    // Reclamation below goes through Tables.checkpointEager release
-    // handles: Dataset.unpersist on a localCheckpoint'd frame is a NO-OP
-    // (it only clears CacheManager entries, not the directly-persisted
-    // internal RDD — ADVICE r6), so the r6 version of this loop leaked
-    // every generation's blocks for the session lifetime.
+    // LSH candidate generation (measured 5.4 s vs 2.5 s at sf0.1). Each
+    // label generation frees the one it supersedes (Tables.Generations).
     // Stats firewall (r10): a localCheckpoint's LogicalRDD CARRIES the
     // pre-checkpoint plan's size estimate, and Catalyst join estimates
     // MULTIPLY child sizes — so a loop whose generation joins the previous
@@ -1175,23 +1168,21 @@ object Dedup {
     // longs per row, so the Row round-trip is noise, and the loop's joins
     // are keyed SMJ by design — no broadcast decision depends on the lost
     // estimate.
-    def ck(df: DataFrame): (DataFrame, () => Unit) = {
-      val (chk, release) = graft.Tables.checkpointEager(df)
-      (df.sparkSession.createDataFrame(chk.rdd, chk.schema), release)
-    }
-    val (sym, releaseSym) = ck(
+    def firewall(chk: DataFrame): DataFrame =
+      chk.sparkSession.createDataFrame(chk.rdd, chk.schema)
+    val sym = firewall(Tables.checkpoint(
       edges.select(col("a"), col("b"))
-        .union(edges.select(col("b").as("a"), col("a").as("b"))))
+        .union(edges.select(col("b").as("a"), col("a").as("b")))))
     // Seed labels at min(id, min neighbor) straight off the edge agg — one
     // shuffle replacing the r12 distinct+self-label AND the first
     // propagation round (r13). (r14 A/B note: self-loop edges replacing
     // the per-round union(labels, prop) were measured and REJECTED —
     // 6.24 s vs 5.44 s median for q_knn_clusters in adjacent windows.)
-    var (labelsChk, releasePrev) = ck(
+    val gens = new Tables.Generations
+    var labels = firewall(gens.next(
       sym.groupBy(col("a"))
         .agg(min(col("b")).as("mnb"))
-        .select(col("a").as("id"), least(col("a"), col("mnb")).as("lbl")))
-    var labels: DataFrame = labelsChk
+        .select(col("a").as("id"), least(col("a"), col("mnb")).as("lbl"))))
     var iter = 0
     var converged = false
     // Seed for the monotone-sum convergence check (see loop body): any
@@ -1223,29 +1214,16 @@ object Dedup {
       // aggregate over the just-materialized blocks. DECIMAL(38,0): exact —
       // a long sum could overflow at 1e9 nodes × 1e12 ids; 38 digits
       // cannot. CCSpec pins deep-chain convergence both ways.
-      val (next, releaseNext) = ck(merged)
+      val next = firewall(gens.next(merged))
       val sum = next.agg(org.apache.spark.sql.functions.sum(
         col("lbl").cast(org.apache.spark.sql.types.DataTypes
           .createDecimalType(38, 0))).as("s"))
         .first().getDecimal(0)
       converged = sum == prevSum
-      if (sys.env.get("SPARK_GRAFT_CC_TRACE").contains("1"))
-        System.err.println(s"[cc] iter=$iter sum=$sum converged=$converged")
       prevSum = sum
-      // Release the superseded generation's checkpoint blocks: without this
-      // every iteration's label table stays persistent for the rest of the
-      // session (the blocks outlive the query and bleed memory pressure
-      // into whatever runs next in the same JVM).
-      releasePrev()
-      labelsChk = next
-      releasePrev = releaseNext
       labels = next.select("id", "lbl")
       iter += 1
     }
-    // The returned frame is itself checkpointed, so the edge list's blocks
-    // are no longer reachable from it — free them too. (The final label
-    // generation stays live: the caller's plan reads it.)
-    releaseSym()
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter iterations " +
@@ -1285,7 +1263,7 @@ object Dedup {
     // c ≥ ⌈τ/(1+τ)·(nA+nB)⌉ shingles, so a MISSED pair (all shared
     // shingles stop) needs some doc holding ≥ ⌈τ/(1+τ)·(nX+n_min)⌉ stop
     // shingles — the bound checked per doc against its own mask.
-    sharedShingleCounts(shInput, dfCap, "ngramPairs.sh",
+    sharedShingleCounts(shInput, dfCap,
       (n, nMin) => ceil(lit(tau / (1.0 + tau)) * (n + nMin)))
       // raw ratio, not rounded: rounding a rational can land on an
       // exact .xxxx5 boundary where the engines' round() diverge; the
@@ -1308,7 +1286,7 @@ object Dedup {
     * unconditional, the cap engages exactly when provably safe.
     */
   def containmentPairs(shInput: DataFrame, tau: Double, dfCap: Option[Int]): DataFrame = {
-    val shared = sharedShingleCounts(shInput, dfCap, "containmentPairs.sh",
+    val shared = sharedShingleCounts(shInput, dfCap,
       (n, _) => ceil(lit(tau) * n))
     val fwd = shared.select(col("da").as("d_sub"), col("db").as("d_sup"),
       (col("c").cast(DoubleType) / col("na")).as("cont"))
@@ -1345,7 +1323,7 @@ object Dedup {
     * tiny-doc corpora that legitimately need the full join.
     */
   private def sharedShingleCounts(
-      shInput: DataFrame, dfCap: Option[Int], checkpointKey: String,
+      shInput: DataFrame, dfCap: Option[Int],
       violationBound: (Column, Column) => Column): DataFrame = {
     // The capped path reads the shingle relation from five sub-plans (df
     // table, stop-mask build, sizes, guard, blocking) plus the guard's
@@ -1353,9 +1331,6 @@ object Dedup {
     // shingle pipeline per consumer (measured ~25% faster than lazy at
     // sf0.1 despite the extra action). The uncapped path reads it twice
     // within one plan and exchange reuse covers it, so it stays lazy.
-    // Run-scoped: the checkpoint must outlive this builder (the returned
-    // plan reads it), so per-invocation release is impossible here — but
-    // keying it frees the PREVIOUS invocation's blocks (bench loops).
     // (r13 A/B note: re-keying this checkpoint by the blocking key at 2×
     // parallelism was tried and REJECTED — the checkpoint's AQE-coalesced
     // 4 partitions looked like a parallelism bound (pair expansion: 4
@@ -1364,9 +1339,7 @@ object Dedup {
     // the blocking join's small side already broadcasts, so the explicit
     // exchange bought nothing and its own shuffle + 64-way block
     // bookkeeping cost ~1 s. Latency-, not parallelism-bound at sf0.1.)
-    val sh = if (dfCap.isDefined)
-      graft.Tables.runScopedCheckpoint(checkpointKey, shInput)
-    else shInput
+    val sh = if (dfCap.isDefined) Tables.checkpoint(shInput) else shInput
     // The capped path reads per-doc sizes from two separate actions (the
     // guard count, then the final pair plan) — cache the tiny relation so
     // the 1M-row groupBy shuffle behind it runs once, not twice. The

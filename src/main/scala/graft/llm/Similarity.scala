@@ -394,8 +394,7 @@ object Similarity {
     // sizes a |clusters|-row aggregate.
     "q_knn_clusters" -> Q(
       fn = (s, d) => {
-        val g = knnGraph(Tables(s, d, "embeddings"), k = 3,
-          ckKey = "q_knn_clusters.edges")
+        val g = knnGraph(Tables(s, d, "embeddings"), k = 3)
         val mutualEdges = g
           .filter(col("mutual") && col("vec_id") < col("nbr_id"))
           .select(col("vec_id").as("a"), col("nbr_id").as("b"))
@@ -467,20 +466,21 @@ object Similarity {
     // in a handful of rounds).
     "q_graph_pagerank" -> Q(
       fn = (s, d) => {
-        val edges = graft.Tables.runScopedCheckpoint("q_graph_pagerank.edges",
+        val edges = Tables.checkpoint(
           knnEdges(Tables(s, d, "embeddings"), k = 3)
             .select(col("vec_id").as("src"), col("nbr_id").as("dst")))
         val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        val ew = graft.Tables.runScopedCheckpoint("q_graph_pagerank.ew",
+        val ew = Tables.checkpoint(
           edges.join(deg, "src")
             .select(col("src"), col("dst"),
               expr("CAST(6 AS BIGINT) DIV outdeg").as("w")))
+        val gens = new Tables.Generations
         var p = deg.select(col("src").as("vec_id"), lit(1L).as("p"))
         for (t <- 1 to pagerankIters) {
           val teleport = 6L * pow12(t - 1)
           val inflow = ew.join(p, ew("src") === p("vec_id"))
             .groupBy(ew("dst")).agg(sum(col("p") * col("w")).as("inflow"))
-          p = graft.Tables.runScopedCheckpoint(s"q_graph_pagerank.p$t",
+          p = gens.next(
             deg.select(col("src").as("vec_id"))
               .join(inflow, col("vec_id") === col("dst"), "left")
               .select(col("vec_id"),
@@ -658,7 +658,7 @@ object Similarity {
     // map-side (argmin of index-ordered squared L2, tie-break by centroid
     // id), recompute centroids with one (cluster, dim) hash agg — the
     // corpus is scanned once per round and never shuffled at row width.
-    // Each round's 8-row centroid table is checkpointEager-materialized so
+    // Each round's 8-row centroid table is a checkpoint generation, so
     // round N+1 reads an RDD instead of re-executing round N's whole
     // lineage (the q_graph_triangles lesson), and the superseded
     // generation's blocks release immediately; the returned plan depends
@@ -682,20 +682,16 @@ object Similarity {
             .groupBy("vec_id")
             .agg(min(struct(col("d2"), col("cid"))).as("m"),
               first(col("v")).as("v"))
-        var release: () => Unit = () => ()
+        val gens = new Tables.Generations
         var centroids = e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("cid"), col("v").as("cv"))
         for (_ <- 1 to 3) {
-          val updated = assign(centroids)
+          centroids = gens.next(assign(centroids)
             .select(col("m.cid").as("cid"), posexplode(col("v")).as(Seq("i", "x")))
             .groupBy("cid", "i").agg(avg(col("x")).as("mx"))
             .groupBy("cid")
             .agg(transform(array_sort(collect_list(struct(col("i"), col("mx")))),
-              p => round(p.getField("mx"), 6)).as("cv"))
-          val (chk, rel) = Tables.checkpointEager(updated)
-          release() // previous generation's blocks — safe, chk is materialized
-          release = rel
-          centroids = chk
+              p => round(p.getField("mx"), 6)).as("cv")))
         }
         assign(centroids)
           .select(col("m.cid").as("cluster_id"), col("m.d2").as("d2"))
@@ -952,10 +948,8 @@ object Similarity {
     * self-join replans the whole join+window subtree for the reversed side
     * (ReusedExchange saves only the shuffles — the in-label pair scoring,
     * the most expensive stage, would execute twice). */
-  private[graft] def knnGraph(embeddings: DataFrame, k: Int,
-      ckKey: String = "q_knn_graph.edges"): DataFrame = {
-    val edges = graft.Tables.runScopedCheckpoint(ckKey,
-      knnEdges(embeddings, k))
+  private[graft] def knnGraph(embeddings: DataFrame, k: Int): DataFrame = {
+    val edges = Tables.checkpoint(knnEdges(embeddings, k))
     val rev = edges.select(col("nbr_id").as("r_vec"),
       col("vec_id").as("r_nbr"))
     edges.join(rev,

@@ -28,7 +28,7 @@ object TextAnalysis {
   private def toks: Column = split(col("text"), " ")
 
   /** The ≥20%-doc-frequency token co-occurrence edge relation (a < b,
-    * canonical orientation), materialized run-scoped and consumed by the
+    * canonical orientation), checkpointed once per call and consumed by the
     * graph quartet: q_graph_degree, q_graph_triangles, q_text_rank, and
     * q_recursive_cte (SetSort).
     *
@@ -67,7 +67,7 @@ object TextAnalysis {
       .select(explode(graft.functions.VectorFunctions.tokenPairs(col("t"))).as("p"))
       .select(col("p.ta").as("a"), col("p.tb").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("n"))
-    Tables.runScopedCheckpoint("cooccur.edges",
+    Tables.checkpoint(
       pairs.filter(col("n") * 5 >= lit(total)).select(col("a"), col("b")))
   }
 
@@ -153,9 +153,10 @@ object TextAnalysis {
     * control-loop pattern), and the merge is applied as an exact
     * left-to-right greedy fold over each word's symbol string (see
     * q_bpe_train's fold-encoding note). */
-  private def bpeTrain(s: SparkSession, d: String, iters: Int,
-      ckPrefix: String): (DataFrame, Seq[(Long, String, String, Long)]) = {
-    var words = Tables.runScopedCheckpoint(s"$ckPrefix.w0",
+  private def bpeTrain(s: SparkSession, d: String, iters: Int)
+      : (DataFrame, Seq[(Long, String, String, Long)]) = {
+    val gens = new Tables.Generations
+    var words = gens.next(
       Tables(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")
@@ -176,13 +177,13 @@ object TextAnalysis {
         .orderBy(col("n").desc, col("lhs"), col("rhs"))
         .limit(1).collect()
       require(bestRow.nonEmpty,
-        s"$ckPrefix: vocabulary exhausted before iteration $it")
+        s"bpeTrain: vocabulary exhausted before iteration $it")
       val (l, r, n) =
         (bestRow(0).getString(0), bestRow(0).getString(1),
           bestRow(0).getLong(2))
       merges += ((it.toLong, l, r, n))
       val (lhs, rhs) = (lit(l), lit(r))
-      words = Tables.runScopedCheckpoint(s"$ckPrefix.w$it",
+      words = gens.next(
         words.select(col("w"),
           aggregate(split(col("syms"), " "), lit(""),
             (acc, x) => when(acc === "", x)
@@ -740,27 +741,19 @@ object TextAnalysis {
         // (every tested SF), keyed join when the vocabulary outgrows the
         // executors. The only per-iteration exchange either way is the
         // |nodes|-row share aggregation.
-        // Per-generation reclamation via checkpointEager handles —
-        // Dataset.unpersist is a no-op on localCheckpoint'd frames
-        // (ADVICE r6), so the r6 loop leaked all 10 generations.
-        val (adj, releaseAdj) = Tables.checkpointEager(
+        val adj = Tables.checkpoint(
           und.join(und.groupBy("src").agg(count(lit(1)).as("deg")), "src"))
-        var (pr, releasePrev) = Tables.checkpointEager(
+        val gens = new Tables.Generations
+        var pr = gens.next(
           adj.select(col("src").as("token")).distinct()
             .select(col("token"), lit(1000000L).as("pr")))
         for (_ <- 1 to 10) {
-          val (next, releaseNext) = Tables.checkpointEager(adj
+          pr = gens.next(adj
             .join(pr.select(col("token").as("src"), col("pr")), "src")
             .select(col("dst").as("token"), expr("pr div deg").as("share"))
             .groupBy("token")
             .agg((lit(150000L) + expr("(sum(share) * 17) div 20")).as("pr")))
-          releasePrev()
-          pr = next
-          releasePrev = releaseNext
         }
-        // the final generation is materialized, so the edge relation's
-        // blocks are no longer reachable from the returned plan
-        releaseAdj()
         pr.orderBy(col("pr").desc, col("token").asc).limit(50)
       },
       oracle = Some({
@@ -876,7 +869,7 @@ object TextAnalysis {
     "q_bpe_train" -> Q(
       fn = (s, d) => {
         import s.implicits._
-        val (_, merges) = bpeTrain(s, d, iters = 8, ckPrefix = "q_bpe_train")
+        val (_, merges) = bpeTrain(s, d, iters = 8)
         merges.toDF("iter", "lhs", "rhs", "n").orderBy("iter")
       },
       oracle = Some(bpeTrainOracle(8))),
@@ -907,7 +900,7 @@ object TextAnalysis {
     "q_bpe_encode" -> Q(
       fn = (s, d) => {
         graft.functions.VectorFunctions.register(s)
-        val (vocab, _) = bpeTrain(s, d, iters = 8, ckPrefix = "q_bpe_encode")
+        val (vocab, _) = bpeTrain(s, d, iters = 8)
         val docWords = Tables(s, d, "documents")
           .select(col("doc_id"),
             posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
@@ -946,15 +939,6 @@ object TextAnalysis {
         // apriori-pruned builder materializes it ONCE (cooccurEdges — also
         // the r12 fix that keeps pair generation linear at scale); the
         // triangle joins then run over the tiny in-memory edge list.
-        // EAGER-CONSUMPTION INVARIANT (ADVICE r12): this view sits over the
-        // shared run-scoped 'cooccur.edges' checkpoint, which the NEXT
-        // quartet consumer RELEASES when it rebuilds under the same key.
-        // The returned DataFrame must therefore be fully consumed before
-        // any other cooccur consumer runs — true for every harness path
-        // (Bench counts, Verify writes, specs collect, each eagerly per
-        // query); a deferred re-execution of this view after a later
-        // consumer ran would hit unrecoverable unpersisted checkpoint
-        // blocks.
         cooccurEdges(s, d).createOrReplaceTempView("graft_triangle_edges")
         s.sql("""
           SELECT e1.a AS a, e1.b AS b, e2.b AS c
@@ -1065,7 +1049,7 @@ object TextAnalysis {
     "q_text_vocab" -> Q(
       fn = (s, d) => {
         val V = 50
-        val ltc = Tables.runScopedCheckpoint("q_text_vocab.ltc",
+        val ltc = Tables.checkpoint(
           Tables(s, d, "documents")
             .select(col("lang"), explode(toks).as("token"))
             .groupBy("lang", "token")
@@ -1144,7 +1128,7 @@ object TextAnalysis {
     // & Hanks 1990). Support floor ndocs≥5 kills the low-count PMI noise.
     //
     // Scale shape: the per-doc distinct-token relation materializes ONCE
-    // (runScopedCheckpoint) and feeds all three consumers — pair counts,
+    // (Tables.checkpoint) and feeds all three consumers — pair counts,
     // token marginals, corpus size — so documents is never re-scanned;
     // the marginals broadcast to the pair relation. PMI's argument is an
     // exact integer ratio ndocs·N / (df_a·df_b) evaluated in one
@@ -1152,7 +1136,7 @@ object TextAnalysis {
     "q_text_pmi" -> Q(
       fn = (s, d) => {
         graft.functions.VectorFunctions.register(s)
-        val arr = Tables.runScopedCheckpoint("q_text_pmi.arr",
+        val arr = Tables.checkpoint(
           Tables(s, d, "documents")
             .select(col("doc_id"), array_sort(array_distinct(toks)).as("ts")))
         val dfRel = arr.select(explode(col("ts")).as("token"))
@@ -1215,7 +1199,7 @@ object TextAnalysis {
     // broadcast back onto the |langs|² result.
     "q_cross_lingual_overlap" -> Q(
       fn = (s, d) => {
-        val vl = Tables.runScopedCheckpoint("q_clo_vl",
+        val vl = Tables.checkpoint(
           Tables(s, d, "documents")
             .select(col("lang"), explode(split(col("text"), " ")).as("token"))
             .distinct())
@@ -1272,7 +1256,7 @@ object TextAnalysis {
     // min-rank argmin.
     "q_vocab_coverage" -> Q(
       fn = (s, d) => {
-        val freq = Tables.runScopedCheckpoint("q_vc_freq",
+        val freq = Tables.checkpoint(
           Tables(s, d, "documents")
             .select(explode(split(col("text"), " ")).as("token"))
             .groupBy("token").agg(count(lit(1)).as("c")))
@@ -1523,7 +1507,7 @@ object TextAnalysis {
     // the panel, the 20×|sources| grid, and every PSI sum are panel-sized.
     "q_token_drift" -> Q(
       fn = (s, d) => {
-        val counts = Tables.runScopedCheckpoint("q_token_drift_counts",
+        val counts = Tables.checkpoint(
           Tables(s, d, "documents")
             .select(col("source"),
               explode(split(col("text"), " ")).as("token"))

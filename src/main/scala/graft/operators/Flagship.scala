@@ -199,23 +199,18 @@ object Flagship {
     // 0.7-1.4 s addBatch per batch, ~40% of it the static side. The
     // geography chain collapses associatively to one (s_suppkey → r_name)
     // relation and part projects to (p_partkey, p_name); both are
-    // localCheckpointed once per run (run-scoped, released on the next
-    // invocation) so each batch's re-build reads dimension-sized in-memory
-    // blocks instead of re-running scans+joins. Inner FK joins: the
-    // collapsed form is row-identical to the four-way chain, and the oracle
-    // (the batch flagship's SQL) is unchanged.
-    // Checkpoint keys derive from scratchKey (ADVICE r13): key ownership
-    // follows the query identity, so a second streamingFlagship-style
-    // caller (e.g. a config streaming mode) cannot release a concurrent
-    // invocation's blocks by colliding on a literal key.
-    val supGeo = Tables.runScopedCheckpoint(s"$scratchKey.supgeo",
+    // checkpointed once per run so each batch's re-build reads
+    // dimension-sized in-memory blocks instead of re-running scans+joins.
+    // Inner FK joins: the collapsed form is row-identical to the four-way
+    // chain, and the oracle (the batch flagship's SQL) is unchanged.
+    val supGeo = Tables.checkpoint(
       Tables(spark, dir, "supplier")
         .join(Tables(spark, dir, "nation"),
           col("s_nationkey") === col("n_nationkey"))
         .join(Tables(spark, dir, "region"),
           col("n_regionkey") === col("r_regionkey"))
         .select(col("s_suppkey"), col("r_name")))
-    val partDim = Tables.runScopedCheckpoint(s"$scratchKey.part",
+    val partDim = Tables.checkpoint(
       Tables(spark, dir, "part").select(col("p_partkey"), col("p_name")))
     val enriched = fact
       .join(broadcast(supGeo), col("l_suppkey") === col("s_suppkey"))

@@ -42,7 +42,7 @@ object Insights {
             col("value").isNotNull)
           .select(col("value"),
             when(col("event_type") === "click", 1L).otherwise(0L).as("is1"))
-        val perValue = Tables.runScopedCheckpoint("q_ks_pv",
+        val perValue = Tables.checkpoint(
           sample.groupBy("value")
             .agg(sum(col("is1")).as("c1"),
               (count(lit(1)) - sum(col("is1"))).as("c2")))
@@ -255,7 +255,7 @@ object Insights {
     // crossing comparison is exact on both engines.
     "q_percentile_weighted" -> Q(
       fn = (s, d) => {
-        val g = Tables.runScopedCheckpoint("q_pw_g",
+        val g = Tables.checkpoint(
           Tables(s, d, "lineitem")
             .groupBy(col("l_returnflag"), col("l_extendedprice"))
             .agg(sum(dec2(col("l_quantity"))).as("w")))
@@ -784,7 +784,7 @@ object Insights {
     // Scale shape: the only fact-sized operation is ONE user-keyed
     // min/max aggregation — and exactly one: the per-user relation is
     // consumed twice (window-end max + life table), so it's materialized
-    // via runScopedCheckpoint rather than re-executing the corpus scan
+    // via Tables.checkpoint rather than re-executing the corpus scan
     // (the q_graph_degree re-execution defect class). The life table and
     // the product-limit windows run over duration cardinality (bounded by
     // the observation window in hours, not the corpus). Counts are exact
@@ -793,7 +793,7 @@ object Insights {
     // r4 — the q_text_lm_score transcendental convention).
     "q_kaplan_meier" -> Q(
       fn = (s, d) => {
-        val u = Tables.runScopedCheckpoint("q_kaplan_meier.u",
+        val u = Tables.checkpoint(
           Tables(s, d, "events")
             .select(col("user_id"),
               unix_millis(col("ts").cast(TimestampType)).as("ms"))
@@ -938,7 +938,7 @@ object Insights {
     // single-partition window remains even if the length domain grows.
     "q_quantile_normalize" -> Q(
       fn = (s, d) => {
-        val counts = Tables.runScopedCheckpoint("q_qn_counts",
+        val counts = Tables.checkpoint(
           Tables(s, d, "documents")
             .groupBy("lang", "n_chars").agg(count(lit(1)).as("c")))
         val wg = Window.partitionBy("lang").orderBy("n_chars")

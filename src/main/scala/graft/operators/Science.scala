@@ -218,7 +218,7 @@ object Science {
     "q_mannwhitney_u" -> Q(
       fn = (s, d) => {
         val a = col("user_id") % 2 === 0
-        val pv = Tables.runScopedCheckpoint("q_mwu_pv",
+        val pv = Tables.checkpoint(
           Tables(s, d, "events")
             .select(col("event_type"), col("value"), a.as("is_a"))
             .groupBy("event_type", "value")
@@ -364,7 +364,7 @@ object Science {
     // the plan never rescans parquet).
     "q_rfm" -> Q(
       fn = (s, d) => {
-        val byCust = Tables.runScopedCheckpoint("q_rfm_bycust",
+        val byCust = Tables.checkpoint(
           Tables(s, d, "orders")
             .groupBy(col("o_custkey"))
             .agg(max(col("o_orderdate")).as("last_order"),
@@ -383,9 +383,9 @@ object Science {
               Seq(col("o_custkey")), "__r")
             .withColumn(out, PrefixSum.tileOf(col("__r"), col("n_cust"), 5))
             .drop("__r")
-        val s1 = Tables.runScopedCheckpoint("q_rfm_s1",
+        val s1 = Tables.checkpoint(
           quintile(base, col("recency_days"), asc = true, "r_score"))
-        val s2 = Tables.runScopedCheckpoint("q_rfm_s2",
+        val s2 = Tables.checkpoint(
           quintile(s1, col("frequency"), asc = false, "f_score"))
         val scored = quintile(s2, col("monetary"), asc = false, "m_score")
         scored.groupBy("r_score", "f_score", "m_score")
@@ -529,7 +529,7 @@ object Science {
     // differ in final ulps across engines, so slope/intercept are r4.
     "q_zipf_slope" -> Q(
       fn = (s, d) => {
-        val counts = Tables.runScopedCheckpoint("q_zipf_counts",
+        val counts = Tables.checkpoint(
           Tables(s, d, "documents")
             .select(explode(split(col("text"), " ")).as("tok"))
             .groupBy("tok").agg(count(lit(1)).as("freq")))
@@ -727,7 +727,7 @@ object Science {
     // S, ties and Var numerators are exact longs; z is one √ + division.
     "q_mk_trend" -> Q(
       fn = (s, d) => {
-        val daily = Tables.runScopedCheckpoint("q_mk_trend.daily",
+        val daily = Tables.checkpoint(
           Tables(s, d, "events")
             .groupBy(to_date(col("ts")).as("day"))
             .agg(count(lit(1)).as("x")))
@@ -791,7 +791,7 @@ object Science {
     // materialized day relation.
     "q_theil_sen" -> Q(
       fn = (s, d) => {
-        val daily = Tables.runScopedCheckpoint("q_theil_sen.daily",
+        val daily = Tables.checkpoint(
           Tables(s, d, "events")
             .groupBy(to_date(col("ts")).as("day"))
             .agg(count(lit(1)).as("x"))

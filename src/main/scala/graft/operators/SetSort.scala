@@ -330,13 +330,8 @@ object SetSort {
         // UNION ALL direction split doubled it again — 2.3 s at sf0.1, vs
         // ~1 s materialized). Since r12 the relation comes from the SHARED
         // apriori-pruned builder (graft.llm.TextAnalysis.cooccurEdges —
-        // run-scoped checkpoint, linear pair volume at scale); only the
+        // checkpointed, linear pair volume at scale); only the
         // direction split happens here, above the materialized edges.
-        // EAGER-CONSUMPTION INVARIANT (ADVICE r12): the view sits over the
-        // shared run-scoped 'cooccur.edges' checkpoint, which the next
-        // quartet consumer RELEASES when it rebuilds under the same key —
-        // the recursion below must be (and is, on every harness path)
-        // fully consumed within this query's execution.
         val ed = graft.llm.TextAnalysis.cooccurEdges(s, d)
         ed.select(col("a").as("src"), col("b").as("dst"))
           .unionAll(ed.select(col("b").as("src"), col("a").as("dst")))

@@ -232,7 +232,7 @@ object TpchMore {
             .filter(col("n_name") === "NATION_1")),
             col("s_nationkey") === col("n_nationkey"))
           .select(col("s_suppkey"))
-        val perPart = Tables.runScopedCheckpoint("q_tpch_q11.perpart",
+        val perPart = Tables.checkpoint(
           Tables(s, d, "lineitem")
             .join(broadcast(natSup), col("l_suppkey") === col("s_suppkey"))
             .groupBy("l_partkey")
@@ -289,7 +289,7 @@ object TpchMore {
     // ties all surface.
     "q_tpch_q15" -> Q(
       fn = (s, d) => {
-        val rev = Tables.runScopedCheckpoint("q_tpch_q15.rev",
+        val rev = Tables.checkpoint(
           Tables(s, d, "lineitem")
             .filter(col("l_shipdate") >= lit("1997-01-01").cast(TimestampType) &&
                     col("l_shipdate") < lit("1997-04-01").cast(TimestampType))

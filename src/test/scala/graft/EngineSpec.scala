@@ -53,18 +53,31 @@ class EngineSpec extends AnyFunSuite {
     assert(TestSpark.spark.sparkContext.master == "local[4]")
   }
 
-  test("Engine.session is the only SparkSession builder under src/main") {
+  /** Paths (relative to src/main) of the Scala sources containing `needle`. */
+  private def mainSourcesContaining(needle: String): List[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
     val files = java.nio.file.Files.walk(root)
-    val builders = try files.iterator().asScala
+    try files.iterator().asScala
       .filter(p => p.toString.endsWith(".scala") &&
-        java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+        java.nio.file.Files.readString(p).contains(needle))
       .map(p => root.relativize(p).toString).toList.sorted
     finally files.close()
+  }
+
+  test("Engine.session is the only SparkSession builder under src/main") {
+    val builders = mainSourcesContaining("SparkSession.builder")
     assert(builders == List("scala/graft/Engine.scala"),
       s"session builders outside Engine.session: $builders")
+  }
+
+  test("checkpoint blocks are created and freed only in Tables") {
+    for (needle <- Seq("localCheckpoint(", "getPersistentRDDs")) {
+      val found = mainSourcesContaining(needle)
+      assert(found == List("scala/graft/Tables.scala"),
+        s"$needle outside Tables: $found")
+    }
   }
 
   test("GraftExtensions injects the function library at session build time") {
@@ -97,25 +110,47 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  // The name predates Tables.Generations: the keyed registry it was written
+  // for is gone, and Generations.next now gives the same eager reclamation.
   test("runScopedCheckpoint eagerly reclaims the superseded generation's blocks") {
     val spark = TestSpark.spark
-    val sc = spark.sparkContext
     import spark.implicits._
-    def liveIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    def liveIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val base = liveIds
-    val g1 = Tables.runScopedCheckpoint("enginespec.chk",
-      Seq(1, 2, 3).toDF("x"))
-    assert(g1.count() == 3)
-    val afterG1 = liveIds.diff(base)
-    assert(afterG1.nonEmpty, "first checkpoint registered no persistent RDD")
-    val g2 = Tables.runScopedCheckpoint("enginespec.chk",
-      Seq(4, 5).toDF("x"))
-    assert(g2.count() == 2)
-    val afterG2 = liveIds.diff(base)
-    // generation 1's blocks are gone NOW (not when ContextCleaner gets to
-    // them — Dataset.unpersist alone would leave them: ADVICE r6)
-    assert(afterG1.intersect(afterG2).isEmpty,
-      s"superseded checkpoint blocks still persistent: ${afterG1.intersect(afterG2)}")
-    assert(afterG2.nonEmpty, "second checkpoint registered no persistent RDD")
+    val gens = new Tables.Generations
+    val g1 = gens.next(Seq(1, 2, 3).toDF("x"))
+    val ids1 = liveIds.diff(base)
+    assert(ids1.nonEmpty, "first generation registered no persistent RDD")
+    val g2 = gens.next(g1.select(($"x" * 10).as("x")))
+    val ids2 = liveIds.diff(base)
+    // generation 1's blocks are gone NOW, not when the ContextCleaner
+    // notices the frame is unreachable
+    assert(ids1.intersect(ids2).isEmpty,
+      s"superseded generation still persistent: ${ids1.intersect(ids2)}")
+    assert(ids2.nonEmpty, "second generation registered no persistent RDD")
+    assert(g2.as[Int].collect().sorted.toSeq == Seq(10, 20, 30))
+  }
+
+  test("releaseAll leaves no persistent RDD behind") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    assert(Tables.checkpoint(Seq(1, 2).toDF("x")).count() == 2)
+    assert(Seq(3).toDF("x").cache().count() == 1)
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+    Tables.releaseAll(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("a returned frame stays readable after another query rebuilds the relation it shares") {
+    // q_graph_triangles and q_graph_degree both read cooccurEdges'
+    // checkpoint; running the second must not free the first's blocks.
+    val spark = TestSpark.spark
+    val triangles = SparkEntry.queries("q_graph_triangles")(spark, TestSpark.sf)
+    val first = triangles.collect().toSeq
+    assert(first.nonEmpty, "no triangles at this scale: the check proves nothing")
+    SparkEntry.queries("q_graph_degree")(spark, TestSpark.sf).collect()
+    assert(triangles.collect().toSeq == first)
+    // a fresh plan over the same frame re-reads the checkpoint itself
+    assert(triangles.where("true").collect().toSeq == first)
   }
 }

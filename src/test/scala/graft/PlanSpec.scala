@@ -390,7 +390,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_source_novelty reads its checkpointed relation — one corpus pass") {
     // feeds a multi-consumer derived relation (distinct (source, shingle))
-    // through runScopedCheckpoint; without the barrier the corpus explode
+    // through Tables.checkpoint; without the barrier the corpus explode
     // re-executes per consumer (the r5 q_graph_triangles defect class).
     // After the checkpoint, the final plan must contain ZERO parquet
     // scans. (q_lsh_tuning left this test in r9: its one-pass wide-
