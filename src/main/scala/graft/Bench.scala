@@ -150,7 +150,8 @@ object Bench {
     * so every artifact describes the run that produced it. */
   private[graft] final case class RunConf(
       sfDir: String, cpus: Int, shufflePartitions: Int, runs: Int,
-      warmup: Boolean, partial: Boolean)
+      warmup: Boolean, partial: Boolean, codegenCacheMaxEntries: Int,
+      artifactIsolation: Boolean)
 
   /** One rendering of a run: the metric JSON line, each BENCH_*.json
     * file's (key → raw JSON value) entries, and the flagged regressions
@@ -195,7 +196,9 @@ object Bench {
         s""""attempts":${attempts.length},"load_ok":${best.loadOk}}"""
     val confJson =
       s"""{"cpus":${conf.cpus},"shuffle_partitions":${conf.shufflePartitions},""" +
-        s""""runs":${conf.runs},"warmup":${conf.warmup},"partial":${conf.partial}}"""
+        s""""runs":${conf.runs},"warmup":${conf.warmup},"partial":${conf.partial},""" +
+        s""""codegen_cache_max_entries":${conf.codegenCacheMaxEntries},""" +
+        s""""artifact_isolation":${conf.artifactIsolation}}"""
     val line =
       s"""{"metric":"total_all_${results.size}_queries","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"regressions":$regJson,"load":$loadJson,"conf":$confJson,"sf":"${conf.sfDir}"}"""
     val files = Seq(
@@ -439,7 +442,11 @@ object Bench {
         .flatMap(v => scala.util.Try(v.toInt).toOption).fold(3)(math.max(1, _))
     val conf = RunConf(sfDir, spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions").toInt, nRuns, warmup,
-      partial = only.nonEmpty || skip.nonEmpty)
+      partial = only.nonEmpty || skip.nonEmpty,
+      codegenCacheMaxEntries =
+        spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt,
+      artifactIsolation =
+        spark.conf.get("spark.sql.artifact.isolation.enabled").toBoolean)
     // The committed per-key baseline for the regression gate — only
     // meaningful for the canonical sf0.1 battery (a sweep at another SF
     // would flag everything). Relative paths resolve against the working

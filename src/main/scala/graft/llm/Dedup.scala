@@ -1219,6 +1219,10 @@ object Dedup {
         col("lbl").cast(org.apache.spark.sql.types.DataTypes
           .createDecimalType(38, 0))).as("s"))
         .first().getDecimal(0)
+      // An overflowing DECIMAL sum reads as null, and null == null would
+      // report convergence over partial labels.
+      require(sum != null,
+        s"connectedComponents: label sum is null at iteration $iter (overflow)")
       converged = sum == prevSum
       prevSum = sum
       labels = next.select("id", "lbl")

@@ -9,7 +9,8 @@ class BenchReportSpec extends AnyFunSuite {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private val conf = Bench.RunConf(sfDir = "/data/sf0.1", cpus = 8,
-    shufflePartitions = 8, runs = 3, warmup = true, partial = false)
+    shufflePartitions = 8, runs = 3, warmup = true, partial = false,
+    codegenCacheMaxEntries = 512, artifactIsolation = false)
 
   private def battery(scale: Double, loadOk: Boolean, cotenant: Double,
       waited: Long) = Bench.Battery(
@@ -44,6 +45,8 @@ class BenchReportSpec extends AnyFunSuite {
     val c = line.get("conf")
     assert(c.get("cpus").asInt == 8 && c.get("shuffle_partitions").asInt == 8)
     assert(!c.has("oha_fallback"))
+    assert(c.get("codegen_cache_max_entries").asInt == 512)
+    assert(!c.get("artifact_isolation").asBoolean)
     assert(line.get("sf").asText == "/data/sf0.1")
 
     val f = files(r)
