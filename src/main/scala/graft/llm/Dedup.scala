@@ -1219,10 +1219,10 @@ object Dedup {
         col("lbl").cast(org.apache.spark.sql.types.DataTypes
           .createDecimalType(38, 0))).as("s"))
         .first().getDecimal(0)
-      // An overflowing DECIMAL sum reads as null, and null == null would
-      // report convergence over partial labels.
-      require(sum != null,
-        s"connectedComponents: label sum is null at iteration $iter (overflow)")
+      // A null sum means an empty graph (Σ over zero rows), which converges
+      // at once with no labels. An overflowing sum cannot read as null and
+      // pass for convergence: ANSI mode (Spark 4's default, kept by
+      // Engine.session) throws NUMERIC_VALUE_OUT_OF_RANGE instead (DedupSpec).
       converged = sum == prevSum
       prevSum = sum
       labels = next.select("id", "lbl")

@@ -104,6 +104,24 @@ class DedupSpec extends AnyFunSuite {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("connectedComponents: an empty edge list yields no labels and does not throw") {
+    import spark.implicits._
+    val edges = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(Dedup.connectedComponents(edges).collect().isEmpty)
+  }
+
+  test("connectedComponents: a DECIMAL(38,0) label-sum overflow throws rather than reading as null") {
+    // The convergence check compares consecutive label sums; a null from
+    // overflow would equal the previous null and stop the loop early.
+    import spark.implicits._
+    val e = intercept[ArithmeticException] {
+      Seq("9" * 38, "9" * 38).toDF("lbl")
+        .agg(sum(col("lbl").cast("decimal(38,0)"))).first()
+    }
+    assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition
+      .startsWith("NUMERIC_VALUE_OUT_OF_RANGE"), e.toString)
+  }
+
   test("cluster query: labels are closed under the pair graph and survivors are minima") {
     val pairs = Dedup.minHashDedup(shingleSets, numHashes = 64, bands = 32, tau = 0.3)
       .select(col("da"), col("db")).collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -50,6 +50,9 @@ class EngineSpec extends AnyFunSuite {
     assert(c.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
     assert(c.get("spark.sql.shuffle.partitions") == "4")
     assert(c.get("spark.sql.adaptive.enabled") == "true")
+    // Overflow throws instead of reading as null (connectedComponents'
+    // label-sum convergence check relies on it).
+    assert(c.get("spark.sql.ansi.enabled") == "true")
     // CodegenReuseSpec: one compile per generated class per JVM.
     assert(c.get("spark.sql.codegen.cache.maxEntries") == "512")
     assert(c.get("spark.sql.artifact.isolation.enabled") == "false")
