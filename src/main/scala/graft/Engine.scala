@@ -111,6 +111,13 @@ object Engine {
       // query) its own class loader, hence its own cache keys: each run
       // recompiled byte-identical sources. The engine adds no artifacts.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // A whole-stage class is named after its codegen stage id, which AQE
+      // hands out in stage completion order, so the same pipeline came back
+      // under a new name and was compiled again: 3-20 new classes on each
+      // of passes 2-5 of llm_batch, a cost that varied from pass to pass
+      // and run to run. Without the id the source, hence the cache key, is
+      // the same (0-6 per pass). Stack frames read GeneratedIterator.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Two loggers that would flood a finite log tail: MapPartitionsRDD

@@ -13,10 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** A workload that repeats compiles each generated class once per JVM
   * (`Engine.session` sizes Spark's codegen cache and turns off artifact
-  * isolation). A repeat may still compile a plan variant it has not seen
-  * yet, since AQE's runtime choices (join strategy, stage numbering) follow
-  * stage completion order; so the check is that no source compiled in the
-  * first round is compiled again in the second. */
+  * isolation, and leaves the codegen stage id out of class names). A
+  * repeat may still compile a plan variant it has not seen yet, since AQE's
+  * runtime choices (join strategy) follow stage completion order; so the
+  * check is that no source compiled in the first round is compiled again in
+  * the second. */
 class CodegenReuseSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -71,6 +72,19 @@ class CodegenReuseSpec extends AnyFunSuite {
     assert(again == 0,
       s"$again of the first round's ${first.size} compiles ran again " +
         s"(second round: ${second.size} compiles)")
+  }
+
+  test("a pipeline under another codegen stage id compiles no new class") {
+    // Alone, each pipeline is codegen stage 1; in the union the second one
+    // is stage 2. AQE renumbers a key's stages the same way from one run
+    // to the next.
+    val a = spark.range(0, 1000, 1, 2).selectExpr("id * 3 AS v").filter("v % 7 = 1")
+    val b = spark.range(0, 1000, 1, 2).selectExpr("id + 5 AS v").filter("v % 11 = 2")
+    val alone = compiledSources { a.collect(); b.collect() }
+    assert(alone.nonEmpty)
+    val union = compiledSources(a.union(b).collect())
+    assert(union.isEmpty,
+      s"the union compiled ${union.size} classes its two pipelines had compiled alone")
   }
 
   test("a second run of the streaming job recompiles no class") {

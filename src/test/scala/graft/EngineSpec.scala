@@ -56,6 +56,7 @@ class EngineSpec extends AnyFunSuite {
     // CodegenReuseSpec: one compile per generated class per JVM.
     assert(c.get("spark.sql.codegen.cache.maxEntries") == "512")
     assert(c.get("spark.sql.artifact.isolation.enabled") == "false")
+    assert(c.get("spark.sql.codegen.useIdInClassName") == "false")
     assert(TestSpark.spark.sparkContext.master == "local[4]")
   }
 
