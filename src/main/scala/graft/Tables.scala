@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Readers over the driver corpus (TESTDATA.md): one parquet file per table
-  * under the scale-factor directory. Parquet footers carry the schema, so
-  * reads are deterministic without a declared StructType; Catalyst pushes
-  * projections and predicates into the scan.
+  * under the scale-factor directory. Parquet footers carry the schema; each
+  * file's footer is read once per session and every later read declares
+  * that schema. Catalyst pushes projections and predicates into the scan.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -23,7 +24,8 @@ object Tables {
     * independent of which corpus generation is on disk.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
     if (name == "events")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -43,12 +45,34 @@ object Tables {
     else df
   }
 
+  /** Footer schemas read so far, per session and path, each stamped with
+    * the length and modification time of the file it was read from. An
+    * inferring `spark.read.parquet` runs a Spark job to read the footer;
+    * a read with a declared schema runs none. The schema is memoized, not
+    * the frame, so each call still gets a fresh relation with its own
+    * attribute ids (a self-join of two calls stays unambiguous), and a
+    * file rewritten at the same path is read again because its stamp
+    * changed. */
+  private val footers =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[
+      SparkSession, java.util.concurrent.ConcurrentHashMap[String, (Long, Long, StructType)]]())
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
+    val memo = footers.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap())
+    memo.compute(path, (_, old) =>
+      if (old != null && old._1 == st.getLen && old._2 == st.getModificationTime) old
+      else (st.getLen, st.getModificationTime, spark.read.parquet(path).schema))._3
+  }
+
   /** Register every corpus table as a temp view (for spark.sql queries —
     * correlated subqueries, GROUPING SETS — which mirror the oracle SQL).
     *
-    * Memoized per (session, dir): each registration re-reads 10 parquet
-    * footers and re-resolves 10 view plans, which showed up as ~0.5s of
-    * pure overhead on every spark.sql query in the round-3 bench. The memo
+    * Memoized per (session, dir): each registration builds and resolves
+    * 10 view plans, which (with the footer reads [[footers]] now saves)
+    * showed up as ~0.5s of pure overhead on every spark.sql query in the
+    * round-3 bench. The memo
     * invalidates when the same session switches corpus dirs (tests do),
     * keyed on the session so a stopped session's entry can't leak onto a
     * new one with the same dir.

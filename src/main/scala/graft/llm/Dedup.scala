@@ -3,6 +3,7 @@ package graft.llm
 import graft.{Q, Tables}
 import graft.Q._
 import graft.functions.VectorFunctions
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1124,116 +1125,90 @@ object Dedup {
             col("end_pos") - col("start_pos"))), lit("utf-8"))).as("span_fp"))
   }
 
-  /** Connected components over an undirected edge list `(a, b)` by
-    * min-label propagation with POINTER JUMPING: each iteration first takes
-    * the min label over every node's neighbors, then compresses paths by
-    * also looking up the label OF the label (labels are node ids, and every
-    * node labels itself initially, so the lookup always hits). Neighbor
-    * propagation alone needs diameter iterations — a chain-shaped component
-    * of diameter > maxIter would exit the loop with silently
-    * partially-propagated labels (ADVICE r9). The jump makes label depth
-    * halve per round, so convergence is O(log diameter): 20 iterations
-    * covers diameter ~2^20, far beyond any real near-dup / mutual-kNN
-    * graph. The fixpoint is unchanged (labels constant on components,
-    * equal to the component's min id), so results are identical to the
-    * plain propagation — CCSpec pins a deep-chain graph both ways.
+  /** Connected components of an undirected edge list `(a, b)` of long vertex
+    * ids, labelled with each component's minimum id: two-phase union-find
+    * by local contraction (Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", SoCC 2014).
     *
-    * Exiting at maxIter WITHOUT convergence now throws instead of
-    * returning wrong labels: the callers' oracles only run at calibration
-    * scale, so a silent partial propagation at production scale would be
-    * invisible.
+    * Round 1 runs union-find inside each of the edge list's P partitions
+    * and maps every vertex to the least vertex of its local component (its
+    * local root). A vertex seen in more than one partition links its local
+    * roots: those links are the contracted edge list, and a component that
+    * stays inside one partition is already labelled. Each later round runs
+    * the same local union-find on the contracted edges with half as many
+    * partitions, down to one, where it is global. So there are exactly
+    * ⌈log2 P⌉+1 rounds, known before the first: no convergence check, and
+    * all rounds are one lineage that the caller's first action runs. A
+    * task holds union-find state only for the vertices of its partition.
     *
-    * At 100 TB the same loop holds: labels is (id, lbl) — two longs per
-    * node in any pair, orders of magnitude smaller than the corpus — the
-    * jump join is label-relation-sized, and convergence is detected with
-    * one count per iteration.
+    * Each round maps a vertex to the least of its local roots, and a
+    * vertex's label follows that map through the later rounds until it
+    * reaches a root that left the contracted graph (its component was
+    * whole) or the last round. A component's minimum is the local root of
+    * every partition it is seen in, so it survives every round and ends as
+    * the label of all its vertices.
+    *
+    * `maxIter` caps the rounds: an edge list with more partitions than
+    * `maxIter` rounds can contract throws before any round runs, instead of
+    * returning partial labels.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // Materialize the edge list once: it is tiny (near-dup pairs), but its
-    // lineage is the whole upstream pair-generation pipeline — without the
-    // barrier every iteration's join AND every convergence check re-runs
-    // LSH candidate generation (measured 5.4 s vs 2.5 s at sf0.1). Each
-    // label generation frees the one it supersedes (Tables.Generations).
-    // Stats firewall (r10): a localCheckpoint's LogicalRDD CARRIES the
-    // pre-checkpoint plan's size estimate, and Catalyst join estimates
-    // MULTIPLY child sizes — so a loop whose generation joins the previous
-    // generation k times stores size^k per round and the stored BigInt's
-    // digit count grows geometrically. With the pointer-jump join (k = 3)
-    // iteration ~12's stats rewrite was measured multiplying 100M-digit
-    // integers — minutes of driver CPU and GBs of BigInteger magnitude
-    // arrays, in `rewriteStatsAndConstraints`, before any task ran.
-    // Rebuilding each generation from the materialized RDD through the
-    // public Row API resets the estimate to the leaf default (constant
-    // digits, so per-round stats work is O(1)); the label relation is two
-    // longs per row, so the Row round-trip is noise, and the loop's joins
-    // are keyed SMJ by design — no broadcast decision depends on the lost
-    // estimate.
-    def firewall(chk: DataFrame): DataFrame =
-      chk.sparkSession.createDataFrame(chk.rdd, chk.schema)
-    val sym = firewall(Tables.checkpoint(
-      edges.select(col("a"), col("b"))
-        .union(edges.select(col("b").as("a"), col("a").as("b")))))
-    // Seed labels at min(id, min neighbor) straight off the edge agg — one
-    // shuffle replacing the r12 distinct+self-label AND the first
-    // propagation round (r13). (r14 A/B note: self-loop edges replacing
-    // the per-round union(labels, prop) were measured and REJECTED —
-    // 6.24 s vs 5.44 s median for q_knn_clusters in adjacent windows.)
-    val gens = new Tables.Generations
-    var labels = firewall(gens.next(
-      sym.groupBy(col("a"))
-        .agg(min(col("b")).as("mnb"))
-        .select(col("a").as("id"), least(col("a"), col("mnb")).as("lbl"))))
-    var iter = 0
-    var converged = false
-    // Seed for the monotone-sum convergence check (see loop body): any
-    // value that can never equal a real Σlbl works; null is that value.
-    var prevSum: java.math.BigDecimal = null
-    while (!converged && iter < maxIter) {
-      val prop = sym.join(labels, sym("b") === labels("id"))
-        .select(sym("a").as("id"), col("lbl"))
-      val propMin = labels.union(prop)
-        .groupBy("id").agg(min("lbl").as("lbl"))
-      // Pointer jump: lbl := min(lbl, lbl(lbl)). Inner join is safe —
-      // every label IS a node id and every node has a labels row.
-      // (A/B notes: r13 rejected label-star edge folding and two-EDGE-
-      // hops-per-round — per-round exchange depth grew faster than rounds
-      // fell. r14 re-measured a FRESH jump (propMin ⋈ propMin instead of
-      // ⋈ labels): rounds 18 → 16 on the sf0.1 mutual-kNN graph but wall
-      // 6.6 → 7.4 s — the tail is edge-propagation-limited, pointer
-      // compression can't shorten it, and the self-join's extra stage
-      // cost more than two rounds. Stale jump stands.)
-      val merged = propMin
-        .join(labels.select(col("id").as("lbl"), col("lbl").as("lbl2")), "lbl")
-        .select(col("id"), least(col("lbl"), col("lbl2")).as("lbl"))
-      // Convergence via the MONOTONE LABEL SUM (r14): every node's label is
-      // non-increasing (new lbl = least of old lbl, neighbor mins, jump),
-      // so Σlbl strictly decreases iff any label changed — equality with
-      // the previous round's sum IS convergence. This replaces the r13
-      // changed-flag join (merged ⋈ labels on id, one more join + label
-      // re-read inside every round's materialized plan) with a single-stage
-      // aggregate over the just-materialized blocks. DECIMAL(38,0): exact —
-      // a long sum could overflow at 1e9 nodes × 1e12 ids; 38 digits
-      // cannot. CCSpec pins deep-chain convergence both ways.
-      val next = firewall(gens.next(merged))
-      val sum = next.agg(org.apache.spark.sql.functions.sum(
-        col("lbl").cast(org.apache.spark.sql.types.DataTypes
-          .createDecimalType(38, 0))).as("s"))
-        .first().getDecimal(0)
-      // A null sum means an empty graph (Σ over zero rows), which converges
-      // at once with no labels. An overflowing sum cannot read as null and
-      // pass for convergence: ANSI mode (Spark 4's default, kept by
-      // Engine.session) throws NUMERIC_VALUE_OUT_OF_RANGE instead (DedupSpec).
-      converged = sum == prevSum
-      prevSum = sum
-      labels = next.select("id", "lbl")
-      iter += 1
-    }
-    if (!converged)
+    // lineage is the whole pair-generation pipeline. The materialized
+    // partitions fix P.
+    val e = Tables.checkpoint(edges.select(col("a"), col("b"))).rdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+    // Partitions per round: P, ⌈P/2⌉, ..., 1.
+    val widths = Iterator.iterate(math.max(e.getNumPartitions, 1))(p => (p + 1) / 2)
+      .takeWhile(_ > 1).toList :+ 1
+    if (widths.size > maxIter)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter iterations " +
-          "(component diameter > 2^maxIter with pointer jumping — labels " +
-          "would be silently partial)")
-    labels
+        s"connectedComponents needs ${widths.size} rounds for " +
+          s"${e.getNumPartitions} edge partitions, over maxIter = $maxIter " +
+          "(labels would be silently partial)")
+    // (vertex, label) for every vertex of `round`'s edges; `next` are the
+    // partition counts of the rounds after it.
+    def label(round: RDD[(Long, Long)], next: List[Int]): RDD[(Long, Long)] = {
+      val roots = round.mapPartitions(localRoots)
+      next match {
+        case Nil => roots
+        case w :: rest =>
+          val seen = roots.aggregateByKey(List.empty[Long], w)(
+            (rs, r) => if (rs.contains(r)) rs else r :: rs,
+            (rs, qs) => (rs ++ qs).distinct)
+          val contracted = seen.flatMap { case (_, rs) =>
+            val g = rs.min
+            rs.filter(_ != g).map(r => (g, r))
+          }
+          seen.map { case (v, rs) => (rs.min, v) }
+            .leftOuterJoin(label(contracted, rest), w)
+            .map { case (g, (v, l)) => (v, l.getOrElse(g)) }
+      }
+    }
+    edges.sparkSession.createDataFrame(label(e, widths.tail)).toDF("id", "lbl")
+  }
+
+  /** Union-find over one partition's edges: each vertex paired with the
+    * least vertex of its component within the partition. The smaller root
+    * always wins a union, so every root is its component's minimum. */
+  private def localRoots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = new scala.collection.mutable.LongMap[Long]
+    def find(v0: Long): Long = {
+      var v = v0
+      var p = parent.getOrElseUpdate(v, v)
+      while (p != v) { // path halving
+        val gp = parent(p)
+        parent(v) = gp
+        v = gp
+        p = parent(v)
+      }
+      v
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(v => (v, find(v)))
   }
 
   /** Exact n-gram Jaccard pair join over distinct (doc_id, s) shingle rows,

@@ -389,9 +389,8 @@ object Similarity {
     //
     // Scale shape: the expensive stage is knnGraph (one label-keyed
     // corpus exchange, see q_knn_graph); everything here downstream runs
-    // on the N·k EDGE relation — min-label propagation with
-    // per-generation checkpoint release (the q_dedup_cluster kernel),
-    // sizes a |clusters|-row aggregate.
+    // on the N·k EDGE relation — two-phase union-find (the
+    // q_dedup_cluster kernel), sizes a |clusters|-row aggregate.
     "q_knn_clusters" -> Q(
       fn = (s, d) => {
         val g = knnGraph(Tables(s, d, "embeddings"), k = 3)

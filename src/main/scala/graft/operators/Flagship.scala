@@ -160,7 +160,10 @@ object Flagship {
     // unique, so max_by is deterministic. Under a TTL the key includes the
     // window; the per-window finals then sum (exact decimal) to the
     // all-time aggregate.
-    val emitted = spark.read.parquet(s"$scratch/out")
+    // Read back with the schema the batches wrote: an inferring read would
+    // run one more Spark job to read a footer.
+    val emitted = spark.read.schema(running.schema.add("batch_id", LongType))
+      .parquet(s"$scratch/out")
     val lastPerKey = emitted
       .groupBy(keyCols ++ (if (ttl.isDefined) Seq(col("win")) else Nil): _*)
       .agg(max_by(col("metric"), col("batch_id")).as("metric"))

@@ -22,7 +22,7 @@ object Sources {
   val qs: Map[String, graft.Q] = Map(
     "q_source_csv" -> graft.Q(
       fn = (s, d) => {
-        val nation = s.read.parquet(s"$d/nation.parquet")
+        val nation = graft.Tables(s, d, "nation")
         // Per-invocation scratch dir (same concurrency rationale as ORC).
         val path = graft.Scratch.fresh("src_csv_nation")
         writeCsv(nation, path)
@@ -36,7 +36,7 @@ object Sources {
     // types; the oracle is the original parquet relation.
     "q_source_xml" -> graft.Q(
       fn = (s, d) => {
-        val part = s.read.parquet(s"$d/part.parquet")
+        val part = graft.Tables(s, d, "part")
         val path = graft.Scratch.fresh("src_xml_part")
         part.write.mode(SaveMode.Overwrite)
           .option("rowTag", "part").format("xml").save(path)
@@ -47,7 +47,7 @@ object Sources {
       oracle = Some("SELECT * FROM part ORDER BY p_partkey")),
     "q_source_json" -> graft.Q(
       fn = (s, d) => {
-        val supplier = s.read.parquet(s"$d/supplier.parquet")
+        val supplier = graft.Tables(s, d, "supplier")
         // Per-invocation scratch dir (same concurrency rationale as ORC).
         val path = graft.Scratch.fresh("src_json_supplier")
         writeJson(supplier, path)
@@ -64,7 +64,7 @@ object Sources {
     // encoding, including the partition column's value round trip).
     "q_sink_partitioned" -> graft.Q(
       fn = (s, d) => {
-        val docsDf = s.read.parquet(s"$d/documents.parquet")
+        val docsDf = graft.Tables(s, d, "documents")
         val path = graft.Scratch.fresh("src_part_documents")
         writeParquet(docsDf, path, partitionBy = Seq("lang"))
         s.read.parquet(path)
@@ -77,7 +77,7 @@ object Sources {
         WHERE lang = 'en' ORDER BY doc_id""")),
     "q_source_orc" -> graft.Q(
       fn = (s, d) => {
-        val customer = s.read.parquet(s"$d/customer.parquet")
+        val customer = graft.Tables(s, d, "customer")
         // Per-invocation scratch dir: a fixed path races when two sessions
         // bench concurrently (one overwrites mid-read of the other).
         val path = graft.Scratch.fresh("src_orc_customer")
@@ -97,7 +97,7 @@ object Sources {
     "q_source_evolution" -> graft.Q(
       fn = (s, d) => {
         import org.apache.spark.sql.functions._
-        val docs = s.read.parquet(s"$d/documents.parquet")
+        val docs = graft.Tables(s, d, "documents")
         val path = graft.Scratch.fresh("src_evo_documents")
         docs.filter(col("doc_id") % 2 === 0)
           .select("doc_id", "lang")
@@ -125,7 +125,7 @@ object Sources {
       fn = (s, d) => {
         import org.apache.spark.sql.functions._
         val path = graft.Scratch.fresh("src_corrupt_json")
-        s.read.parquet(s"$d/documents.parquet")
+        graft.Tables(s, d, "documents")
           .select(when(col("doc_id") % 7 === 0,
               concat(lit("{\"doc_id\":"), col("doc_id"), lit(",\"lang\":")))
             .otherwise(to_json(struct(col("doc_id"), col("lang"))))
@@ -164,10 +164,10 @@ object Sources {
         import graft.Q._
         val tag = ProcessHandle.current().pid()
         val liT = s"li_jb_$tag"; val ordT = s"ord_jb_$tag"
-        writeBucketed(s.read.parquet(s"$d/lineitem.parquet")
+        writeBucketed(graft.Tables(s, d, "lineitem")
           .select("l_orderkey", "l_extendedprice", "l_discount"),
           liT, "l_orderkey", 8)
-        writeBucketed(s.read.parquet(s"$d/orders.parquet")
+        writeBucketed(graft.Tables(s, d, "orders")
           .select("o_orderkey", "o_orderpriority"),
           ordT, "o_orderkey", 8)
         s.table(liT).hint("merge")
@@ -205,7 +205,7 @@ object Sources {
       fn = (s, d) => {
         import org.apache.spark.sql.functions._
         import graft.Q._
-        val target = s.read.parquet(s"$d/orders.parquet")
+        val target = graft.Tables(s, d, "orders")
           .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"),
             dec2(col("o_totalprice")).as("price"),
             lit(0L).as("is_upd"), lit(0L).as("is_ins"))

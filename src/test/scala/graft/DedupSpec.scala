@@ -83,11 +83,10 @@ class DedupSpec extends AnyFunSuite {
 
   test("connectedComponents: pointer jumping converges a diameter-60 chain within 20 iterations") {
     import spark.implicits._
-    // Plain min-label propagation needs `diameter` iterations — 60 > the
-    // default maxIter 20, so this graph is exactly the ADVICE-r9 silent-
-    // partial-labels case. The r10 pointer jump (label of label each
-    // round) halves label depth per iteration, so 20 rounds cover
-    // diameter ~2^20; the loop must converge AND label everything 0.
+    // A chain is the deepest component per edge: min-label propagation
+    // needed `diameter` rounds for it, and 60 is past the default cap of
+    // 20. Union-find needs ⌈log2 P⌉+1 rounds whatever the diameter; every
+    // vertex must be labelled 0.
     val edges = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b")
     val got = Dedup.connectedComponents(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -97,11 +96,37 @@ class DedupSpec extends AnyFunSuite {
 
   test("connectedComponents: non-convergence throws instead of returning partial labels") {
     import spark.implicits._
-    val edges = (0L until 10L).map(i => (i, i + 1)).toDF("a", "b")
+    // Two edge partitions need two rounds; a cap of one must throw before
+    // any round runs rather than label each partition on its own.
+    val edges = (0L until 10L).map(i => (i, i + 1)).toDF("a", "b").repartition(2)
     val e = intercept[IllegalStateException] {
       Dedup.connectedComponents(edges, maxIter = 1)
     }
-    assert(e.getMessage.contains("did not converge"))
+    assert(e.getMessage.contains("over maxIter = 1"), e.getMessage)
+  }
+
+  test("connectedComponents: min-id labels across partitions within ceil(log2 P)+1 rounds") {
+    import spark.implicits._
+    def labels(edges: org.apache.spark.sql.DataFrame, maxIter: Int) =
+      Dedup.connectedComponents(edges, maxIter).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // A 61-vertex chain dealt round-robin over 4 partitions, so adjacent
+    // edges land in different partitions and labels must cross them. 4
+    // partitions take 3 rounds.
+    val chain = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b").repartition(4)
+    val got = labels(chain, maxIter = 3)
+    assert(got == (0L to 60L).map(_ -> 0L).toMap,
+      s"chain not fully labeled: ${got.filter(_._2 != 0L)}")
+    // Two components, one per partition, joined only through vertex 150,
+    // which both partitions hold; the minimum, 7, is in the second. The
+    // pair 200-201 never leaves the first partition.
+    val joined = spark.sparkContext
+      .parallelize(Seq(Seq((100L, 150L), (150L, 120L), (200L, 201L)),
+        Seq((150L, 130L), (130L, 7L))), numSlices = 2)
+      .flatMap(identity).toDF("a", "b")
+    assert(labels(joined, maxIter = 2) == Map(
+      7L -> 7L, 100L -> 7L, 120L -> 7L, 130L -> 7L, 150L -> 7L,
+      200L -> 200L, 201L -> 200L))
   }
 
   test("connectedComponents: an empty edge list yields no labels and does not throw") {

@@ -50,8 +50,7 @@ class EngineSpec extends AnyFunSuite {
     assert(c.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
     assert(c.get("spark.sql.shuffle.partitions") == "4")
     assert(c.get("spark.sql.adaptive.enabled") == "true")
-    // Overflow throws instead of reading as null (connectedComponents'
-    // label-sum convergence check relies on it).
+    // Overflow throws instead of reading as null.
     assert(c.get("spark.sql.ansi.enabled") == "true")
     // CodegenReuseSpec: one compile per generated class per JVM.
     assert(c.get("spark.sql.codegen.cache.maxEntries") == "512")
@@ -77,6 +76,14 @@ class EngineSpec extends AnyFunSuite {
     val builders = mainSourcesContaining("SparkSession.builder")
     assert(builders == List("scala/graft/Engine.scala"),
       s"session builders outside Engine.session: $builders")
+  }
+
+  test("corpus files are read only through Tables") {
+    // Tables memoizes each file's footer schema; a direct read would run
+    // its own footer job.
+    val found = mainSourcesContaining("read.parquet(s\"$d/")
+    assert(found.forall(_ == "scala/graft/Tables.scala"),
+      s"direct corpus reads outside Tables: $found")
   }
 
   test("checkpoint blocks are created and freed only in Tables") {

@@ -122,9 +122,9 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries("q_sample")(spark, TestSpark.sf)
     SparkEntry.queries("q_text_tfidf")(spark, TestSpark.sf)
     val after = sc.statusTracker.getJobIdsForGroup(null).length
-    // Each query construction runs exactly one parquet schema-inference
-    // job (footer read) for its single Tables() call; an eager count()
-    // would add a full-scan job on top.
+    // Each query construction runs at most one footer-read job for its
+    // single Tables() call (none once the session has read that footer);
+    // an eager count() would add a full-scan job on top.
     assert(after - before <= 2,
       s"construction ran ${after - before} jobs — an eager driver-side " +
         "action (count()) is back in the build path")
