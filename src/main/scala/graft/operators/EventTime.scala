@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, Scratch, Tables}
 import graft.Q._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,34 +20,16 @@ import org.apache.spark.sql.types.{DateType, TimestampType}
   */
 object EventTime {
 
-  // Scratch-dir management (shared corpus copy + per-run recycled dirs)
-  // lives in graft.Scratch — see its Scaladoc for the r9 leak rationale.
-  private val Scratch = graft.Scratch
-
-  /** Shuffle-partition count for the REAL-ENGINE streaming keys (r10
-    * verdict ask #2). Each stateful operator spins one state-store
-    * instance per shuffle partition per micro-batch — at the session
-    * default (= CPUs = 32) that is 32 store open/commit cycles per op per
-    * batch on ~10k rows of state, pure fixed overhead that dominated
-    * q_stream_update's 15-26 s battery wall. 4 partitions still exercises
-    * a genuine multi-partition key exchange (cross-partition state
-    * correctness is not weakened — partition count is semantics-neutral,
-    * all eight keys were green at 32) while cutting the per-batch constant
-    * 8×. On a real cluster this is the same knob sized to executors; the
-    * count is pinned per-checkpoint at query start, and every run here
-    * starts a fresh checkpoint dir, so the override always takes. */
-  private val streamShufflePartitions = 4
-
-  /** Run `body` (a streaming start+awaitTermination block) with
-    * spark.sql.shuffle.partitions scoped to [[streamShufflePartitions]],
-    * restoring the session value after — the q_stream_stateful
-    * providerClass pattern. Only the STREAMING query reads the conf (at
-    * start); the surrounding batch plans (scratch setup before, sink
-    * read-back after) are built lazily and execute outside the scope.
-    * Shared implementation in [[graft.Scratch.withStreamShuffle]] (the
-    * streaming flagship in Flagship.scala uses the same scope). */
-  private def withStreamShuffle[T](s: org.apache.spark.sql.SparkSession)(body: => T): T =
-    Scratch.withStreamShuffle(s, streamShufflePartitions)(body)
+  /** RocksDB state store with changelog checkpointing, for the
+    * transformWithState keys. Without the changelog each commit uploads a
+    * FULL store snapshot per partition per batch, a fixed cost whatever
+    * the state size; with it a commit writes only the batch's key changes
+    * and snapshots move to background maintenance. Results are unchanged:
+    * the changelog replays to the same store. */
+  private val RocksDbChangelog = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   val qs: Map[String, Q] = Map(
 
@@ -636,7 +618,7 @@ object EventTime {
     // and the watermark bounds its lifetime — state is O(events inside
     // the watermark window), never O(stream). The sink is append-mode
     // parquet (exactly-once via the checkpoint's batch commit log).
-    // Single-batch dependence (ADVICE r9): the oracle (every event exactly
+    // Single-batch dependence: the oracle (every event exactly
     // once) relies on BOTH source branches ingesting all files in ONE
     // micro-batch — no maxFilesPerTrigger is set, so the file source takes
     // everything available, and the watermark is still at epoch during that
@@ -655,19 +637,9 @@ object EventTime {
         val dupes = s.readStream.schema(Scratch.inputSchema).parquet(in)
           .filter(col("event_id") % 7 === 0)
           .withColumn("ts", col("ts") + expr("INTERVAL 30 SECONDS"))
-        val scratch = Scratch.fresh("stream_dedup")
         val deduped = graft.streaming.Streams.dedupWithinWatermark(
           events.union(dupes), "10 minutes")
-        withStreamShuffle(s) {
-          deduped.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_dedup", deduped)._1
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_events"),
             min(col("event_id")).as("min_id"),
@@ -704,23 +676,13 @@ object EventTime {
     "q_stream_tumbling" -> Q(
       fn = (s, d) => {
         val in = s"${Scratch.sharedInput(s, d)}/in"
-        val scratch = Scratch.fresh("stream_tumb")
         val agg = graft.streaming.Streams.tumblingWithWatermark(
           s.readStream.schema(Scratch.inputSchema).parquet(in)
             .select(col("ts"), col("event_type"), col("value")),
           "10 minutes")
-        withStreamShuffle(s) {
-          agg.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
         // Back to NTZ for the oracle compare (UTC session TZ ⇒ value-stable;
         // the cast to TIMESTAMP above was only for the watermark's benefit).
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_tumb", agg)._1
           .withColumn("w_start", col("w_start").cast("timestamp_ntz"))
           .orderBy("w_start", "event_type")
       },
@@ -738,8 +700,8 @@ object EventTime {
         ORDER BY w_start, event_type""")),
 
     // LEFT-OUTER stream-stream interval join THROUGH THE STREAMING ENGINE
-    // (r9 verdict ask #5 — the watermark-gated null-extension semantic that
-    // was MemoryStream-tested only): signups joined to same-user purchases
+    // (the watermark-gated null-extension semantic, also MemoryStream-tested
+    // in StreamingSpec): signups joined to same-user purchases
     // within 1 hour AFTER the signup, with unmatched signups emitted
     // null-extended once the engine KNOWS no match can still arrive. Both
     // branches read the shared scratch corpus in ONE micro-batch (watermark
@@ -761,22 +723,12 @@ object EventTime {
       fn = (s, d) => {
         val in = s"${Scratch.sharedInput(s, d)}/in"
         def branch() = s.readStream.schema(Scratch.inputSchema).parquet(in)
-        val scratch = Scratch.fresh("stream_ileft")
         val joined = graft.streaming.Streams.signupToPurchase(
           branch().filter(col("event_type") === "signup"),
           branch().filter(col("event_type") === "purchase"),
           within = "1 hour", joinType = "left_outer")
-        withStreamShuffle(s) {
-          joined.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
         // Back to NTZ for the oracle compare (UTC session TZ ⇒ value-stable).
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_ileft", joined)._1
           .withColumn("signup_ts", col("signup_ts").cast("timestamp_ntz"))
           .withColumn("purchase_ts", col("purchase_ts").cast("timestamp_ntz"))
           .orderBy(col("signup_id").asc, col("purchase_id").asc_nulls_first)
@@ -830,59 +782,21 @@ object EventTime {
       fn = (s, d) => {
         import s.implicits._
         val in = s"${Scratch.sharedInput(s, d)}/in"
-        val scratch = Scratch.fresh("stream_state")
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // Changelog checkpointing (r14, guide §6): the default RocksDB
-        // commit uploads a FULL store snapshot (zip of sst files) per
-        // partition per batch — at 4 partitions × 4 batches that is 16
-        // snapshot uploads of fixed cost regardless of state size, and the
-        // r13 battery priced this key 2.5× its HDFS-store twin
-        // (q_stream_legacy_state, same shape). With changelog
-        // checkpointing each commit writes only the batch's key changes;
-        // snapshots move to background maintenance. State semantics and
-        // results are unchanged (the changelog replays to the same store).
-        val prevClog = s.conf.getOption(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-        s.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-        try {
-          // cents are derived map-side AFTER the source (the shared scratch
-          // carries the raw corpus columns); the double→DECIMAL(12,2)→×100
-          // cast chain matches the oracle exactly as before.
-          val cum = graft.streaming.Streams.cumulativePerUser(
-            s.readStream.schema(Scratch.inputSchema)
-              .option("maxFilesPerTrigger", "2")
-              .parquet(in)
-              .select(col("event_id"), col("user_id"),
-                (dec2(col("value")) * 100)
-                  .cast(org.apache.spark.sql.types.LongType).as("cents"))
-              .as[graft.streaming.Streams.ECents])
-          withStreamShuffle(s) {
-            cum.writeStream
-              .format("parquet")
-              .option("path", s"$scratch/out")
-              .option("checkpointLocation", s"$scratch/ck")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-              .awaitTermination()
-          }
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-            case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-          prevClog match {
-            case Some(p) => s.conf.set(
-              "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", p)
-            case None => s.conf.unset(
-              "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-          }
+        // cents are derived map-side AFTER the source (the shared scratch
+        // carries the raw corpus columns); the double→DECIMAL(12,2)→×100
+        // cast chain matches the oracle exactly.
+        val cum = graft.streaming.Streams.cumulativePerUser(
+          s.readStream.schema(Scratch.inputSchema)
+            .option("maxFilesPerTrigger", "2")
+            .parquet(in)
+            .select(col("event_id"), col("user_id"),
+              (dec2(col("value")) * 100)
+                .cast(org.apache.spark.sql.types.LongType).as("cents"))
+            .as[graft.streaming.Streams.ECents])
+        val out = Scratch.withConf(s, RocksDbChangelog: _*) {
+          Scratch.drain(s, "stream_state", cum)._1
         }
-        s.read.parquet(s"$scratch/out")
-          .groupBy("user_id")
+        out.groupBy("user_id")
           .agg(max(col("n_events")).as("n_events"),
             max_by(col("cents"), col("n_events")).as("cents"),
             max_by(col("min_id"), col("n_events")).as("min_id"),
@@ -935,7 +849,6 @@ object EventTime {
     // are a test-harness artifact standing in for an ingest directory.
     "q_stream_late_drop" -> Q(
       fn = (s, d) => {
-        val scratch = Scratch.fresh("stream_late")
         val inDir = Scratch.lateDropInput(s, d)
         val agg = graft.streaming.Streams.tumblingWithWatermark(
           s.readStream.schema(Scratch.inputSchema)
@@ -943,16 +856,7 @@ object EventTime {
             .parquet(inDir)
             .select(col("ts"), col("event_type"), col("value")),
           "10 minutes")
-        withStreamShuffle(s) {
-          agg.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_late", agg)._1
           .withColumn("w_start", col("w_start").cast("timestamp_ntz"))
           .orderBy("w_start", "event_type")
       },
@@ -999,7 +903,6 @@ object EventTime {
       fn = (s, d) => {
         import s.implicits._
         val in = s"${Scratch.sharedInput(s, d)}/in"
-        val scratch = Scratch.fresh("stream_legacy")
         val cum = graft.streaming.Streams.runningPerUserLegacy(
           s.readStream.schema(Scratch.inputSchema)
             .option("maxFilesPerTrigger", "2")
@@ -1008,16 +911,7 @@ object EventTime {
               (dec2(col("value")) * 100)
                 .cast(org.apache.spark.sql.types.LongType).as("cents"))
             .as[graft.streaming.Streams.ECents])
-        withStreamShuffle(s) {
-          cum.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_legacy", cum)._1
           .groupBy("user_id")
           .agg(max(col("n_events")).as("n_events"),
             max_by(col("cents"), col("n_events")).as("cents"),
@@ -1054,45 +948,13 @@ object EventTime {
       fn = (s, d) => {
         import s.implicits._
         val in = s"${Scratch.sharedInput(s, d)}/in"
-        val scratch = Scratch.fresh("stream_timer")
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // Changelog checkpointing — same rationale and result-neutrality
-        // as q_stream_stateful (commit writes the batch's changes, not a
-        // full snapshot zip per partition per batch).
-        val prevClog = s.conf.getOption(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-        s.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-        try {
-          val closed = graft.streaming.Streams.timerClose(
-            s.readStream.schema(Scratch.inputSchema).parquet(in)
-              .as[graft.streaming.Streams.Event])
-          withStreamShuffle(s) {
-            closed.writeStream
-              .format("parquet")
-              .option("path", s"$scratch/out")
-              .option("checkpointLocation", s"$scratch/ck")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-              .awaitTermination()
-          }
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-            case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-          prevClog match {
-            case Some(p) => s.conf.set(
-              "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", p)
-            case None => s.conf.unset(
-              "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-          }
+        val closed = graft.streaming.Streams.timerClose(
+          s.readStream.schema(Scratch.inputSchema).parquet(in)
+            .as[graft.streaming.Streams.Event])
+        val out = Scratch.withConf(s, RocksDbChangelog: _*) {
+          Scratch.drain(s, "stream_timer", closed)._1
         }
-        s.read.parquet(s"$scratch/out")
-          .withColumn("closed_at", col("closed_at").cast("timestamp_ntz"))
+        out.withColumn("closed_at", col("closed_at").cast("timestamp_ntz"))
           .orderBy("user_id")
       },
       oracle = Some("""
@@ -1115,9 +977,10 @@ object EventTime {
     // the (window, type) groups that received a non-late row in b, with
     // counts cumulative over kept rows through b; the late filter is the
     // same lag-2 watermarkForLateEvents ladder q_stream_late_drop pins.
-    // The parquet sink is append-only, so the update stream lands via
-    // foreachBatch with the batch id stamped on — which also makes the
-    // per-batch emission timing part of the hash-checked contract.
+    // The parquet sink is append-only, so the update stream lands through
+    // drain's foreachBatch sink with the batch id stamped on — which also
+    // makes the per-batch emission timing part of the hash-checked
+    // contract.
     // Watermark eviction in update mode removes closed windows silently
     // (their updates were already emitted), so no final-batch rows.
     //
@@ -1125,7 +988,6 @@ object EventTime {
     // per batch is O(groups touched in the batch), not O(state).
     "q_stream_update" -> Q(
       fn = (s, d) => {
-        val scratch = Scratch.fresh("stream_upd")
         val in = Scratch.lateDropInput(s, d)
         val agg = graft.streaming.Streams.tumblingWithWatermark(
           s.readStream.schema(Scratch.inputSchema)
@@ -1133,27 +995,7 @@ object EventTime {
             .parquet(in)
             .select(col("ts"), col("event_type"), col("value")),
           "10 minutes")
-        withStreamShuffle(s) {
-          val q = agg.writeStream
-            .outputMode("update")
-            // Idempotent per-batch sink (ADVICE r10): foreachBatch can
-            // re-run a failed micro-batch, and a flat Append target would
-            // land its rows twice. Each batch OVERWRITES its own
-            // batch-id-keyed subdirectory instead, so a retry replaces
-            // rather than duplicates — the documented foreachBatch
-            // exactly-once recipe. The b=<id> partition-style name keeps
-            // the root readable as one parquet relation.
-            .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-              df.withColumn("batch_id", lit(id))
-                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$scratch/out/b=$id")
-            }
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_upd", agg, outputMode = "update")._1
           .withColumn("w_start", col("w_start").cast("timestamp_ntz"))
           .select(col("batch_id"), col("w_start"), col("event_type"),
             col("n"), col("total"))
@@ -1186,8 +1028,8 @@ object EventTime {
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         ORDER BY batch_id, w_start, event_type""")),
 
-    // RIGHT-outer stream-stream interval join THROUGH THE STREAMING ENGINE
-    // (r10 verdict ask #3): the mirror image of q_stream_interval_left —
+    // RIGHT-outer stream-stream interval join THROUGH THE STREAMING ENGINE:
+    // the mirror image of q_stream_interval_left —
     // purchases with no same-user signup in the PRECEDING hour emit
     // null-extended once the engine knows no signup can still arrive.
     // The two sides' eviction bounds are ASYMMETRIC because the interval
@@ -1209,21 +1051,11 @@ object EventTime {
       fn = (s, d) => {
         val in = s"${Scratch.sharedInput(s, d)}/in"
         def branch() = s.readStream.schema(Scratch.inputSchema).parquet(in)
-        val scratch = Scratch.fresh("stream_iright")
         val joined = graft.streaming.Streams.signupToPurchase(
           branch().filter(col("event_type") === "signup"),
           branch().filter(col("event_type") === "purchase"),
           within = "1 hour", joinType = "right_outer")
-        withStreamShuffle(s) {
-          joined.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_iright", joined)._1
           .withColumn("signup_ts", col("signup_ts").cast("timestamp_ntz"))
           .withColumn("purchase_ts", col("purchase_ts").cast("timestamp_ntz"))
           .orderBy(col("purchase_id").asc, col("signup_id").asc_nulls_first)
@@ -1256,8 +1088,8 @@ object EventTime {
         UNION ALL SELECT * FROM unmatched
         ORDER BY purchase_id, signup_id NULLS FIRST""")),
 
-    // FULL-outer stream-stream interval join THROUGH THE STREAMING ENGINE
-    // (r10 verdict ask #3): both unmatched sides null-extend, each under
+    // FULL-outer stream-stream interval join THROUGH THE STREAMING ENGINE:
+    // both unmatched sides null-extend, each under
     // its OWN eviction bound (signup_ts + 1h < wm on the left,
     // purchase_ts < wm on the right — see q_stream_interval_right for the
     // asymmetry argument). The emitted relation is exactly
@@ -1268,21 +1100,11 @@ object EventTime {
       fn = (s, d) => {
         val in = s"${Scratch.sharedInput(s, d)}/in"
         def branch() = s.readStream.schema(Scratch.inputSchema).parquet(in)
-        val scratch = Scratch.fresh("stream_ifull")
         val joined = graft.streaming.Streams.signupToPurchase(
           branch().filter(col("event_type") === "signup"),
           branch().filter(col("event_type") === "purchase"),
           within = "1 hour", joinType = "full_outer")
-        withStreamShuffle(s) {
-          joined.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_ifull", joined)._1
           .withColumn("signup_ts", col("signup_ts").cast("timestamp_ntz"))
           .withColumn("purchase_ts", col("purchase_ts").cast("timestamp_ntz"))
           .orderBy(col("signup_id").asc_nulls_first,
@@ -1324,8 +1146,7 @@ object EventTime {
         UNION ALL SELECT * FROM un_p
         ORDER BY signup_id NULLS FIRST, purchase_id NULLS FIRST""")),
 
-    // CHAINED MULTI-STATEFUL-OPERATOR streaming pipeline (r10 verdict ask
-    // #4): a stream-stream interval join FEEDING a windowed aggregation in
+    // CHAINED MULTI-STATEFUL-OPERATOR streaming pipeline: a stream-stream interval join FEEDING a windowed aggregation in
     // ONE query — the pipeline shape the watermarkForLateEvents /
     // watermarkForEviction split exists for (see q_stream_late_drop's
     // ladder decompile at the wm comments above). Over the deterministic
@@ -1379,7 +1200,6 @@ object EventTime {
     // exchanges the semantics require.
     "q_stream_chained" -> Q(
       fn = (s, d) => {
-        val scratch = Scratch.fresh("stream_chain")
         val in = Scratch.lateDropInput(s, d)
         def branch() = s.readStream.schema(Scratch.inputSchema)
           .option("maxFilesPerTrigger", "1").parquet(in)
@@ -1394,19 +1214,7 @@ object EventTime {
             min(col("signup_id")).as("min_sid"))
           .select(col("window.start").as("w_start"), col("n_conv"),
             col("sum_pid"), col("min_sid"))
-        withStreamShuffle(s) {
-          val q = agg.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          // Last micro-batch's executed plan for the plans/ evidence (a
-          // formatted Explain of this key only shows the read-back tail).
-          if (sys.env.get("SPARK_GRAFT_EXPLAIN_STREAM").contains("1")) q.explain()
-        }
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_chain", agg)._1
           .withColumn("w_start", col("w_start").cast("timestamp_ntz"))
           .orderBy("w_start")
       },
@@ -1423,8 +1231,8 @@ object EventTime {
         -- over watermark nodes and an unset node pins it at epoch — if a
         -- batch prefix contains no signups (or no purchases) the oracle
         -- must stay at epoch too, not advance on the populated side
-        -- (ADVICE r11; vacuous at sf>=0.01 where every prefix has both).
-        -- GREATEST floor at epoch (ADVICE r12): Spark's global watermark
+        -- (vacuous at sf>=0.01 where every prefix has both).
+        -- GREATEST floor at epoch: Spark's global watermark
         -- initializes at 0 and is monotone non-negative, so an empty
         -- prefix must pin the oracle at epoch exactly — not epoch minus
         -- the 10-minute delay (vacuous on this corpus, exact in principle).
@@ -1468,7 +1276,7 @@ object EventTime {
         FROM kept GROUP BY w_start
         ORDER BY w_start""")),
 
-    // OUTER-join → windowed-agg chain (r11 verdict ask #4): q_stream_chained
+    // OUTER-join → windowed-agg chain: q_stream_chained
     // with joinType = left_outer — the one streaming composition with no
     // key until now: NULL-EXTENDED rows reaching a downstream
     // watermark-gated aggregation. The null-extension rules compose with
@@ -1496,15 +1304,11 @@ object EventTime {
     // outer-state bookkeeping — both states still watermark-evicted.
     "q_stream_chained_outer" -> Q(
       fn = (s, d) => {
-        val scratch = Scratch.fresh("stream_chain_outer")
         val in = Scratch.lateDropInput(s, d)
-        // (r14 A/B note: a single-source self-join spelling — one
-        // FileStreamSource, both branches filtered from it — was measured
-        // and REJECTED: 2.66 s vs 2.58 s here in adjacent quiet windows.
-        // The two-source overhead it targeted (per-trigger source-log
-        // appends + listings) had already collapsed to ~1 ms/batch under
-        // the direct checkpoint-I/O manager, and per-batch queryPlanning
-        // did not drop. Oracle was green both ways.)
+        // One file source per branch: a single-source spelling (both
+        // branches filtered from one FileStreamSource) is no faster, since a
+        // source's per-trigger log append and listing cost ~1 ms a batch
+        // under the direct checkpoint-I/O manager.
         def branch() = s.readStream.schema(Scratch.inputSchema)
           .option("maxFilesPerTrigger", "1").parquet(in)
         val joined = graft.streaming.Streams.signupToPurchase(
@@ -1519,19 +1323,7 @@ object EventTime {
             min(col("signup_id")).as("min_sid"))
           .select(col("window.start").as("w_start"), col("n_rows"),
             col("n_conv"), col("sum_pid"), col("min_sid"))
-        withStreamShuffle(s) {
-          val q = agg.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          // Last micro-batch's executed plan for the plans/ evidence (a
-          // formatted Explain of this key only shows the read-back tail).
-          if (sys.env.get("SPARK_GRAFT_EXPLAIN_STREAM").contains("1")) q.explain()
-        }
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_chain_outer", agg)._1
           .withColumn("w_start", col("w_start").cast("timestamp_ntz"))
           .orderBy("w_start")
       },
@@ -1549,7 +1341,7 @@ object EventTime {
         pu AS (SELECT b AS bp, event_id AS purchase_id, user_id AS p_user,
                       ts AS purchase_ts FROM e WHERE event_type = 'purchase'),
         bs4 AS (SELECT unnest([0, 1, 2, 3]) AS b),
-        -- GREATEST floor at epoch (ADVICE r12): Spark's global watermark
+        -- GREATEST floor at epoch: Spark's global watermark
         -- initializes at 0 and is monotone non-negative, so an empty
         -- prefix must pin the oracle at epoch exactly — not epoch minus
         -- the 10-minute delay (vacuous on this corpus, exact in principle).
@@ -1609,7 +1401,7 @@ object EventTime {
         FROM kept GROUP BY w_start
         ORDER BY w_start""")),
 
-    // STREAMING CDC APPLY (r11) — the change-data-capture consumer a real
+    // STREAMING CDC APPLY — the change-data-capture consumer a real
     // ingest pipeline runs: a stream of per-user change events merged into
     // a persistent target with UPSERT-IF-NEWER semantics and DELETE
     // tombstones (event_type='error' marks the user deleted), via the
@@ -1637,52 +1429,54 @@ object EventTime {
         val in = Scratch.lateDropInput(s, d)
         val stateRoot = s"$scratch/state"
         // Highest state version actually WRITTEN, recorded by the
-        // foreachBatch function itself (it runs on the driver) — the
-        // cluster-clean read-back the r11 verdict asked for: no
+        // foreachBatch function itself (it runs on the driver): no
         // java.io.File listing of the state root (local-FS-only on a real
         // HDFS/S3 deployment), and immune to a trailing no-data batch
         // bumping lastProgress.batchId past the last version written.
         val lastVersion = new java.util.concurrent.atomic.AtomicLong(-1L)
-        // No withStreamShuffle here (the foreachBatch merge runs BATCH
-        // plans that keep the session partitioning), but the checkpoint
-        // I/O manager still applies — local scratch, same rationale.
-        Scratch.withLocalCheckpointIo(s) {
-        val q = s.readStream.schema(Scratch.inputSchema)
+        val changes = s.readStream.schema(Scratch.inputSchema)
           .option("maxFilesPerTrigger", "1")
           .parquet(in)
           .select(col("user_id"), col("ts"), col("event_id"),
             col("event_type"), col("value"))
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-            val s2 = df.sparkSession
-            val prev =
-              if (id == 0L)
-                s2.createDataFrame(s2.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  df.schema)
-              else s2.read.parquet(s"$stateRoot/v=${id - 1}")
-            prev.unionByName(df)
-              .groupBy("user_id")
-              .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
-                col("value"))).as("m"))
-              .select(col("user_id"), col("m.ts").as("ts"),
-                col("m.event_id").as("event_id"),
-                col("m.event_type").as("event_type"),
-                col("m.value").as("value"))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$stateRoot/v=$id")
-            lastVersion.updateAndGet(v => math.max(v, id))
-            ()
-          }
-          .option("checkpointLocation", s"$scratch/ck")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        // Every state version has the change stream's schema; reading it
+        // declared avoids a footer job per read.
+        val schema = changes.schema
+        // Not drained: the foreachBatch merge runs BATCH plans that keep
+        // the session partitioning, but the checkpoint I/O manager still
+        // applies — local scratch, same rationale.
+        Scratch.withLocalCheckpointIo(s) {
+          val q = changes.writeStream
+            .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+              val s2 = df.sparkSession
+              val prev =
+                if (id == 0L)
+                  s2.createDataFrame(s2.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                    schema)
+                else s2.read.schema(schema).parquet(s"$stateRoot/v=${id - 1}")
+              prev.unionByName(df)
+                .groupBy("user_id")
+                .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
+                  col("value"))).as("m"))
+                .select(col("user_id"), col("m.ts").as("ts"),
+                  col("m.event_id").as("event_id"),
+                  col("m.event_type").as("event_type"),
+                  col("m.value").as("value"))
+                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                .parquet(s"$stateRoot/v=$id")
+              lastVersion.updateAndGet(v => math.max(v, id))
+              ()
+            }
+            .option("checkpointLocation", s"$scratch/ck")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
         }
         // Zero micro-batches (empty input dir) would leave no state version
-        // at all — fail loudly rather than NPE on a phantom read (ADVICE r11).
+        // at all — fail loudly rather than NPE on a phantom read.
         val finalV = lastVersion.get()
         if (finalV < 0) sys.error("cdc_apply: no state versions written (empty input)")
-        s.read.parquet(s"$stateRoot/v=$finalV")
+        s.read.schema(schema).parquet(s"$stateRoot/v=$finalV")
           .filter(col("event_type") =!= "error")
           .withColumn("ts", col("ts").cast("timestamp_ntz"))
           .orderBy("user_id")
@@ -1698,7 +1492,7 @@ object EventTime {
         FROM ranked WHERE rn = 1 AND event_type <> 'error'
         ORDER BY user_id""")),
 
-    // Second CHAINED multi-stateful shape (r11): stateful DEDUP feeding a
+    // Second CHAINED multi-stateful shape: stateful DEDUP feeding a
     // windowed aggregation in ONE query — the ingest-then-aggregate
     // pipeline (dedup retries, then hourly rollup) as one streaming plan.
     // Unlike the join→agg chain, dropDuplicatesWithinWatermark emits rows
@@ -1724,7 +1518,6 @@ object EventTime {
           .filter(col("event_id") % 5 === 0 &&
             expr("unix_millis(ts) % 3600000 < 3555000"))
           .withColumn("ts", col("ts") + expr("INTERVAL 45 SECONDS"))
-        val scratch = Scratch.fresh("stream_dedup_agg")
         val deduped = graft.streaming.Streams.dedupWithinWatermark(
           events.union(dupes), "10 minutes")
         val agg = deduped
@@ -1732,16 +1525,7 @@ object EventTime {
           .agg(count(lit(1)).as("n"), dec4(sum(dec2(col("value")))).as("total"))
           .select(col("window.start").as("w_start"), col("event_type"),
             col("n"), col("total"))
-        withStreamShuffle(s) {
-          agg.writeStream
-            .format("parquet")
-            .option("path", s"$scratch/out")
-            .option("checkpointLocation", s"$scratch/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        s.read.parquet(s"$scratch/out")
+        Scratch.drain(s, "stream_dedup_agg", agg)._1
           .withColumn("w_start", col("w_start").cast("timestamp_ntz"))
           .orderBy("w_start", "event_type")
       },

@@ -68,16 +68,14 @@ object Flagship {
     * on (group, entity, window(tsCol, window)) under withWatermark(tsCol,
     * delay), so the engine EVICTS every window older than the watermark —
     * state is O(|groups × entities in the active horizon|), not the whole
-    * entity catalog's history (r12 verdict ask #2: the previous spelling
-    * held every (group, entity) key forever). */
+    * entity catalog's history. */
   private[graft] final case class StateTtl(tsCol: String, window: String, delay: String)
 
   /** STREAMING top-N-per-group, maintained INCREMENTALLY by the real
-    * engine (r11 verdict ask #2; generalized for config-driven streaming
-    * mode, r12 ask #8). The fact stream feeds an update-mode running
-    * aggregation keyed on (group, entity[, event-time window]) and lands
-    * through the q_stream_update batch-id-versioned foreachBatch recipe
-    * (idempotent: a retried batch OVERWRITES its own b=<id> dir). The
+    * engine (also the config-driven job's `mode: streaming`). The fact
+    * stream feeds an update-mode running aggregation keyed on (group,
+    * entity[, event-time window]) and drains through [[graft.Scratch.drain]]'s
+    * batch-id-versioned update sink. The
     * rank-≤-n filter runs on the FINAL state — each key's last emission,
     * recovered as max_by(metric, batch_id) — because top-N membership is
     * only meaningful over the settled aggregate; re-ranking per batch would
@@ -116,8 +114,6 @@ object Flagship {
       scratchKey: String,
       ttl: Option[StateTtl])
       : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val Scratch = graft.Scratch
-    val scratch = Scratch.fresh(scratchKey)
     val keyCols = (groupCols ++ entityCols).map(col)
     // Emissions stay DECIMAL (scale 4 keeps every 2dp×2dp product exact);
     // only the final board column is cast to double — summing per-window
@@ -131,39 +127,12 @@ object Flagship {
         stream.groupBy(keyCols: _*)
           .agg(sum(metric).cast(Q.Dec18).as("metric"))
     }
-    val progresses = Scratch.withStreamShuffle(spark) {
-      val q = running.writeStream
-        .outputMode("update")
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          // (r14 A/B note: df.coalesce(1) before this write was measured
-          // and REJECTED — 4.18 s vs 3.69 s median: the coalesce folds
-          // into the stateful-agg read and serializes the state-store
-          // partitions into one task; the 4-file commit it saved was
-          // cheaper. Same-layout write stands.)
-          df.withColumn("batch_id", lit(id))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$scratch/out/b=$id")
-          ()
-        }
-        .option("checkpointLocation", s"$scratch/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // Plan evidence for the judge's plans/ files (the formatted Explain
-      // tool only sees the batch read-back tail; the claims about the
-      // per-micro-batch plan need the stream's own executed plan). Gated —
-      // prints the LAST batch's physical plan to stderr.
-      if (sys.env.get("SPARK_GRAFT_EXPLAIN_STREAM").contains("1")) q.explain()
-      q.recentProgress.toSeq
-    }
+    val (emitted, progresses) =
+      graft.Scratch.drain(spark, scratchKey, running, outputMode = "update")
     // Final state per key = the last update it emitted; (key, batch_id) is
     // unique, so max_by is deterministic. Under a TTL the key includes the
     // window; the per-window finals then sum (exact decimal) to the
     // all-time aggregate.
-    // Read back with the schema the batches wrote: an inferring read would
-    // run one more Spark job to read a footer.
-    val emitted = spark.read.schema(running.schema.add("batch_id", LongType))
-      .parquet(s"$scratch/out")
     val lastPerKey = emitted
       .groupBy(keyCols ++ (if (ttl.isDefined) Seq(col("win")) else Nil): _*)
       .agg(max_by(col("metric"), col("batch_id")).as("metric"))
@@ -195,12 +164,11 @@ object Flagship {
     val fact = spark.readStream.schema(graft.Scratch.flagshipSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(in)
-    // r13: PRE-REDUCE the static side. A stream-static broadcast join
+    // PRE-REDUCE the static side. A stream-static broadcast join
     // re-executes its static subtree on EVERY micro-batch (no cross-batch
-    // exchange reuse in MicroBatchExecution), so the r12 spelling re-scanned
-    // four parquet dims and re-built four broadcasts per trigger — measured
-    // 0.7-1.4 s addBatch per batch, ~40% of it the static side. The
-    // geography chain collapses associatively to one (s_suppkey → r_name)
+    // exchange reuse in MicroBatchExecution), so joining the raw dims would
+    // re-scan four parquet tables and re-build four broadcasts per trigger.
+    // The geography chain collapses associatively to one (s_suppkey → r_name)
     // relation and part projects to (p_partkey, p_name); both are
     // checkpointed once per run so each batch's re-build reads
     // dimension-sized in-memory blocks instead of re-running scans+joins.

@@ -31,8 +31,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * is indistinguishable from the crash having hit one trigger earlier; the
   * run restarts from a fresh scratch dir either way).
   *
-  * Scope: selected per streaming block by [[graft.Scratch.withStreamShuffle]]
-  * via `spark.sql.streaming.checkpointFileManagerClass`. The direct write
+  * Scope: selected per streaming run by [[graft.Scratch.drain]] and
+  * [[graft.Scratch.withLocalCheckpointIo]] via
+  * `spark.sql.streaming.checkpointFileManagerClass`. The direct write
   * applies only to paths whose scheme is `file`; any other scheme (HDFS,
   * S3, ...) takes the stock temp-file + rename protocol, because
   * multi-writer atomicity is load-bearing there. So a checkpoint

@@ -2,11 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins for the r14 scratch-reaping and local checkpoint-I/O internals:
-  * the tombstone queue (unique names, no overlap with timed regions, no
-  * leak on rapid re-invocation — r13 ADVICE items) and the direct-write
-  * checkpoint file manager's contract (atomic-create semantics preserved,
-  * bytes round-trip — the streaming family's per-batch commit path).
+/** Pins for the scratch-reaping, streaming-run and local checkpoint-I/O
+  * internals: the tombstone queue (unique names, no overlap with timed
+  * regions, no leak on rapid re-invocation), `Scratch.drain`'s scoped
+  * confs and job-free read-back, and the direct-write checkpoint file
+  * manager's contract (atomic-create semantics preserved, bytes round-trip
+  * — the streaming family's per-batch commit path).
   */
 class ScratchInfraSpec extends AnyFunSuite {
 
@@ -41,6 +42,64 @@ class ScratchInfraSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"tombstones leaked after reap: $leaked")
     // The live (latest) dir still exists until the next fresh/exit.
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dirs.last)))
+  }
+
+  test("drain: a stream that throws mid-run leaves the session as it found it") {
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions._
+    val parts = "spark.sql.shuffle.partitions"
+    val ckptMgr = "spark.sql.streaming.checkpointFileManagerClass"
+    val scoped = "spark.graft.spec.scoped"
+    val sessionParts = spark.conf.get(parts)
+    // Not drain's 4, so a missed restore shows.
+    spark.conf.set(parts, "3")
+    try {
+      val before = spark.conf.getAll
+      assert(!before.contains(ckptMgr) && !before.contains(scoped))
+      val boom = udf { (id: Long) =>
+        if (id >= 0) throw new IllegalStateException("boom")
+        id
+      }
+      val failing = spark.readStream.schema(Scratch.inputSchema)
+        .parquet(s"${Scratch.sharedInput(spark, TestSpark.sf)}/in")
+        .select(boom(col("event_id")).as("event_id"))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        Scratch.withConf(spark, scoped -> "on") {
+          Scratch.drain(spark, "spec_drain_fail", failing)
+        }
+      }
+      assert(e.getMessage.contains("boom"), e.getMessage)
+      val after = spark.conf.getAll
+      val changed = (after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)
+      assert(changed.isEmpty, s"session confs changed: $changed")
+    } finally spark.conf.set(parts, sessionParts)
+  }
+
+  test("drain: building the read-back frame starts no Spark job") {
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions._
+    val stream = spark.readStream.schema(Scratch.inputSchema)
+      .parquet(s"${Scratch.sharedInput(spark, TestSpark.sf)}/in")
+      .select(col("event_id"), col("event_type"))
+    val events = Tables(spark, TestSpark.sf, "events").count()
+    for ((mode, columns) <- Seq(
+        "append" -> Seq("event_id", "event_type"),
+        "update" -> Seq("event_id", "event_type", "batch_id"))) {
+      var out: org.apache.spark.sql.DataFrame = null
+      var runId = ""
+      val groups = TestSpark.jobGroupsOf {
+        val (back, progress) = Scratch.drain(spark, s"spec_drain_$mode", stream, mode)
+        out = back
+        runId = progress.head.runId.toString
+      }
+      // Every job belongs to the stream's own run (its job group is the
+      // run id); a job in any other group came from the read-back.
+      assert(groups.nonEmpty && groups.forall(_ == runId),
+        s"$mode: jobs outside the stream's run: ${groups.filterNot(_ == runId)}")
+      assert(out.columns.toSeq == columns, mode)
+      assert(out.count() == events, mode)
+    }
+    Scratch.reapTombstones()
   }
 
   test("LocalDirectCheckpointFileManager: atomic-create contract and round trip") {

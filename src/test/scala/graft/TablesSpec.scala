@@ -2,38 +2,13 @@ package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tables` reads each corpus file's footer schema once per session. */
 class TablesSpec extends AnyFunSuite {
+  import TestSpark.jobGroupsOf
   private lazy val spark = TestSpark.spark
-
-  /** Job groups of the jobs `body` starts. A sentinel job runs last; the
-    * listener bus delivers events in order, so once the sentinel's start
-    * is seen, every earlier job's start has been seen too. */
-  private def jobGroupsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobGroup("tables-spec-sentinel", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("tables-spec-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("tables-spec-sentinel"), "sentinel job not seen")
-    } finally sc.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    groups.asScala.toSeq.filter(_ != "tables-spec-sentinel")
-  }
 
   test("a second Tables call starts no Spark job") {
     Tables(spark, TestSpark.sf, "region")
