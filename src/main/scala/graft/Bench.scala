@@ -151,7 +151,7 @@ object Bench {
   private[graft] final case class RunConf(
       sfDir: String, cpus: Int, shufflePartitions: Int, runs: Int,
       warmup: Boolean, partial: Boolean, codegenCacheMaxEntries: Int,
-      artifactIsolation: Boolean)
+      artifactIsolation: Boolean, pageSizeBytes: Long, broadcastBlockBytes: Long)
 
   /** One rendering of a run: the metric JSON line, each BENCH_*.json
     * file's (key → raw JSON value) entries, and the flagged regressions
@@ -198,7 +198,9 @@ object Bench {
       s"""{"cpus":${conf.cpus},"shuffle_partitions":${conf.shufflePartitions},""" +
         s""""runs":${conf.runs},"warmup":${conf.warmup},"partial":${conf.partial},""" +
         s""""codegen_cache_max_entries":${conf.codegenCacheMaxEntries},""" +
-        s""""artifact_isolation":${conf.artifactIsolation}}"""
+        s""""artifact_isolation":${conf.artifactIsolation},""" +
+        s""""page_size_bytes":${conf.pageSizeBytes},""" +
+        s""""broadcast_block_bytes":${conf.broadcastBlockBytes}}"""
     val line =
       s"""{"metric":"total_all_${results.size}_queries","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"regressions":$regJson,"load":$loadJson,"conf":$confJson,"sf":"${conf.sfDir}"}"""
     val files = Seq(
@@ -446,7 +448,10 @@ object Bench {
       codegenCacheMaxEntries =
         spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt,
       artifactIsolation =
-        spark.conf.get("spark.sql.artifact.isolation.enabled").toBoolean)
+        spark.conf.get("spark.sql.artifact.isolation.enabled").toBoolean,
+      pageSizeBytes = spark.sparkContext.getConf.getSizeAsBytes("spark.buffer.pageSize"),
+      broadcastBlockBytes =
+        spark.sparkContext.getConf.getSizeAsKb("spark.broadcast.blockSize") * 1024)
     // The committed per-key baseline for the regression gate — only
     // meaningful for the canonical sf0.1 battery (a sweep at another SF
     // would flag everything). Relative paths resolve against the working

@@ -69,6 +69,21 @@ object Engine {
   private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
+  /** The unit in which Tungsten pages and broadcast blocks are allocated
+    * for a JVM whose `Runtime.maxMemory` is `maxHeap`: the smallest power
+    * of two S with S × 8192 ≥ Spark's unified memory pool, (heap − 300 MiB
+    * reserved) × `spark.memory.fraction` 0.6. A task addresses at most
+    * 8192 pages (TaskMemoryManager's page table), so at this size one task
+    * can still hold the whole pool. S is 512 KiB at a 4 GiB heap, 1 MiB at
+    * 7–8 GiB and 2 MiB at 24 GiB: below half a G1 region at each, so no
+    * page or block is a humongous object. */
+  def allocationUnit(maxHeap: Long): Long = {
+    val pool = ((maxHeap - 300L * 1024 * 1024) * 0.6).toLong
+    var s = 1L
+    while (s * 8192 < pool) s <<= 1
+    s
+  }
+
   /** The one session builder of the engine: every main, tool and the test
     * suite go through it, so the correctness dump, the bench and the tests
     * run under the same resolved config. Shuffle width is
@@ -77,6 +92,7 @@ object Engine {
   def session(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
     val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
       .map(_.toInt).getOrElse(cores)
+    val unitKb = allocationUnit(Runtime.getRuntime.maxMemory) >> 10
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -118,6 +134,18 @@ object Engine {
       // and run to run. Without the id the source, hence the cache key, is
       // the same (0-6 per pass). Stack frames read GeneratedIterator.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // Spark sizes these for a cluster: a 32 MiB Tungsten page at a 4 GiB
+      // heap and local[4] (execution pool / cores / 16, next power of two)
+      // and a 4 MiB chunk for every broadcast, every stage's task binary
+      // included. Under G1 both are humongous objects zeroed in full to
+      // hold kilobytes. In local mode broadcast pieces are never fetched
+      // (the driver's block manager holds the value), so a small block
+      // costs nothing. Both are static confs.
+      .config("spark.buffer.pageSize", s"${unitKb}k")
+      .config("spark.broadcast.blockSize", s"${unitKb}k")
+      // Without libhadoop, the stock local file system forks a `chmod`
+      // process for every file and directory a write creates.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Two loggers that would flood a finite log tail: MapPartitionsRDD

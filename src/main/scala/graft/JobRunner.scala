@@ -44,7 +44,7 @@ object JobRunner {
     * and TTL-evicted at the configured watermark; otherwise state is the
     * (group × entity) domain, as in the batch aggregate. */
   def runStreaming(spark: SparkSession, cfg: Engine.JobConfig): DataFrame = {
-    val schema = spark.read.parquet(cfg.inputPath).schema
+    val schema = Tables.footerSchema(spark, cfg.inputPath)
     val entityCols = schema.fieldNames.toSeq
       .filterNot(c => c == cfg.groupByColumn || c == cfg.targetMetric ||
         cfg.eventTimeColumn.contains(c))
@@ -72,7 +72,7 @@ object JobRunner {
     try {
       val board =
         if (cfg.mode == "streaming") runStreaming(spark, cfg)
-        else run(spark.read.parquet(cfg.inputPath), cfg)
+        else run(Tables.parquet(spark, cfg.inputPath), cfg)
       board.write.mode("overwrite").parquet(cfg.outputPath)
     } finally spark.stop()
   }

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Readers over the driver corpus (TESTDATA.md): one parquet file per table
   * under the scale-factor directory. Parquet footers carry the schema; each
   * file's footer is read once per session and every later read declares
-  * that schema. Catalyst pushes projections and predicates into the scan.
+  * that schema ([[parquet]] does the same for any parquet input).
+  * Catalyst pushes projections and predicates into the scan.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -24,8 +26,7 @@ object Tables {
     * independent of which corpus generation is on disk.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -45,25 +46,36 @@ object Tables {
     else df
   }
 
+  /** The parquet file or directory at `path`, read with the schema its
+    * footers declare ([[footerSchema]]). */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
   /** Footer schemas read so far, per session and path, each stamped with
-    * the length and modification time of the file it was read from. An
-    * inferring `spark.read.parquet` runs a Spark job to read the footer;
-    * a read with a declared schema runs none. The schema is memoized, not
-    * the frame, so each call still gets a fresh relation with its own
-    * attribute ids (a self-join of two calls stays unambiguous), and a
-    * file rewritten at the same path is read again because its stamp
-    * changed. */
+    * the sorted listing (path, length, modification time) of the files
+    * under the path it was read from: the file itself, or every file of a
+    * directory. An inferring `spark.read.parquet` runs a Spark job to read
+    * the footers; a read with a declared schema runs none. The schema is
+    * memoized, not the frame, so each call still gets a fresh relation
+    * with its own attribute ids (a self-join of two calls stays
+    * unambiguous), and an input rewritten at the same path is read again
+    * because its stamp changed. */
   private val footers =
     java.util.Collections.synchronizedMap(new java.util.WeakHashMap[
-      SparkSession, java.util.concurrent.ConcurrentHashMap[String, (Long, Long, StructType)]]())
-  private def footerSchema(spark: SparkSession, path: String): StructType = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val st = p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
+      SparkSession, java.util.concurrent.ConcurrentHashMap[
+        String, (Seq[(String, Long, Long)], StructType)]]())
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .flatMap(st => if (st.isDirectory) files(st.getPath) else Seq(st))
+    val stamp = files(p)
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).sorted
     val memo = footers.computeIfAbsent(spark,
       _ => new java.util.concurrent.ConcurrentHashMap())
     memo.compute(path, (_, old) =>
-      if (old != null && old._1 == st.getLen && old._2 == st.getModificationTime) old
-      else (st.getLen, st.getModificationTime, spark.read.parquet(path).schema))._3
+      if (old != null && old._1 == stamp) old
+      else (stamp, spark.read.parquet(path).schema))._2
   }
 
   /** Register every corpus table as a temp view (for spark.sql queries —

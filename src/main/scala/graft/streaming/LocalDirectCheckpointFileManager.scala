@@ -20,7 +20,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * NativeCodeLoader warning on every run), RawLocalFileSystem implements
   * setPermission by FORKING a `chmod` subprocess per created file, ~35 ms
   * each under a multi-GB JVM. Going through java.nio skips the fork; the
-  * bytes and their on-disk layout are identical.
+  * bytes and their on-disk layout are identical. The session's
+  * [[graft.NioLocalFileSystem]] does not reach Spark's stock manager:
+  * its FileContext path builds the local file system over a hard-coded
+  * RawLocalFileSystem.
   *
   * What is kept: create-if-absent semantics (`overwriteIfPossible = false`
   * throws FileAlreadyExistsException when the file exists — HDFSMetadataLog

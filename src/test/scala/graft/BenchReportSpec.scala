@@ -10,7 +10,8 @@ class BenchReportSpec extends AnyFunSuite {
 
   private val conf = Bench.RunConf(sfDir = "/data/sf0.1", cpus = 8,
     shufflePartitions = 8, runs = 3, warmup = true, partial = false,
-    codegenCacheMaxEntries = 512, artifactIsolation = false)
+    codegenCacheMaxEntries = 512, artifactIsolation = false,
+    pageSizeBytes = 524288L, broadcastBlockBytes = 524288L)
 
   private def battery(scale: Double, loadOk: Boolean, cotenant: Double,
       waited: Long) = Bench.Battery(
@@ -47,6 +48,8 @@ class BenchReportSpec extends AnyFunSuite {
     assert(!c.has("oha_fallback"))
     assert(c.get("codegen_cache_max_entries").asInt == 512)
     assert(!c.get("artifact_isolation").asBoolean)
+    assert(c.get("page_size_bytes").asLong == 524288L)
+    assert(c.get("broadcast_block_bytes").asLong == 524288L)
     assert(line.get("sf").asText == "/data/sf0.1")
 
     val f = files(r)

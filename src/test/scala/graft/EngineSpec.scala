@@ -57,6 +57,76 @@ class EngineSpec extends AnyFunSuite {
     assert(c.get("spark.sql.artifact.isolation.enabled") == "false")
     assert(c.get("spark.sql.codegen.useIdInClassName") == "false")
     assert(TestSpark.spark.sparkContext.master == "local[4]")
+    // Pages and broadcast blocks are sized to this JVM's heap: static
+    // confs, so they only hold if the suite's first session set them.
+    val unit = Engine.allocationUnit(Runtime.getRuntime.maxMemory)
+    val env = org.apache.spark.SparkEnv.get
+    assert(env.memoryManager.pageSizeBytes == unit)
+    assert(env.conf.getSizeAsKb("spark.broadcast.blockSize") * 1024 == unit)
+  }
+
+  test("the allocation unit addresses the whole memory pool and is never humongous") {
+    val KiB = 1024L
+    val MiB = 1024 * KiB
+    // HotSpot 17's G1 region for a heap: heap / 2048 rounded up to a power
+    // of two, within 1-32 MiB. An object over half a region is humongous.
+    def g1Region(heap: Long): Long = {
+      var r = MiB
+      while (r < heap / 2048 && r < 32 * MiB) r <<= 1
+      r
+    }
+    val expected = Seq(2 -> 256 * KiB, 4 -> 512 * KiB, 7 -> MiB, 8 -> MiB,
+      24 -> 2 * MiB, 64 -> 8 * MiB)
+    for ((gib, unit) <- expected) {
+      val heap = gib * 1024 * MiB
+      val pool = ((heap - 300 * MiB) * 0.6).toLong
+      val s = Engine.allocationUnit(heap)
+      assert(s == unit, s"$gib GiB")
+      // 8192 pages (TaskMemoryManager's page table) cover the pool, and
+      // no smaller power of two would.
+      assert(s * 8192 >= pool && s / 2 * 8192 < pool, s"$gib GiB")
+      assert(s < g1Region(heap) / 2, s"$gib GiB")
+    }
+    // The region model is this JVM's own, wherever G1 picked the size.
+    val hs = java.lang.management.ManagementFactory.getPlatformMXBean(
+      classOf[com.sun.management.HotSpotDiagnosticMXBean])
+    val region = hs.getVMOption("G1HeapRegionSize")
+    if (hs.getVMOption("UseG1GC").getValue == "true" &&
+        region.getOrigin == com.sun.management.VMOption.Origin.ERGONOMIC)
+      assert(region.getValue.toLong ==
+        g1Region(hs.getVMOption("MaxHeapSize").getValue.toLong))
+  }
+
+  test("local writes fork no chmod process") {
+    val spark = TestSpark.spark
+    // Hadoop caches one FileSystem per scheme and ignores the conf on a
+    // hit, so check the instance a write actually gets.
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(fs.getClass == classOf[NioLocalFileSystem])
+    val chmods = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val out = java.nio.file.Files.createTempDirectory("graft_chmod")
+    val marker = java.nio.file.Files.createFile(out.resolve("marker")).toString
+    val rs = new jdk.jfr.consumer.RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart")
+      rs.onEvent("jdk.ProcessStart", e => {
+        val cmd = e.getString("command")
+        if (cmd.split(' ').head.endsWith("chmod")) chmods.add(cmd)
+      })
+      rs.startAsync()
+      spark.range(1000).repartition(4).write.parquet(s"$out/t")
+      // A chmod of our own after the write: once the stream delivers it,
+      // it has delivered every earlier event, and it shows that the
+      // recording sees a chmod fork at all.
+      new ProcessBuilder("chmod", "600", marker).start().waitFor()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!chmods.contains(s"chmod 600 $marker") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally rs.close()
+    import scala.jdk.CollectionConverters._
+    assert(chmods.asScala.toSeq == Seq(s"chmod 600 $marker"))
+    assert(spark.read.parquet(s"$out/t").count() == 1000)
   }
 
   /** Paths (relative to src/main) of the Scala sources containing `needle`. */

@@ -112,4 +112,41 @@ class JobRunnerSpec extends AnyFunSuite {
     assert(streamed.nonEmpty && streamed == batch,
       s"windowed-state board $streamed != batch board $batch")
   }
+
+  private def streamingConfig(inDir: String, env: String) = Engine.JobConfig(
+    env = env, inputPath = inDir, groupByColumn = "region",
+    targetMetric = "sales", topN = 2, mode = "streaming")
+
+  test("a second streaming run over unchanged input starts no job outside its stream") {
+    import spark.implicits._
+    val inDir = Files.createTempDirectory("graft_job_rerun").toString
+    Seq(("east", "widget", 10.0), ("east", "bolt", 12.0), ("west", "gear", 3.0))
+      .toDF("region", "product", "sales").repartition(2)
+      .write.mode("overwrite").parquet(inDir)
+    val cfg = streamingConfig(inDir, "spec_rerun")
+    JobRunner.runStreaming(spark, cfg)
+    var board: org.apache.spark.sql.DataFrame = null
+    val groups = TestSpark.jobGroupsOf { board = JobRunner.runStreaming(spark, cfg) }
+    // A streaming query's jobs carry its run id as their job group; an
+    // inferring read of the input would start one in no group.
+    assert(groups.nonEmpty && groups.distinct.size == 1 &&
+      scala.util.Try(java.util.UUID.fromString(groups.head)).isSuccess,
+      s"jobs outside the stream's run: $groups")
+    assert(board.count() == 3)
+  }
+
+  test("a rewritten job input is read with its new schema") {
+    import spark.implicits._
+    val inDir = Files.createTempDirectory("graft_job_rewrite").toString
+    val cfg = streamingConfig(inDir, "spec_rewrite")
+    Seq(("east", "widget", 10.0)).toDF("region", "product", "sales")
+      .write.mode("overwrite").parquet(inDir)
+    assert(JobRunner.runStreaming(spark, cfg).columns.toSeq ==
+      Seq("region", "product", "metric", "rnk"))
+    Seq(("east", "widget", "red", 10.0)).toDF("region", "product", "color", "sales")
+      .write.mode("overwrite").parquet(inDir)
+    val board = JobRunner.runStreaming(spark, cfg)
+    assert(board.columns.toSeq == Seq("region", "product", "color", "metric", "rnk"))
+    assert(board.collect().map(r => r.getString(2)).toSeq == Seq("red"))
+  }
 }
