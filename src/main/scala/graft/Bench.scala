@@ -1,25 +1,86 @@
 package graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 object Bench {
-  /** Accumulates scan-input record counts across all tasks — the work
-    * proxy for the per-query IO decomposition. (inputMetrics.BYTESREAD is
-    * useless here: the vectorized parquet reader's data path bypasses the
-    * Hadoop FileSystem statistics it is wired to — measured 17 KB
-    * "read" for a 600k-row scan — so byte volumes come from
-    * /proc/self/io instead, which also splits LOGICAL reads (rchar)
-    * from PHYSICAL storage reads (read_bytes): exactly the
-    * page-cache-regime evidence the scale sweeps need.) */
-  private final class InputRecordsListener extends org.apache.spark.scheduler.SparkListener {
-    val records = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null) records.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    /** Listener-bus delivery is async; poll until the counter is stable. */
-    def settled(): Long = {
-      var prev = -1L; var cur = records.get()
-      while (cur != prev) { Thread.sleep(50); prev = cur; cur = records.get() }
-      cur
+  /** Micro-batches a key ran: how many, the largest state-store row total
+    * any one batch reported (summed over its stateful operators), and each
+    * `durationMs` part (addBatch, queryPlanning, walCommit, ...) summed
+    * over the batches. */
+  private[graft] final case class StreamMetrics(
+      batches: Int, stateRowsMax: Long, durationMs: Map[String, Long])
+
+  /** What the cluster did between two [[Metrics.take]] calls. */
+  private[graft] final case class KeyMetrics(
+      scanRows: Long, shuffleWriteBytes: Long, shuffleReadBytes: Long,
+      stages: Int, tasks: Long, taskMs: Long, stream: Option[StreamMetrics])
+
+  /** The one listener that measures what a key did. Per task: scan records
+    * and shuffle bytes written. Per completed stage: its task count, summed
+    * executor run time and shuffle bytes read. Per micro-batch: its
+    * progress. (inputMetrics.bytesRead is not kept: the vectorized parquet
+    * reader bypasses the Hadoop FileSystem statistics it is wired to, and
+    * a 600k-row scan reads as 17 KB; byte volumes come from /proc/self/io.) */
+  private[graft] final class Metrics(spark: SparkSession) extends SparkListener {
+    private val zero = KeyMetrics(0L, 0L, 0L, 0, 0L, 0L, None)
+    private var events = 0L
+    private var m = zero
+
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (t.taskMetrics != null) synchronized {
+        events += 1
+        m = m.copy(scanRows = m.scanRows + t.taskMetrics.inputMetrics.recordsRead,
+          shuffleWriteBytes =
+            m.shuffleWriteBytes + t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val si = e.stageInfo
+      events += 1
+      m = m.copy(stages = m.stages + 1, tasks = m.tasks + si.numTasks,
+        taskMs = m.taskMs + si.taskMetrics.executorRunTime,
+        shuffleReadBytes =
+          m.shuffleReadBytes + si.taskMetrics.shuffleReadMetrics.totalBytesRead)
+    }
+
+    private val progress = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = Metrics.this.synchronized {
+        import scala.jdk.CollectionConverters._
+        val p = e.progress
+        val s = m.stream.getOrElse(StreamMetrics(0, 0L, Map.empty))
+        events += 1
+        m = m.copy(stream = Some(StreamMetrics(s.batches + 1,
+          math.max(s.stateRowsMax, p.stateOperators.map(_.numRowsTotal).sum),
+          p.durationMs.asScala.foldLeft(s.durationMs) { case (d, (k, v)) =>
+            d.updated(k, d.getOrElse(k, 0L) + v) })))
+      }
+    }
+
+    spark.sparkContext.addSparkListener(this)
+    spark.streams.addListener(progress)
+
+    /** The counters since the previous call. Listener-bus delivery is
+      * async, so it first polls until no event has arrived for 50 ms. */
+    def take(): KeyMetrics = {
+      var prev = -1L; var cur = synchronized(events)
+      while (cur != prev) { Thread.sleep(50); prev = cur; cur = synchronized(events) }
+      synchronized {
+        val out = m
+        m = zero
+        out
+      }
     }
   }
+
+  /** One key's last completed run: logical bytes read (rchar: every file
+    * read incl. page-cache hits), physical bytes (read_bytes: storage
+    * traffic, ~0 on a warmed corpus), the output row count and what
+    * [[Metrics]] saw. */
+  private[graft] final case class KeyRow(
+      logicalBytes: Long, diskBytes: Long, rows: Long, metrics: KeyMetrics)
 
   /** (rchar, read_bytes) of this JVM: logical bytes through read syscalls
     * vs bytes actually fetched from storage (a page-cache hit counts in
@@ -37,9 +98,8 @@ object Bench {
   }
   /** 1/5/15-minute load averages of the HOST (not this JVM) from
     * /proc/loadavg — the co-tenant-activity evidence every battery must
-    * carry (r10 verdict ask #1: identical-code batteries measured 156.9 s
-    * at load 0.03 vs 209.2 s at load 2.95, and nothing in the artifacts
-    * recorded which regime a run happened in). Zeros off-Linux. */
+    * carry: identical-code batteries measured 156.9 s at load 0.03 vs
+    * 209.2 s at load 2.95. Zeros off-Linux. */
   private def loadAvg(): Seq[Double] = {
     val p = java.nio.file.Paths.get("/proc/loadavg")
     if (!java.nio.file.Files.exists(p)) Seq(0.0, 0.0, 0.0)
@@ -52,7 +112,7 @@ object Bench {
     * runnable — the co-tenant signal load-avg can't see (load measures our
     * own run queue; steal measures the host taking the CPU away). Busy =
     * total − idle − iowait − steal: all IN-VM CPU consumption, ours + any
-    * co-tenant process's. Steal is excluded (ADVICE r12) so the two gates
+    * co-tenant process's. Steal is excluded so the two gates
     * measure DISJOINT signals — with it included, a run with steal just
     * under the 1% gate inflated cotenant_cores by up to ncpus/100 cores,
     * double-counting hypervisor time as in-VM co-tenant CPU. (Guest time
@@ -72,10 +132,8 @@ object Bench {
 
   /** This JVM's own (utime + stime) jiffies from /proc/self/stat — what
     * busy-jiffies minus THIS gives is the CPU other in-VM processes burned
-    * during the battery, the mid-run-co-tenant-arrival signal the r11
-    * battery-A creep demonstrated start-load can't see (ADVICE r11: a
-    * co-tenant arriving mid-run left load_ok=true while inflating the
-    * tail ~10-14%). 0 off-Linux. */
+    * during the battery: a co-tenant arriving mid-run leaves start-load
+    * quiet while inflating the tail ~10-14%. 0 off-Linux. */
   private def selfJiffies(): Long = {
     val p = java.nio.file.Paths.get("/proc/self/stat")
     if (!java.nio.file.Files.exists(p)) 0L
@@ -92,10 +150,8 @@ object Bench {
   /** Overlay `updates` (key → raw JSON value text) onto a flat one-level
     * JSON object, preserving every existing key not updated. This is what
     * keeps single-query `SPARK_GRAFT_ONLY`/`SPARK_GRAFT_SKIP` runs from
-    * truncating the full-battery BENCH_LOCAL.json/BENCH_RUNS.json to a
-    * one-entry file (which shipped two broken commits in round 7 — the
-    * merge makes the artifact safe by construction, not by operator
-    * discipline). Existing keys keep their position; new keys append.
+    * truncating the full-battery BENCH_*.json files to the filtered keys.
+    * Existing keys keep their position; new keys append.
     */
   def mergeJson(existing: String, updates: Seq[(String, String)]): String = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -123,8 +179,8 @@ object Bench {
     java.nio.file.Files.writeString(p, mergeJson(existing, updates))
   }
   /** Headline queries reported per-query in the JSON line. The driver's log
-    * tail is finite — emitting all ~80 query timings overflowed it in round 1
-    * ("parsed": null), so the line stays short: total over everything,
+    * tail is finite — emitting every query's timing overflows it and the
+    * line no longer parses — so the line stays short: total over everything,
     * detail for the representative heavy set.
     */
   private val headline = Seq(
@@ -140,7 +196,7 @@ object Bench {
       results: Seq[(String, Double)],
       runsRaw: Seq[(String, Seq[Double])],
       failed: Seq[String],
-      ioProfile: Seq[(String, (Long, Long, Long))],
+      ioProfile: Seq[(String, KeyRow)],
       queryLoad: Map[String, Double],
       loadStart: Seq[Double], loadEnd: Seq[Double],
       stealPct: Double, cotenantCores: Double, loadOk: Boolean,
@@ -211,13 +267,7 @@ object Bench {
       "BENCH_RUNS.json" -> best.runsRaw.map { case (k, ts) =>
         k -> ts.map(t => if (t.isNaN) "null" else r3(t)).mkString("[", ",", "]")
       },
-      // Logical MB (rchar: every file read incl. page-cache hits),
-      // physical MB (read_bytes: storage traffic, ~0 on a warmed corpus)
-      // and scan records per key.
-      "BENCH_IO.json" -> best.ioProfile.map { case (k, (rc, db, n)) =>
-        k -> (f"""{"logical_mb":${rc / 1048576.0}%.1f,""" +
-          f""""disk_mb":${db / 1048576.0}%.1f,"scan_rows":$n}""")
-      },
+      "BENCH_IO.json" -> best.ioProfile.map { case (k, r) => k -> ioJson(r) },
       // Per-key 1-min load at completion plus the battery-level block under
       // the reserved "_battery" key.
       "BENCH_LOAD.json" -> (best.queryLoad.toSeq.map { case (k, v) => k -> f"$v%.2f" } :+
@@ -225,13 +275,30 @@ object Bench {
     Report(line, files, regressions)
   }
 
+  /** One key's BENCH_IO.json row; `stream` only for keys that ran
+    * micro-batches. */
+  private def ioJson(r: KeyRow): String = {
+    def mb(b: Long, digits: Int) = s"%.${digits}f".format(b / 1048576.0)
+    val m = r.metrics
+    val stream = m.stream.fold("") { s =>
+      val parts = s.durationMs.toSeq.sorted.map { case (k, v) => s"\"$k\":$v" }
+      s""","stream":{"batches":${s.batches},"state_rows_max":${s.stateRowsMax},""" +
+        s""""duration_ms":${parts.mkString("{", ",", "}")}}"""
+    }
+    s"""{"logical_mb":${mb(r.logicalBytes, 1)},"disk_mb":${mb(r.diskBytes, 1)},""" +
+      s""""scan_rows":${m.scanRows},"rows":${r.rows},""" +
+      s""""shuffle_write_mb":${mb(m.shuffleWriteBytes, 2)},""" +
+      s""""shuffle_read_mb":${mb(m.shuffleReadBytes, 2)},""" +
+      s""""stages":${m.stages},"tasks":${m.tasks},"task_ms":${m.taskMs}$stream}"""
+  }
+
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_WAIT_QUIET=<minutes> (r11 verdict ask #7): poll for a
-    // quiet start (1-min load ≤ 0.15) up to the deadline before running,
-    // so an attended battery can outwait a co-tenant window instead of
-    // burning 20 minutes producing an untrusted artifact. Unset — the
-    // driver's unattended runs — means no wait on attempt 1; a deadline
-    // hit runs anyway and the artifact marks itself "deferred".
+    // SPARK_GRAFT_WAIT_QUIET=<minutes>: poll for a quiet start (1-min
+    // load ≤ 0.15) up to the deadline before running, so an attended
+    // battery can outwait a co-tenant window instead of burning 20 minutes
+    // producing an untrusted artifact. Unset — the driver's unattended
+    // runs — means no wait on attempt 1; a deadline hit runs anyway and
+    // the artifact marks itself "deferred".
     val waitQuietMin = sys.env.get("SPARK_GRAFT_WAIT_QUIET")
       .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(0.0)
     /** Poll for a quiet 1-min load up to `min` minutes; returns seconds
@@ -248,38 +315,12 @@ object Bench {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session("graft-bench")
-    // SPARK_GRAFT_STREAM_METRICS=1 (scale sweeps only): print one stderr
-    // line per micro-batch with input rows, watermark, and per-operator
-    // state rows — the evidence that streaming state is O(keys), not
-    // O(input), when the decade rows are recorded (r10 verdict ask #6).
-    if (sys.env.get("SPARK_GRAFT_STREAM_METRICS").contains("1"))
-      spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-          val p = e.progress
-          val ops = p.stateOperators.map(so =>
-            s"${so.operatorName}:rows=${so.numRowsTotal},upd=${so.numRowsUpdated}," +
-              s"late=${so.numRowsDroppedByWatermark},mem=${so.memoryUsedBytes}")
-            .mkString(" ")
-          // durationMs decomposes the trigger wall (addBatch = plan+execute,
-          // walCommit/commitOffsets = checkpoint metadata fsyncs, ...) — the
-          // r13 evidence for where the streaming family's fixed per-batch
-          // overhead actually goes.
-          val dur = {
-            import scala.jdk.CollectionConverters._
-            p.durationMs.asScala.toSeq.sortBy(-_._2)
-              .map { case (k, v) => s"$k=$v" }.mkString(",")
-          }
-          System.err.println(s"[stream] batch=${p.batchId} in=${p.numInputRows} " +
-            s"wm=${p.eventTime.get("watermark")} $ops dur[$dur]")
-        }
-      })
+    val metrics = new Metrics(spark)
     // Warm the session once (JIT, codegen cache, parquet footers) so the
-    // first measured query doesn't absorb JVM startup.
+    // first measured query doesn't absorb JVM startup; its metrics are
+    // dropped so the first key is not charged with them.
     Tables.names.foreach(n => Tables(spark, sfDir, n).count())
-    val ioListener = new InputRecordsListener
-    spark.sparkContext.addSparkListener(ioListener)
+    metrics.take()
     // Optional comma-separated filter for local single-query profiling;
     // the driver never sets it, so round benches always cover everything.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -301,14 +342,14 @@ object Bench {
       * own ambient capture. Median-of-3 per query — single-shot local
       * timings vary ±20% with system noise; the median rejects one-off
       * outliers where best-of-N hides genuine regressions behind one lucky
-      * run. Sub-0.5 s keys get median-of-7 (r12 verdict ask #7: the
-      * rotating ambient regression flags concentrate in <0.5 s keys whose
-      * in-battery context differs 2-3× from isolated runs — more samples
-      * shrink the flag list to genuinely suspicious keys; total cost is a
-      * few minutes since the keys are by definition cheap). Failure-loud
-      * (round-5 verdict ask #3): a query that throws must not silently
-      * benchmark as a fast success and deflate the total — failed keys are
-      * excluded from the total and surfaced in the JSON line. */
+      * run. Sub-0.5 s keys get median-of-7: the rotating ambient regression
+      * flags concentrate in <0.5 s keys whose in-battery context differs
+      * 2-3× from isolated runs — more samples shrink the flag list to
+      * genuinely suspicious keys; total cost is a few minutes since the
+      * keys are by definition cheap. Failure-loud: a query that throws must
+      * not silently benchmark as a fast success and deflate the total —
+      * failed keys are excluded from the total and surfaced in the JSON
+      * line. */
     def attemptBattery(waitedSecIn: Long, deferredIn: Boolean): Battery = {
       // Ambient evidence FIRST — before the per-query work spins our own
       // threads up, so "start" measures the co-tenant, not this JVM's ramp
@@ -318,28 +359,29 @@ object Bench {
       val selfJif0 = selfJiffies()
       val wallNs0 = System.nanoTime()
       val failed = scala.collection.mutable.LinkedHashSet[String]()
-      // Last completed run's IO profile per query: (logical bytes, physical
-      // bytes, scan records). Logical bytes and records are plan-
-      // deterministic; physical bytes depend on the page-cache state — on a
-      // warmed corpus they go to ~0, which is itself the measurement.
-      val ioProfile = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
+      // Last completed run's row per query. Logical bytes, rows and the
+      // listener counters are plan-deterministic; physical bytes depend on
+      // the page-cache state — on a warmed corpus they go to ~0, which is
+      // itself the measurement.
+      val ioProfile = scala.collection.mutable.LinkedHashMap[String, KeyRow]()
+      // Every run ends with a metrics.take(), which also drains the bus for
+      // the next run: the cleanup between runs starts no Spark task.
       def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-        ioListener.settled(); ioListener.records.set(0L)
         val (rchar0, disk0) = procIo()
         val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
+        val rows =
+          try Some(fn(spark, sfDir).count())
           catch {
             case scala.util.control.NonFatal(e) =>
               System.err.println(
                 s"[bench] QUERY FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
               failed += name
-              false
+              None
           }
         val sec = (System.nanoTime() - t0) / 1e9
         // Close the I/O capture before the cleanup below, so the reaper's
         // deletes are never charged to this key's BENCH_IO.json row.
-        val recs = ioListener.settled()
+        val m = metrics.take()
         val (rchar1, disk1) = procIo()
         // Query isolation, outside the timed region: the query's cached and
         // checkpointed blocks must not bleed memory pressure into the next
@@ -348,33 +390,33 @@ object Bench {
         // Reap the previous run's renamed scratch tree synchronously, in
         // the untimed window: deletes never overlap a measurement.
         Scratch.reapTombstones()
-        if (ok) {
-          ioProfile(name) = (rchar1 - rchar0, disk1 - disk0, recs)
+        rows.fold(Double.NaN) { n =>
+          ioProfile(name) = KeyRow(rchar1 - rchar0, disk1 - disk0, n, m)
           sec
-        } else Double.NaN
+        }
       }
       // Per-query 1-minute load at each query's completion (BENCH_LOAD.json)
       // — conflates our own threads with the co-tenant's, so it's triage
       // evidence, not a verdict; the battery-level start/steal capture
-      // above is the clean ambient signal (r10 verdict ask #1).
+      // above is the clean ambient signal.
       val queryLoad = scala.collection.mutable.LinkedHashMap[String, Double]()
       val runs = SparkEntry.queries
         .filter { case (name, _) => (only.isEmpty || only(name)) && !skip(name) }
         .map { case (name, fn) =>
-        // In-battery drift control (round-5 verdict ask #5): a full GC at
-        // each query boundary stops the previous queries' garbage from being
-        // collected INSIDE the next measurement — the r5 signature where
-        // q_join_inner measured 0.445 s in-battery vs 0.267 s isolated.
-        // Outside the timed region; methodology in BENCH_NOTES.md.
+        // In-battery drift control: a full GC at each query boundary stops
+        // the previous queries' garbage from being collected INSIDE the next
+        // measurement (q_join_inner measured 0.445 s in-battery vs 0.267 s
+        // isolated without it). Outside the timed region; methodology in
+        // BENCH_NOTES.md.
         System.gc()
         // One untimed warmup per query: the first execution of a plan absorbs
         // JIT + codegen compilation (measured up to 3.6x skew on run 1),
         // which is startup cost, not operator cost. Its wall also sizes the
-        // run count: sub-0.5 s keys → 7 runs (ask #7), unless the sweep
+        // run count: sub-0.5 s keys → 7 runs, unless the sweep
         // pinned SPARK_GRAFT_RUNS explicitly.
         val w = if (warmup) timeOnce(name, fn) else Double.NaN
-        // r13: ≥0.5 s keys run median-of-5 (was 3). The first certified
-        // battery exposed single-run stalls of 3-12 s on heavy keys
+        // ≥0.5 s keys run median-of-5: certified batteries show single-run
+        // stalls of 3-12 s on heavy keys
         // (q_stream_topn runs [4.97, 8.43, 17.62], q_dedup_minhash_audit
         // [2.81, 9.49, 1.70] — transient steal/writeback bursts, all
         // non-reproducing in isolation); a 3-run median is corrupted by
@@ -382,7 +424,7 @@ object Bench {
         // of median over per-key min across the certified battery's 3-run
         // keys: 23.7 s — more than any single operator optimization on
         // the board. Costs ~+5 min battery wall (the affected keys sum
-        // ~150 s/run). Sub-0.5 s keys keep the r12 median-of-7.
+        // ~150 s/run). Sub-0.5 s keys keep median-of-7.
         val runCount =
           if (warmup && nRunsEnv.isEmpty && !w.isNaN) (if (w < 0.5) 7 else 5)
           else nRuns
@@ -405,8 +447,8 @@ object Bench {
         if (jifT1 > jifT0) 100.0 * (jifS1 - jifS0) / (jifT1 - jifT0) else 0.0
       // Average CPU cores burned by OTHER in-VM processes across the whole
       // battery: (busy − our own utime+stime) / wall. Unlike start-load this
-      // integrates over the run, so a co-tenant arriving mid-battery (the
-      // r11 battery-A creep, ADVICE r11) is caught; unlike end-load it does
+      // integrates over the run, so a co-tenant arriving mid-battery is
+      // caught; unlike end-load it does
       // not count our own threads. USER_HZ = 100 on Linux. Quiet-machine
       // background daemons measure ~0.02-0.05 cores; a co-tenant burst is
       // multiple cores — gate at 0.25.
@@ -415,16 +457,15 @@ object Bench {
         if (wallSec > 0)
           math.max(0.0, ((jifB1 - jifB0) - (selfJiffies() - selfJif0)) / (wallSec * 100.0))
         else 0.0
-      // load_ok is the machine-readable quiet-window verdict the r10 verdict
-      // asked for: start load essentially idle, bounded hypervisor steal,
-      // and no in-VM co-tenant CPU at any point DURING the battery (r12).
-      // Steal threshold recalibrated r13: with the gates now DISJOINT
-      // (busy excludes steal), a fully-idle VM still measured 1.5% steal
+      // load_ok is the machine-readable quiet-window verdict: start load
+      // essentially idle, bounded hypervisor steal, and no in-VM co-tenant
+      // CPU at any point DURING the battery. Steal threshold: with the
+      // gates DISJOINT (busy excludes steal), a fully-idle VM still measured 1.5% steal
       // on this host — a persistent ambient floor, not a burst — and
       // steal's wall impact on CPU-bound work is bounded by
       // steal/(100−steal) ≈ 3% at the 3.0 threshold, far under the ±20%
       // run noise the median already absorbs. The 10-50% distortions the
-      // gate exists for are IN-VM co-tenants (r10: 156.9 s vs 209.2 s),
+      // gate exists for are IN-VM co-tenants (156.9 s vs 209.2 s),
       // which cotenant_cores catches directly. Raw steal_pct stays in the
       // artifact, so a reader can always apply a stricter bar post hoc.
       val loadOk = loadStart.head <= 0.15 && stealPct <= 3.0 && cotenantCores <= 0.25
@@ -438,10 +479,7 @@ object Bench {
     // best attempt's artifact ships. Partial runs and off-sf0.1 sweeps
     // never retry: the gate only certifies the canonical battery.
     val retryable = sfDir.endsWith("sf0.1") && only.isEmpty && skip.isEmpty
-    val maxAttempts =
-      if (!retryable) 1
-      else sys.env.get("SPARK_GRAFT_ATTEMPTS")
-        .flatMap(v => scala.util.Try(v.toInt).toOption).fold(3)(math.max(1, _))
+    val maxAttempts = if (retryable) 3 else 1
     val conf = RunConf(sfDir, spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions").toInt, nRuns, warmup,
       partial = only.nonEmpty || skip.nonEmpty,
@@ -454,10 +492,9 @@ object Bench {
         spark.sparkContext.getConf.getSizeAsKb("spark.broadcast.blockSize") * 1024)
     // The committed per-key baseline for the regression gate — only
     // meaningful for the canonical sf0.1 battery (a sweep at another SF
-    // would flag everything). Relative paths resolve against the working
-    // directory, which is the checkout's root under `sbt run`.
-    val baselinePath = java.nio.file.Paths.get(sys.env.getOrElse(
-      "SPARK_GRAFT_BASELINE", "BENCH_BASELINE.json"))
+    // would flag everything). Resolved against the working directory,
+    // which is the checkout's root under `sbt run`.
+    val baselinePath = java.nio.file.Paths.get("BENCH_BASELINE.json")
     val baseline: Map[String, Double] =
       if (!sfDir.endsWith("sf0.1") || !java.nio.file.Files.exists(baselinePath)) Map.empty
       else {

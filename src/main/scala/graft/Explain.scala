@@ -17,7 +17,7 @@ object Explain {
         sb.append(s"\n===== $name =====\n")
         try sb.append(fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-        catch { case e: Throwable => sb.append(s"explain failed: ${e.getMessage}\n") }
+        catch { case scala.util.control.NonFatal(e) => sb.append(s"explain failed: ${e.getMessage}\n") }
         finally Tables.releaseAll(spark)
       }
     }

@@ -20,7 +20,12 @@ class BenchReportSpec extends AnyFunSuite {
       "q_agg_hash" -> Seq(0.5, 0.5, 0.6).map(_ * scale),
       "q_broken" -> Seq(Double.NaN)),
     failed = Seq("q_broken"),
-    ioProfile = Seq("q_topk" -> (2097152L, 0L, 600L)),
+    ioProfile = Seq(
+      "q_topk" -> Bench.KeyRow(2097152L, 0L, 10L,
+        Bench.KeyMetrics(600L, 131072L, 65536L, 3, 12L, 340L, None)),
+      "q_agg_hash" -> Bench.KeyRow(0L, 0L, 4L,
+        Bench.KeyMetrics(0L, 0L, 0L, 0, 0L, 0L, Some(Bench.StreamMetrics(
+          4, 120L, Map("walCommit" -> 40L, "addBatch" -> 800L)))))),
     queryLoad = Map("q_topk" -> 0.1, "q_agg_hash" -> 0.2),
     loadStart = Seq(0.1, 0.2, 0.3), loadEnd = Seq(1.0, 0.5, 0.4),
     stealPct = 0.5, cotenantCores = cotenant, loadOk = loadOk,
@@ -58,7 +63,17 @@ class BenchReportSpec extends AnyFunSuite {
     assert(f("BENCH_LOCAL.json").get("q_topk").asDouble == 1.0)
     assert(f("BENCH_LOCAL.json").get("q_broken").isNull)
     assert(f("BENCH_RUNS.json").get("q_broken").get(0).isNull)
-    assert(f("BENCH_IO.json").get("q_topk").get("logical_mb").asDouble == 2.0)
+    val io = f("BENCH_IO.json").get("q_topk")
+    assert(io.get("logical_mb").asDouble == 2.0 && io.get("scan_rows").asLong == 600L)
+    assert(io.get("rows").asLong == 10L)
+    assert(io.get("shuffle_write_mb").asDouble == 0.13)
+    assert(io.get("shuffle_read_mb").asDouble == 0.06)
+    assert(io.get("stages").asInt == 3 && io.get("tasks").asLong == 12L)
+    assert(io.get("task_ms").asLong == 340L && !io.has("stream"))
+    val stream = f("BENCH_IO.json").get("q_agg_hash").get("stream")
+    assert(stream.get("batches").asInt == 4 && stream.get("state_rows_max").asLong == 120L)
+    assert(stream.get("duration_ms").get("addBatch").asLong == 800L)
+    assert(stream.get("duration_ms").get("walCommit").asLong == 40L)
     assert(f("BENCH_LOAD.json").get("_battery").get("load_ok").asBoolean)
   }
 

@@ -148,6 +148,19 @@ class EngineSpec extends AnyFunSuite {
       s"session builders outside Engine.session: $builders")
   }
 
+  test("Bench.Metrics is the only Spark or streaming-query listener under src/main") {
+    // One listener measures what a key did; a second sees part of it.
+    for (listener <- Seq("SparkListener", "StreamingQueryListener")) {
+      val subclass = s"(extends|new|with)\\s+[\\w.]*\\b$listener\\b".r
+      val found = mainSourcesContaining(listener).flatMap { f =>
+        val n = subclass.findAllIn(
+          java.nio.file.Files.readString(java.nio.file.Paths.get("src/main", f))).size
+        if (n > 0) Some(f -> n) else None
+      }
+      assert(found == List("scala/graft/Bench.scala" -> 1), s"$listener subclasses: $found")
+    }
+  }
+
   test("corpus files are read only through Tables") {
     // Tables memoizes each file's footer schema; a direct read would run
     // its own footer job.
