@@ -1,60 +1,23 @@
 package graft
 
-import graft.functions.VectorFunctions._
+import graft.functions.VectorFunctions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions wiring: registers the graft expression library at
-  * session build time, so a cluster deployment gets `cosine_similarity`,
-  * `simhash64`, `minhash_signature`, `shingle_set`, `rolling_hash64`,
-  * `hyperplane_sig` in plain SQL via
+/** SparkSessionExtensions wiring: registers the graft expression library
+  * (every entry of [[VectorFunctions.functions]] — `cosine_similarity`,
+  * `simhash64`, `minhash_signature`, `md_plane_dots`, `topk_pairs`, ...) at
+  * session build time, so a cluster deployment gets them in plain SQL via
   * `--conf spark.sql.extensions=graft.GraftExtensions` — no code changes.
-  * (Per-session `VectorFunctions.register` remains for already-built
-  * sessions, e.g. the driver-owned ones in Verify/Bench.)
+  * (Per-session `VectorFunctions.register` installs the same table into
+  * already-built sessions, e.g. the driver-owned ones in Verify/Bench.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, name)
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("cosine_similarity"), info("cosine_similarity"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    e.injectFunction((FunctionIdentifier("rolling_hash64"), info("rolling_hash64"),
-      (exprs: Seq[Expression]) => RollingHash64(exprs.head)))
-    e.injectFunction((FunctionIdentifier("minhash_signature"), info("minhash_signature"),
-      (exprs: Seq[Expression]) => MinHashSignature(exprs.head,
-        exprs(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("shingle_set"), info("shingle_set"),
-      (exprs: Seq[Expression]) => ShingleSet(exprs.head,
-        exprs(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("shingle_gen"), info("shingle_gen"),
-      (exprs: Seq[Expression]) => ShingleGenerate(exprs.head,
-        exprs(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("hyperplane_sig"), info("hyperplane_sig"),
-      (exprs: Seq[Expression]) => HyperplaneSig(exprs.head,
-        exprs(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("md5_lower64"), info("md5_lower64"),
-      (exprs: Seq[Expression]) => Md5Lower64(exprs.head)))
-    e.injectFunction((FunctionIdentifier("token_pairs"), info("token_pairs"),
-      (exprs: Seq[Expression]) => TokenPairs(exprs.head)))
-    // Spark's internal bloom sketch pair (see VectorFunctions.register).
-    e.injectFunction((FunctionIdentifier("graft_bloom_agg"), info("graft_bloom_agg"),
-      (exprs: Seq[Expression]) => new org.apache.spark.sql.catalyst.expressions
-        .aggregate.BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression()))
-    e.injectFunction((FunctionIdentifier("graft_might_contain"), info("graft_might_contain"),
-      (exprs: Seq[Expression]) => GraftMightContain(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("topk_pairs"), info("topk_pairs"),
-      (exprs: Seq[Expression]) => graft.functions.TopKAgg.build(exprs)))
-    e.injectFunction((FunctionIdentifier("cms_estimate"), info("cms_estimate"),
-      (exprs: Seq[Expression]) => CmsEstimate(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("pq_encode"), info("pq_encode"),
-      (exprs: Seq[Expression]) => PqEncode(exprs.head)))
-    e.injectFunction((FunctionIdentifier("pq_dtable"), info("pq_dtable"),
-      (exprs: Seq[Expression]) => PqDtable(exprs.head)))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    VectorFunctions.functions.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
 }

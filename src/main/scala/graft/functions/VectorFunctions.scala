@@ -289,11 +289,6 @@ object VectorFunctions {
       copy(child = c)
   }
 
-  /** 8-bit random-hyperplane LSH signature of a double vector: bit p is the
-    * sign of the dot product with pseudo-plane p, whose component j is a
-    * hash-derived value in [-1, 1] (deterministic across runs — no stored
-    * codebook needed). One loop per row; the higher-order-function
-    * formulation (zip_with + aggregate per plane) is interpreted. */
   case class TokenPairs(child: Expression) extends UnaryExpression {
     override def dataType: DataType = ArrayType(
       StructType(Seq(StructField("ta", StringType), StructField("tb", StringType))),
@@ -383,20 +378,6 @@ object VectorFunctions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  case class HyperplaneSig(child: Expression, planes: Int) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "hyperplane_sig"
-
-    override def nullSafeEval(v: Any): Any =
-      VectorKernels.hyperplaneSig(v.asInstanceOf[ArrayData], planes)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        c => s"graft.functions.VectorKernels.hyperplaneSig($c, $planes)")
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   /** All md-seeded ±1 plane projections of a float/double embedding in one
     * tight kernel loop — see [[VectorKernels.mdPlaneDots]]. */
   case class MdPlaneDots(child: Expression, planes: Int) extends UnaryExpression {
@@ -475,6 +456,48 @@ object VectorFunctions {
       copy(left = newLeft, right = newRight)
   }
 
+  /** A plan-time literal argument (plane count, shingle width, ...). */
+  private def intArg(e: Expression): Int = e.eval(InternalRow.empty).asInstanceOf[Int]
+
+  /** The graft function library as (SQL name, builder): the one table both
+    * [[register]] and [[graft.GraftExtensions]] install from. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_similarity" -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
+    "simhash64" -> (exprs => SimHash64(exprs.head)),
+    "minhash_signature" -> (exprs => MinHashSignature(exprs.head, intArg(exprs(1)))),
+    "shingle_set" -> (exprs => ShingleSet(exprs.head, intArg(exprs(1)))),
+    "shingle_gen" -> (exprs => ShingleGenerate(exprs.head, intArg(exprs(1)))),
+    "rolling_hash64" -> (exprs => RollingHash64(exprs.head)),
+    "md5_lower64" -> (exprs => Md5Lower64(exprs.head)),
+    "token_pairs" -> (exprs => TokenPairs(exprs.head)),
+    // Spark ships a distributed bloom-filter aggregate (used internally by
+    // runtime join filtering) that it does NOT expose in the public
+    // registry: BloomFilterAggregate builds the sketch as a tree-reduced
+    // aggregate. The probe half is graft-owned (GraftMightContain) — same
+    // public serialized format — because Spark's internal probe expression
+    // miscompiles constant-folded negative probe values (janino parse).
+    // Together they give the membership primitive for sketch-based ingest
+    // dedup (q_dedup_bloom) without collecting the filter to the driver.
+    "graft_bloom_agg" -> (exprs => new org.apache.spark.sql.catalyst.expressions
+      .aggregate.BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
+      .toAggregateExpression()),
+    "graft_might_contain" -> (exprs => GraftMightContain(exprs(0), exprs(1))),
+    // Bounded top-k pair selection (TypedImperativeAggregate; TopKAgg.scala)
+    // — the zero-sort spelling of the k-NN queries' rank-window tails.
+    "topk_pairs" -> (exprs => TopKAgg.build(exprs)),
+    "cms_estimate" -> (exprs => CmsEstimate(exprs(0), exprs(1))),
+    "pq_encode" -> (exprs => PqEncode(exprs.head)),
+    "pq_dtable" -> (exprs => PqDtable(exprs.head)),
+    "md_plane_dots" -> (exprs => MdPlaneDots(exprs.head, intArg(exprs(1)))),
+    "quantize16" -> (exprs => Quantize16(exprs.head)),
+    "cosine_similarity_int16" -> (exprs => CosineSimilarityInt16(exprs(0), exprs(1))),
+    "l2sq_int16" -> (exprs => L2SqInt16(exprs(0), exprs(1))),
+    "nfc_normalize" -> (exprs => NfcNormalize(exprs.head)),
+    "strip_accents" -> (exprs => StripAccents(exprs.head)),
+    "multi_pattern_count" -> (exprs => MultiPatternCount(exprs.head,
+      exprs(1).eval(InternalRow.empty).asInstanceOf[ArrayData]
+        .toObjectArray(StringType).map(_.asInstanceOf[UTF8String].toString).toSeq)))
+
   /** Sessions already holding the graft functions. Weak keys: a dropped
     * session must not be pinned by the guard. Without the guard every query
     * re-registered the whole set, flooding the log with
@@ -488,80 +511,9 @@ object VectorFunctions {
   def register(spark: SparkSession): Unit = registered.synchronized {
     if (!registered.add(spark)) return
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cosine_similarity", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => MinHashSignature(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "shingle_set",
-      exprs => ShingleSet(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "shingle_gen",
-      exprs => ShingleGenerate(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "rolling_hash64", exprs => RollingHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "md5_lower64", exprs => Md5Lower64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "token_pairs", exprs => TokenPairs(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "hyperplane_sig",
-      exprs => HyperplaneSig(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Int]), "scala_udf")
-    // Spark ships a distributed bloom-filter aggregate (used internally by
-    // runtime join filtering) that it does NOT expose in the public
-    // registry: BloomFilterAggregate builds the sketch as a tree-reduced
-    // aggregate. The probe half is graft-owned (GraftMightContain) — same
-    // public serialized format — because Spark's internal probe expression
-    // miscompiles constant-folded negative probe values (janino parse).
-    // Together they give the membership primitive for sketch-based ingest
-    // dedup (q_dedup_bloom) without collecting the filter to the driver.
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => GraftMightContain(exprs(0), exprs(1)), "scala_udf")
-    // Bounded top-k pair selection (TypedImperativeAggregate; TopKAgg.scala)
-    // — the zero-sort spelling of the k-NN queries' rank-window tails.
-    reg.createOrReplaceTempFunction(
-      "topk_pairs", TopKAgg.build, "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "cms_estimate", exprs => CmsEstimate(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "pq_dtable", exprs => PqDtable(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "md_plane_dots",
-      exprs => MdPlaneDots(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "quantize16", exprs => Quantize16(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "cosine_similarity_int16",
-      exprs => CosineSimilarityInt16(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "l2sq_int16", exprs => L2SqInt16(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "strip_accents", exprs => StripAccents(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "multi_pattern_count",
-      exprs => MultiPatternCount(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[
-          org.apache.spark.sql.catalyst.util.ArrayData]
-          .toObjectArray(StringType)
-          .map(_.asInstanceOf[UTF8String].toString).toSeq), "scala_udf")
+    functions.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_similarity", a, b)
@@ -573,8 +525,6 @@ object VectorFunctions {
   def rollingHash(tokens: Column): Column = call_function("rolling_hash64", tokens)
   def md5Lower(s: Column): Column = call_function("md5_lower64", s)
   def tokenPairs(tokens: Column): Column = call_function("token_pairs", tokens)
-  def hyperplaneSig(v: Column, planes: Int): Column =
-    call_function("hyperplane_sig", v, org.apache.spark.sql.functions.lit(planes))
   def mdPlaneDots(v: Column, planes: Int): Column =
     call_function("md_plane_dots", v, org.apache.spark.sql.functions.lit(planes))
   def quantize16(v: Column): Column = call_function("quantize16", v)

@@ -147,27 +147,9 @@ object VectorKernels {
     ArrayData.toArrayData(out.toArray)
   }
 
-  def hyperplaneSig(arr: ArrayData, planes: Int): Long = {
-    val n = arr.numElements()
-    var bucket = 0L
-    var p = 0
-    while (p < planes) {
-      var dot = 0.0
-      var j = 0
-      while (j < n) {
-        dot += arr.getDouble(j) *
-          ((XXH64.hashLong(p.toLong * 131L + j, 42L) % 1000L) / 1000.0)
-        j += 1
-      }
-      if (dot > 0) bucket |= (1L << p)
-      p += 1
-    }
-    bucket
-  }
-
   // ------------------------------------------------------------------
   // md-seeded sign-random-projection kernels (the cross-engine ±1 plane
-  // family shared by q_ann_recall / q_knn_graph_ann): sign(p, i) = ±1
+  // family behind every LSH banding, Similarity.mdPlaneBanded): sign(p, i) = ±1
   // from md5Lower64("hp-<p>-<i>") & 1, cached per (planes, dims); vectors
   // quantize to ⌊1000·x + 0.5⌋ (exact long math, reproduced verbatim by
   // the DuckDB oracles). One tight loop per row replaces the

@@ -981,9 +981,11 @@ object Dedup {
         val vq = emb.select(col("vec_id"),
           VectorFunctions.quantize16(col("embedding")).as("vq"))
         val seedEmb = emb.filter(pmod(col("vec_id"), lit(stride)) === 0)
-        val bandedV = Similarity.mdPlaneBanded(emb, tables = 8,
+        val bandedV = Similarity.mdPlaneBanded(
+          emb.select("vec_id", "embedding"), tables = 8,
           rowsPerTable = rpt, dims = 64)
-        val bandedC = Similarity.mdPlaneBanded(seedEmb, tables = 8,
+        val bandedC = Similarity.mdPlaneBanded(
+            seedEmb.select("vec_id", "embedding"), tables = 8,
             rowsPerTable = rpt, dims = 64)
           .select(col("tbl"), col("bucket"), col("vec_id").as("cid"))
         val cands = bandedV.join(bandedC, Seq("tbl", "bucket"))

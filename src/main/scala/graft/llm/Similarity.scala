@@ -3,7 +3,7 @@ package graft.llm
 import graft.{Q, Tables}
 import graft.Q._
 import graft.functions.{TopKAgg, VectorFunctions}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   * 100 TB design: brute force broadcasts the (small) query set against the
   * partitioned corpus — a map-side nested loop with no shuffle until the
   * final per-query top-k (WindowGroupLimit keeps k rows per partition before
-  * the exchange). The ANN variant is multi-table hyperplane LSH (one 64-bit
-  * signature, bit-sliced into L independent tables) — geometry sized to the
-  * corpus's measured similarity profile, see [[annTopK]].
+  * the exchange). Every LSH variant bands through one cross-engine
+  * random-hyperplane family, [[mdPlaneBanded]]; [[annTopK]] sizes its
+  * geometry to the corpus's measured similarity profile.
   */
 object Similarity {
 
@@ -27,7 +27,7 @@ object Similarity {
 
   /** Round count for q_graph_pagerank — ONE constant drives both the Spark
     * iteration loop and the unrolled oracle, so the two can never silently
-    * diverge (ADVICE r10). Declared ABOVE `qs`: the oracle string is built
+    * diverge. Declared ABOVE `qs`: the oracle string is built
     * eagerly during object init, and object vals initialize in declaration
     * order. */
   private[graft] val pagerankIters = 4
@@ -246,17 +246,19 @@ object Similarity {
           ON r.vec_id = g.nbr_id AND r.nbr_id = g.vec_id
         ORDER BY g.vec_id, g.rnk, g.nbr_id""")),
 
-    // ANN: multi-table random-hyperplane LSH (deterministic pseudo-planes;
-    // see annTopK for the recall math). The hyperplane signature kernel is
-    // not SQL-reproducible, so the driver-visible contract is the
+    // ANN: multi-table random-hyperplane LSH over mdPlaneBanded (see annTopK
+    // for the recall math). The driver-visible contract is the
     // boolean-validated form (same pattern as q_agg_approx_*): the ANN picks
     // are scored against the EXACT top-k (computed independently on both
     // engines), and the query emits one row of engine-independent anchors
     // (query count, min/max k-th exact cosine — raw doubles, order-
     // insensitive aggregates) plus `recall_ok` = mean recall >= 0.3. The
-    // floor is meaningful (random picks score ~k/N ~= 0.005; measured mean
-    // is 0.53 @ sf0.01, 0.63 @ sf0.1 per the geometry analysis on annTopK)
-    // yet safe against per-query variance (individual queries range 0..1).
+    // bucket bits themselves are cross-engine (q_ann_recall hash-checks the
+    // same planes); the hash-checked per-pick form of this search is
+    // q_knn_graph_ann. The floor is meaningful (random picks score
+    // ~k/N ~= 0.005; measured mean is 0.80 @ sf0.001, 0.67 @ sf0.01,
+    // 0.77 @ sf0.1) yet safe against per-query variance (individual
+    // queries range 0..1).
     "q_similarity_ann" -> Q(
       fn = (s, d) => {
         val ann = annTopK(s, Tables(s, d, "embeddings"), k = 3)
@@ -289,10 +291,9 @@ object Similarity {
     // the per-plane collision S-curve; the actual recall/cost trade
     // depends on the corpus's similarity profile).
     //
-    // Unlike q_similarity_ann (whose XXH64 hyperplane kernel has no SQL
-    // spelling, forcing a boolean-validated contract), this audit uses a
-    // CROSS-ENGINE hash family so every bucket bit is reproduced in
-    // DuckDB and the whole table is hash-checked: planes are ±1
+    // The audit bands through mdPlaneBanded, the CROSS-ENGINE hash family,
+    // so every bucket bit is reproduced in DuckDB and the whole table is
+    // hash-checked: planes are ±1
     // sign-random-projections seeded by md5-lower-64 of "hp-<p>-<i>"
     // (constant-folded — data never feeds the plane hash), and vectors
     // are quantized to integers (⌊1000·x+0.5⌋) so the per-plane dot
@@ -307,7 +308,8 @@ object Similarity {
     "q_ann_recall" -> Q(
       fn = (s, d) => {
         VectorFunctions.register(s)
-        val banded = mdPlaneBanded(Tables(s, d, "embeddings"),
+        val banded = mdPlaneBanded(
+          Tables(s, d, "embeddings").select("vec_id", "embedding"),
           tables = 8, rowsPerTable = 5, dims = 64)
         val e = Tables(s, d, "embeddings").select(col("vec_id"))
         val queries = banded.filter(col("vec_id") < 10)
@@ -496,18 +498,15 @@ object Similarity {
 
     // Corpus-wide ANN k-NN graph — the 100-TB construction q_knn_graph's
     // label blocking stands in for: EVERY vector's top-3 cosine neighbors
-    // among its hyperplane-LSH bucket colliders. The same cross-engine
-    // md5-seeded plane family makes the whole graph hash-checkable in
-    // DuckDB, unlike the XXH64-kernel q_similarity_ann whose contract is
-    // boolean-validated.
+    // among its hyperplane-LSH bucket colliders. The cross-engine
+    // md5-seeded plane family (mdPlaneBanded) and the long-exact int16
+    // cosine make the whole graph hash-checkable in DuckDB.
     //
-    // Round-10 rework of the two r9 scale flags, plus the capped-bucket
-    // lesson the r10 decade sweep itself taught:
+    // Three scale invariants:
     //   1. GEOMETRY IS CORPUS-SIZED, not fixed: 8 tables of
     //      rowsPerTable = sizedRowsPerTable(N) bits each — the smallest
     //      r ≥ 5 with 2^r ≥ ⌈N/32⌉ — so RANDOM collisions stay ~32 per
-    //      bucket at any corpus size (the r9 fixed 32-bucket geometry
-    //      told the reader to "tune rowsPerTable up" by hand). N is a
+    //      bucket at any corpus size, with no hand-tuned width. N is a
     //      plan-time statistics read (the count a production planner
     //      takes from table stats; geometry must be literal so the plane
     //      sign vectors constant-fold); the oracle re-derives r from
@@ -537,16 +536,14 @@ object Similarity {
     // tail (cross-table pair dedup + per-vector top-3) is ONE
     // `topk_pairs` typed aggregate (TopKAgg.scala) — map-side partial
     // buffers of ≤3 pairs per vector, ZERO sorts, and the pair relation
-    // itself never crosses an exchange (the r9 spelling shuffled it once
-    // for the (vec_id, nbr_id) dedup agg and sorted it twice for the rank
-    // window; that tail measured ~4× at sf100, BENCH_NOTES r10).
+    // itself never crosses an exchange (a dedup agg + rank-window tail
+    // shuffles it once and sorts it twice: ~4× at sf100, BENCH_NOTES).
     "q_knn_graph_ann" -> Q(
       fn = (s, d) => knnGraphAnn(s, d, tables = 8, cap = 64),
       oracle = Some(knnGraphAnnOracle(tables = 8, cap = 64))),
 
-    // SECOND ANN OPERATING POINT (r12 verdict ask #6): the same k-NN
-    // graph at the CHEAP end of the measured recall/cost curve —
-    // (tables, cap) resolved by [[annOperatingPoint]] from a 0.40 recall
+    // SECOND ANN OPERATING POINT: the same k-NN graph at the CHEAP end of
+    // the measured recall/cost curve — (tables, cap) resolved by [[annOperatingPoint]] from a 0.40 recall
     // target (q_ann_recall's calibrated L=4 row), pair work bounded by
     // N·4·32 = 1/4 of the flagship point's N·8·64. The decade sweep
     // measures both keys at sf10 so the cost curve is a table, not a
@@ -751,7 +748,7 @@ object Similarity {
     * 1 ulp between engines at exact powers of two); [[sizedRptLadderSql]]
     * is the DuckDB spelling of the identical comparison ladder. */
   /** Shared k-NN-graph-by-hyperplane-LSH plan, parameterized on the ANN
-    * operating point (r12 verdict ask #6): `tables` hash tables of
+    * operating point: `tables` hash tables of
     * corpus-sized bit width (sizedRowsPerTable — random collisions ~32 per
     * bucket at any N), candidate lists capped at `cap` per (table, bucket).
     * Total pair work is hard-bounded by N·tables·cap; recall is whatever
@@ -766,8 +763,8 @@ object Similarity {
     val rpt = sizedRowsPerTable(emb.count())
     val vq = emb.select(col("vec_id"),
       VectorFunctions.quantize16(col("embedding")).as("vq"))
-    val banded = mdPlaneBanded(emb, tables = tables, rowsPerTable = rpt,
-        dims = 64)
+    val banded = mdPlaneBanded(emb.select("vec_id", "embedding"),
+        tables = tables, rowsPerTable = rpt, dims = 64)
       .join(vq, Seq("vec_id"))
     val capped = banded
       .withColumn("rn", row_number().over(
@@ -844,10 +841,9 @@ object Similarity {
 
   /** Target recall → (tables, candidate cap), resolved against
     * q_ann_recall's MEASURED calibration table rather than LSH theory
-    * (r12 verdict ask #6: the 912.9 s sf100 row is "the honest price of
-    * ~0.6 recall" — this makes the trade a parameter). Measured on the
-    * sf0.1 corpus (2000 vectors, 5-bit tables, engine-computed and
-    * DuckDB-verified, r13):
+    * — the recall/cost trade is a parameter, not the fixed price of ~0.6
+    * recall (912.9 s at sf100). Measured on the sf0.1 corpus (2000
+    * vectors, 5-bit tables, engine-computed and DuckDB-verified):
     *
     *   tables L :  1      2      4      8
     *   recall@3 :  0.100  0.233  0.400  0.633
@@ -882,34 +878,38 @@ object Similarity {
     (5 to 15).map(j => s"+ (CASE WHEN m > ${1L << j} THEN 1 ELSE 0 END)")
       .mkString(" ")
 
-  /** (vec_id, tbl, bucket) banding of EVERY vector under the cross-engine
-    * ±1 sign-random-projection family (planes seeded by md5-lower-64 of
-    * "hp-<p>-<i>", constant-folded; vectors integer-quantized to
-    * ⌊1000·x+0.5⌋ so the per-plane dot product is exact integer
-    * arithmetic). All `tables × rowsPerTable` projections are computed in
-    * ONE map pass; the output is id-only — 3 longs per (vector, table).
-    * Shared by q_ann_recall (calibration) and q_knn_graph_ann (the
-    * corpus-wide ANN graph). */
+  /** The one LSH banding of the similarity and dedup code: every row of
+    * `embeddings` under the cross-engine ±1 sign-random-projection family
+    * (planes seeded by md5-lower-64 of "hp-<p>-<i>", constant-folded;
+    * vectors integer-quantized to ⌊1000·x+0.5⌋ so the per-plane dot
+    * product is exact integer arithmetic). All `tables × rowsPerTable`
+    * projections are computed in ONE map pass. One output row per
+    * (vector, table): the caller's columns other than `embedding`, plus
+    * `tbl` and `bucket` — id-only (3 longs) for a `(vec_id, embedding)`
+    * input. */
   private[graft] def mdPlaneBanded(embeddings: DataFrame,
       tables: Int, rowsPerTable: Int, dims: Int): DataFrame = {
     VectorFunctions.register(embeddings.sparkSession)
     val planes = tables * rowsPerTable
-    // All projections in ONE codegen'd kernel pass (md_plane_dots): the r9
-    // spelling built the same dots from aggregate ∘ zip_with over literal
-    // ±1 arrays — higher-order functions never enter codegen, so it paid
-    // planes×dims interpreted lambda dispatches per row (~1.5 s of every
-    // sf0.1 banding query). The kernel's sign table derives from the same
+    val kept = embeddings.columns.filter(_ != "embedding").map(col).toSeq
+    // All projections in ONE codegen'd kernel pass (md_plane_dots): the
+    // same dots spelled as aggregate ∘ zip_with over literal ±1 arrays
+    // never enter codegen (higher-order functions are interpreted) and
+    // cost planes×dims lambda dispatches per row (~1.5 s of every sf0.1
+    // banding query). The kernel's sign table derives from the same
     // md5Lower64("hp-p-i") & 1 family the DuckDB oracles replicate.
-    val e = embeddings
-      .select(col("vec_id"),
-        VectorFunctions.mdPlaneDots(col("embedding"), planes).as("dps"))
-    def bucketCol(t: Int): Column = (0 until rowsPerTable).map { j =>
-      when(element_at(col("dps"), t * rowsPerTable + j + 1) >= 0,
+    val e = embeddings.select(kept :+
+      VectorFunctions.mdPlaneDots(col("embedding"), planes).as("dps"): _*)
+    // One bucket expression of rowsPerTable terms, indexed by the exploded
+    // table number. Spelled per table with literal indices, the banding is
+    // tables × rowsPerTable CASE terms that every plan and AQE re-plan of
+    // every join side walks: at 12 × 5 that planned annTopK ~40 ms slower.
+    val bucket = (0 until rowsPerTable).map { j =>
+      when(element_at(col("dps"), col("tbl") * rowsPerTable + (j + 1)) >= 0,
         lit(1L << j)).otherwise(0L)
     }.reduce(_ + _)
-    e.select(col("vec_id"),
-      posexplode(array((0 until tables).map(bucketCol): _*))
-        .as(Seq("tbl", "bucket")))
+    e.select(kept ++ Seq(col("dps"), explode(lit((0 until tables).toArray)).as("tbl")): _*)
+      .select(kept ++ Seq(col("tbl"), bucket.as("bucket")): _*)
   }
 
   /** Ranked within-label k-NN edges (the expensive stage of q_knn_graph).
@@ -927,8 +927,8 @@ object Similarity {
       col("v").as("nv"))
     // topk_pairs tail (TopKAgg.scala): grouping by (label, vec_id) is
     // already satisfied by the join's label-hash partitioning, so the
-    // whole top-k costs ZERO extra exchanges AND zero sorts (the r9 rank
-    // window needed a per-partition sort of the full pair relation before
+    // whole top-k costs ZERO extra exchanges AND zero sorts (a rank window
+    // would sort the full pair relation per partition before
     // WindowGroupLimit could prune).
     e.join(nbrs, Seq("label"))
       .filter(col("vec_id") =!= col("nbr_id"))
@@ -968,9 +968,9 @@ object Similarity {
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     // topk_pairs tail: the map-side nested loop reduces to ≤k pairs per
-    // (query, partition) BEFORE the only exchange — the r9 rank window
-    // shuffled the full N·|queries| scored relation to |queries|
-    // partitions and sorted it there.
+    // (query, partition) BEFORE the only exchange — a rank window would
+    // shuffle the full N·|queries| scored relation to |queries|
+    // partitions and sort it there.
     e.join(broadcast(queries), col("vec_id") =!= col("q_id"))
       .select(col("q_id"),
         VectorFunctions.cosineSim(col("qv"), col("v")).as("cos"), col("vec_id"))
@@ -1059,8 +1059,8 @@ object Similarity {
       .select(col("vec_id").as("cent_id"), col("v").as("cv")))
 
     // Cell assignment via topk_pairs (TopKAgg.scala): the broadcast
-    // nested loop reduces to one ≤n-cell buffer per point map-side (the
-    // r9 rank window exchanged the N·nlist scored relation and sorted
+    // nested loop reduces to one ≤n-cell buffer per point map-side (a
+    // rank window would exchange the N·nlist scored relation and sort
     // it); the vector rides the aggregate as first() — groupwise
     // constant — instead of a second join back to the corpus.
     def nearestCells(points: DataFrame, idCol: String, vecCol: String, n: Int) =
@@ -1093,40 +1093,33 @@ object Similarity {
   }
 
   /** Multi-TABLE random-hyperplane LSH (the standard cosine-ANN
-    * construction): L independent b-plane hash tables, all derived from
-    * ONE 64-bit signature kernel call — table t's bucket is bit-slice t of
-    * the signature, exactly the simhash banding trick. A neighbor at angle
-    * θ shares a vector's bucket in at least one table with probability
-    * 1 − (1 − (1−θ/π)^b)^L. The table geometry is sized to the corpus's
-    * actual similarity profile: its nearest neighbors sit at cos ≈ 0.33
-    * (θ≈71°, collision p≈0.61/plane), so 8-plane tables give p⁸≈0.02 and
-    * near-zero recall no matter how many tables (measured 0.13@3); 5-plane
-    * × 12 tables gives 1−(1−0.61⁵)¹²≈0.64 while scanning ~12/32 of the
-    * corpus — the honest LSH trade at weak similarity. (Dedup-grade
-    * cos≥0.9 neighbors would recall ≈1 here with the same geometry.)
-    * Candidates found by several tables collapse with a distinct on the
-    * scored pair; the corpus is hashed once and shuffled by
-    * (table, bucket). The 64-dim vectors ride the banding explode here
-    * (512 bytes); at real embedding width band ids only and join vectors
-    * back per candidate (see minHashDedup). */
+    * construction) over [[mdPlaneBanded]]: L = 12 independent tables of
+    * b = 5 planes each. A neighbor at angle θ shares a vector's bucket in
+    * at least one table with probability 1 − (1 − (1−θ/π)^b)^L. The table
+    * geometry is sized to the corpus's actual similarity profile: its
+    * nearest neighbors sit at cos ≈ 0.33 (θ≈71°, collision p≈0.61/plane),
+    * so 8-plane tables give p⁸≈0.02 and near-zero recall no matter how
+    * many tables; 5-plane × 12 tables gives 1−(1−0.61⁵)¹²≈0.64 while
+    * scanning ~12/32 of the corpus — the honest LSH trade at weak
+    * similarity (measured recall@3: 0.80 / 0.67 / 0.77 at sf0.001 /
+    * sf0.01 / sf0.1). Dedup-grade cos≥0.9 neighbors would recall ≈1 with
+    * the same geometry. The corpus is banded once and joins the (tiny,
+    * broadcast) query buckets on (tbl, bucket); the query rows are a
+    * filter of that same banded frame. The 64-dim double vectors ride the
+    * banding explode (512 bytes); at real embedding width band ids only
+    * and join vectors back per candidate (see minHashDedup). */
   def annTopK(spark: SparkSession, embeddings: DataFrame, k: Int): DataFrame = {
     VectorFunctions.register(spark)
-    val tables = 12
-    val e = embeddings
-      .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
-      .withColumn("sig", VectorFunctions.hyperplaneSig(col("v"), 64))
-    def banded(df: DataFrame) = df.select(
-      col("*"),
-      posexplode(array((0 until tables).map(t =>
-        shiftrightunsigned(col("sig"), t * 5).bitwiseAND(lit(0x1FL))): _*))
-        .as(Seq("table", "bucket")))
-    val corpus = banded(e).select(col("table"), col("bucket"), col("vec_id"), col("v"))
-    val queries = banded(e.filter(col("vec_id") < 10))
-      .select(col("table"), col("bucket"), col("vec_id").as("q_id"), col("v").as("qv"))
-    // topk_pairs tail: per-id dedup inside the aggregate replaces the
-    // cross-table `.distinct()` exchange, and the rank window's
-    // shuffle+sort collapses into the same single aggregation.
-    corpus.join(queries, Seq("table", "bucket"))
+    val corpus = mdPlaneBanded(
+      embeddings.select(col("vec_id"), col("embedding"),
+        transform(col("embedding"), _.cast(DoubleType)).as("v")),
+      tables = 12, rowsPerTable = 5, dims = 64)
+    val queries = corpus.filter(col("vec_id") < 10)
+      .select(col("tbl"), col("bucket"), col("vec_id").as("q_id"), col("v").as("qv"))
+    // topk_pairs tail: a candidate found by several tables collapses inside
+    // the aggregate (per-id dedup), so the cross-table dedup and the
+    // per-query rank cost no exchange or sort beyond the one aggregation.
+    corpus.join(queries, Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"),
         VectorFunctions.cosineSim(col("qv"), col("v")).as("cos"), col("vec_id"))

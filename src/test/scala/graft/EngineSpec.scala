@@ -177,6 +177,22 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("mdPlaneBanded is the only LSH banding under src/main") {
+    // One plane family: a second banding kernel would split the
+    // recall/cost curve q_ann_recall measures.
+    val calls = mainSourcesContaining("mdPlaneDots(").flatMap { f =>
+      val src = java.nio.file.Files.readString(java.nio.file.Paths.get("src/main", f))
+      val defs = """\n  (?:private(?:\[\w+\])? )?def (\w+)""".r.findAllMatchIn(src).toSeq
+      "VectorFunctions\\.mdPlaneDots\\(".r.findAllMatchIn(src).map { m =>
+        f -> defs.takeWhile(_.start < m.start).lastOption.map(_.group(1))
+      }
+    }
+    assert(calls == List("scala/graft/llm/Similarity.scala" -> Some("mdPlaneBanded")),
+      s"mdPlaneDots callers: $calls")
+    for (kernel <- Seq("hyperplaneSig", "HyperplaneSig", "hyperplane_sig"))
+      assert(mainSourcesContaining(kernel).isEmpty, s"$kernel remains in src/main")
+  }
+
   test("GraftExtensions injects the function library at session build time") {
     import org.apache.spark.sql.SparkSession
     val base = TestSpark.spark // ensures a SparkContext exists
@@ -201,6 +217,10 @@ class EngineSpec extends AnyFunSuite {
       assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
       assert(r.getLong(1) != 0L)
       assert(r.getBoolean(2), "bloom probe of a present element must hit")
+      val missing = graft.functions.VectorFunctions.functions.map(_._1)
+        .filterNot(n => s2.sessionState.functionRegistry
+          .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
     } finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)

@@ -50,15 +50,4 @@ class ExpressionEdgeSpec extends AnyFunSuite {
     assert(rows(3L)._1 == Seq("a b c"))
     assert(rows(3L)._2.length == 8)
   }
-
-  test("hyperplane_sig is stable and within 8 bits") {
-    VectorFunctions.register(spark)
-    import spark.implicits._
-    val df = Seq((1L, Seq.fill(64)(0.5)), (2L, Seq.fill(64)(-0.5))).toDF("id", "v")
-    val sig = df.select(col("id"), VectorFunctions.hyperplaneSig(col("v"), 8).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sig.values.forall(s => s >= 0 && s < 256))
-    // negating the vector flips every decided bit
-    assert((sig(1L) ^ sig(2L)) == 255L || sig(1L) + sig(2L) <= 255L)
-  }
 }
