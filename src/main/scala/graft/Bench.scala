@@ -149,8 +149,8 @@ object Bench {
 
   /** Overlay `updates` (key → raw JSON value text) onto a flat one-level
     * JSON object, preserving every existing key not updated. This is what
-    * keeps single-query `SPARK_GRAFT_ONLY`/`SPARK_GRAFT_SKIP` runs from
-    * truncating the full-battery BENCH_*.json files to the filtered keys.
+    * keeps single-query `SPARK_GRAFT_ONLY` runs from truncating the
+    * full-battery BENCH_*.json files to the filtered keys.
     * Existing keys keep their position; new keys append.
     */
   def mergeJson(existing: String, updates: Seq[(String, String)]): String = {
@@ -200,13 +200,13 @@ object Bench {
       queryLoad: Map[String, Double],
       loadStart: Seq[Double], loadEnd: Seq[Double],
       stealPct: Double, cotenantCores: Double, loadOk: Boolean,
-      waitedSec: Long, deferred: Boolean)
+      waitedSec: Long, deferred: Boolean, wallSec: Double)
 
   /** What shaped a battery's timings, echoed into the line's `conf` block
     * so every artifact describes the run that produced it. */
   private[graft] final case class RunConf(
-      sfDir: String, cpus: Int, shufflePartitions: Int, runs: Int,
-      warmup: Boolean, partial: Boolean, codegenCacheMaxEntries: Int,
+      sfDir: String, cpus: Int, shufflePartitions: Int,
+      partial: Boolean, codegenCacheMaxEntries: Int,
       artifactIsolation: Boolean, pageSizeBytes: Long, broadcastBlockBytes: Long)
 
   /** One rendering of a run: the metric JSON line, each BENCH_*.json
@@ -252,7 +252,7 @@ object Bench {
         s""""attempts":${attempts.length},"load_ok":${best.loadOk}}"""
     val confJson =
       s"""{"cpus":${conf.cpus},"shuffle_partitions":${conf.shufflePartitions},""" +
-        s""""runs":${conf.runs},"warmup":${conf.warmup},"partial":${conf.partial},""" +
+        s""""partial":${conf.partial},""" +
         s""""codegen_cache_max_entries":${conf.codegenCacheMaxEntries},""" +
         s""""artifact_isolation":${conf.artifactIsolation},""" +
         s""""page_size_bytes":${conf.pageSizeBytes},""" +
@@ -275,6 +275,35 @@ object Bench {
     Report(line, files, regressions)
   }
 
+  /** Timed runs of a key whose untimed warm-up took `warmupWallS` seconds;
+    * the key reports their median. A key of 0.5 s or more runs 5 times:
+    * single-run stalls of 3-12 s on heavy keys (steal and writeback bursts
+    * that never reproduce in isolation) corrupt a 3-run median with two
+    * inflated runs, a 5-run median rejects them. A cheaper key runs 7
+    * times: its in-battery context varies 2-3x, and the extra samples cost
+    * seconds. A failed warm-up (NaN) sizes nothing: 3 runs. */
+  private[graft] def runCount(warmupWallS: Double): Int =
+    if (warmupWallS.isNaN) 3 else if (warmupWallS < 0.5) 7 else 5
+
+  /** Most battery attempts one Bench run makes. */
+  private[graft] val maxAttempts = 3
+
+  /** Wall seconds from the start of a Bench run within which every attempt
+    * must end, so the run prints its line before an unattended caller
+    * kills it. */
+  private[graft] val budgetSec: Double = 50 * 60.0
+
+  /** Whether to start another battery attempt after `done`, `elapsedSec`
+    * into the run, when a retry first waits up to `waitSec` for a quiet
+    * start. The first attempt always runs. A retry needs a retryable run,
+    * no load_ok attempt yet, fewer than [[maxAttempts]] attempts, and room
+    * in [[budgetSec]] for the wait plus one more attempt as long as the
+    * last. */
+  private[graft] def nextAttempt(
+      done: Seq[Battery], retryable: Boolean, elapsedSec: Double, waitSec: Double): Boolean =
+    done.isEmpty || (retryable && done.length < maxAttempts && !done.exists(_.loadOk) &&
+      elapsedSec + waitSec + done.last.wallSec <= budgetSec)
+
   /** One key's BENCH_IO.json row; `stream` only for keys that ran
     * micro-batches. */
   private def ioJson(r: KeyRow): String = {
@@ -293,6 +322,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val runStartNs = System.nanoTime()
     // SPARK_GRAFT_WAIT_QUIET=<minutes>: poll for a quiet start (1-min
     // load ≤ 0.15) up to the deadline before running, so an attended
     // battery can outwait a co-tenant window instead of burning 20 minutes
@@ -325,31 +355,15 @@ object Bench {
     // the driver never sets it, so round benches always cover everything.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
-    // Scale-sweep knobs (never set by the driver, so round benches keep the
-    // warmup + median methodology): SPARK_GRAFT_RUNS=1 makes the big-SF
-    // full-battery pass affordable (a 100x corpus would otherwise execute
-    // every query 4x); SPARK_GRAFT_WARMUP=0 drops the untimed warmup;
-    // SPARK_GRAFT_SKIP excludes queries whose exact variant is
-    // test-scale-by-design (q_dedup_embed's within-label all-pairs — the
-    // documented scale path is the LSH/IVF/PQ family).
-    val nRunsEnv = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt)
-    val nRuns = nRunsEnv.getOrElse(3)
-    val warmup = sys.env.get("SPARK_GRAFT_WARMUP").forall(_ != "0")
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").toSet).getOrElse(Set.empty[String])
 
     /** One complete battery pass over the (filtered) query set, with its
-      * own ambient capture. Median-of-3 per query — single-shot local
-      * timings vary ±20% with system noise; the median rejects one-off
-      * outliers where best-of-N hides genuine regressions behind one lucky
-      * run. Sub-0.5 s keys get median-of-7: the rotating ambient regression
-      * flags concentrate in <0.5 s keys whose in-battery context differs
-      * 2-3× from isolated runs — more samples shrink the flag list to
-      * genuinely suspicious keys; total cost is a few minutes since the
-      * keys are by definition cheap. Failure-loud: a query that throws must
-      * not silently benchmark as a fast success and deflate the total —
-      * failed keys are excluded from the total and surfaced in the JSON
-      * line. */
+      * own ambient capture. Each key reports the median of [[runCount]]
+      * timed runs: single-shot local timings vary ±20% with system noise,
+      * and the median rejects one-off outliers where best-of-N hides
+      * genuine regressions behind one lucky run. Failure-loud: a query that
+      * throws must not silently benchmark as a fast success and deflate the
+      * total — failed keys are excluded from the total and surfaced in the
+      * JSON line. */
     def attemptBattery(waitedSecIn: Long, deferredIn: Boolean): Battery = {
       // Ambient evidence FIRST — before the per-query work spins our own
       // threads up, so "start" measures the co-tenant, not this JVM's ramp
@@ -401,7 +415,7 @@ object Bench {
       // above is the clean ambient signal.
       val queryLoad = scala.collection.mutable.LinkedHashMap[String, Double]()
       val runs = SparkEntry.queries
-        .filter { case (name, _) => (only.isEmpty || only(name)) && !skip(name) }
+        .filter { case (name, _) => only.isEmpty || only(name) }
         .map { case (name, fn) =>
         // In-battery drift control: a full GC at each query boundary stops
         // the previous queries' garbage from being collected INSIDE the next
@@ -411,35 +425,15 @@ object Bench {
         System.gc()
         // One untimed warmup per query: the first execution of a plan absorbs
         // JIT + codegen compilation (measured up to 3.6x skew on run 1),
-        // which is startup cost, not operator cost. Its wall also sizes the
-        // run count: sub-0.5 s keys → 7 runs, unless the sweep
-        // pinned SPARK_GRAFT_RUNS explicitly.
-        val w = if (warmup) timeOnce(name, fn) else Double.NaN
-        // ≥0.5 s keys run median-of-5: certified batteries show single-run
-        // stalls of 3-12 s on heavy keys
-        // (q_stream_topn runs [4.97, 8.43, 17.62], q_dedup_minhash_audit
-        // [2.81, 9.49, 1.70] — transient steal/writeback bursts, all
-        // non-reproducing in isolation); a 3-run median is corrupted by
-        // TWO inflated runs, a 5-run median rejects them. Measured excess
-        // of median over per-key min across the certified battery's 3-run
-        // keys: 23.7 s — more than any single operator optimization on
-        // the board. Costs ~+5 min battery wall (the affected keys sum
-        // ~150 s/run). Sub-0.5 s keys keep median-of-7.
-        val runCount =
-          if (warmup && nRunsEnv.isEmpty && !w.isNaN) (if (w < 0.5) 7 else 5)
-          else nRuns
-        val ts = Seq.fill(runCount)(timeOnce(name, fn))
+        // which is startup cost, not operator cost. Its wall sizes the run
+        // count.
+        val warm = timeOnce(name, fn)
+        val ts = Seq.fill(runCount(warm))(timeOnce(name, fn))
         queryLoad(name) = loadAvg().head
         name -> ts
       }
       val results = runs
-        .map { case (name, ts) =>
-          // true median: average the two middle elements for even run
-          // counts (upper-middle alone biases even-run sweeps upward)
-          val s = ts.sorted
-          val mid = s.length / 2
-          name -> (if (s.length % 2 == 1) s(mid) else (s(mid - 1) + s(mid)) / 2.0)
-        }
+        .map { case (name, ts) => name -> ts.sorted.apply(ts.length / 2) }
         .filter { case (name, _) => !failed.contains(name) }
       val loadEnd = loadAvg()
       val (jifT1, jifS1, jifB1) = cpuJiffies()
@@ -471,18 +465,17 @@ object Bench {
       val loadOk = loadStart.head <= 0.15 && stealPct <= 3.0 && cotenantCores <= 0.25
       Battery(results.toSeq, runs.toSeq, failed.toSeq, ioProfile.toSeq,
         queryLoad.toMap, loadStart, loadEnd, stealPct, cotenantCores, loadOk,
-        waitedSecIn, deferredIn)
+        waitedSecIn, deferredIn, wallSec)
     }
 
     // Battery-level auto-retry: on a gate failure the canonical full
     // battery retries, outwaiting the co-tenant between attempts, and the
-    // best attempt's artifact ships. Partial runs and off-sf0.1 sweeps
-    // never retry: the gate only certifies the canonical battery.
-    val retryable = sfDir.endsWith("sf0.1") && only.isEmpty && skip.isEmpty
-    val maxAttempts = if (retryable) 3 else 1
+    // best attempt's artifact ships. The gate only certifies the canonical
+    // battery, so nothing else retries.
+    val retryable = sfDir.endsWith("sf0.1") && only.isEmpty
     val conf = RunConf(sfDir, spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, nRuns, warmup,
-      partial = only.nonEmpty || skip.nonEmpty,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      partial = only.nonEmpty,
       codegenCacheMaxEntries =
         spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt,
       artifactIsolation =
@@ -491,8 +484,8 @@ object Bench {
       broadcastBlockBytes =
         spark.sparkContext.getConf.getSizeAsKb("spark.broadcast.blockSize") * 1024)
     // The committed per-key baseline for the regression gate — only
-    // meaningful for the canonical sf0.1 battery (a sweep at another SF
-    // would flag everything). Resolved against the working directory,
+    // meaningful for the canonical sf0.1 battery (at another scale factor
+    // every key would flag). Resolved against the working directory,
     // which is the checkout's root under `sbt run`.
     val baselinePath = java.nio.file.Paths.get("BENCH_BASELINE.json")
     val baseline: Map[String, Double] =
@@ -504,21 +497,20 @@ object Bench {
           .fields().asScala.filter(_.getValue.isNumber)
           .map(e => e.getKey -> e.getValue.asDouble()).toMap
       }
-    // Off-battery experiments (scale spot-runs at synthetic SFs) redirect
-    // their artifacts so they never merge foreign-scale timings into the
-    // canonical sf0.1 battery files.
+    // Where the BENCH_*.json files go: the working directory unless a run
+    // keeps its artifacts apart from the committed battery files.
     val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT", ".")
     val attempts = scala.collection.mutable.ArrayBuffer[Battery]()
-    var attempt = 0
-    while (attempt < maxAttempts && !attempts.exists(_.loadOk)) {
-      attempt += 1
-      // Attempt 1 honors SPARK_GRAFT_WAIT_QUIET verbatim (0 = the driver's
-      // no-wait default). Retries always wait — the 1-min load needs ~3
-      // idle minutes to decay from OUR OWN previous attempt, and retrying
-      // straight into the same co-tenant burst is wasted wall — but cap at
-      // max(WAIT_QUIET, 8) minutes so an unattended driver run stays
-      // bounded: worst case 3 × battery + 2 × 8 min.
-      val waitMin = if (attempt == 1) waitQuietMin else math.max(waitQuietMin, 8.0)
+    // Attempt 1 honors SPARK_GRAFT_WAIT_QUIET verbatim (unset = no wait,
+    // the unattended default). Retries always wait — the 1-min load needs ~3 idle
+    // minutes to decay from OUR OWN previous attempt, and retrying straight
+    // into the same co-tenant burst is wasted wall — for up to
+    // max(WAIT_QUIET, 8) minutes, which nextAttempt charges to the budget.
+    val retryWaitMin = math.max(waitQuietMin, 8.0)
+    def elapsedSec = (System.nanoTime() - runStartNs) / 1e9
+    while (nextAttempt(attempts.toSeq, retryable, elapsedSec, retryWaitMin * 60)) {
+      val attempt = attempts.length + 1
+      val waitMin = if (attempt == 1) waitQuietMin else retryWaitMin
       val waited = waitQuiet(waitMin)
       val deferred = waitMin > 0 && loadAvg().head > 0.15
       if (attempt > 1)
@@ -535,6 +527,9 @@ object Bench {
       }
       println(soFar.line)
     }
+    if (retryable && attempts.length < maxAttempts && !attempts.exists(_.loadOk))
+      System.err.println(f"[bench] NO RETRY: the wait and another attempt " +
+        f"would end past the ${budgetSec / 60}%.0f-min budget (${elapsedSec}%.0f s elapsed)")
     val report = render(attempts.toSeq, conf, baseline)
     report.regressions.foreach { case (k, cur, base, load) =>
       System.err.println(

@@ -86,17 +86,14 @@ object Engine {
 
   /** The one session builder of the engine: every main, tool and the test
     * suite go through it, so the correctness dump, the bench and the tests
-    * run under the same resolved config. Shuffle width is
-    * SPARK_GRAFT_SHUFFLE_PARTITIONS, else `cores` (scale sweeps size it to
-    * the corpus; AQE coalesces small shuffles back down). */
+    * run under the same resolved config. Shuffle width is `cores` (AQE
+    * coalesces small shuffles back down). */
   def session(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .map(_.toInt).getOrElse(cores)
     val unitKb = allocationUnit(Runtime.getRuntime.maxMemory) >> 10
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.sql.session.timeZone", "UTC")

@@ -35,13 +35,24 @@ object SparkEntry {
       llm.Features.qs
     ).reduce(_ ++ _)
 
+  /** `query` on a session that holds the graft function library. The
+    * caller may pass any session, not only one `Engine.session` built, so
+    * each call registers the library (once per session) before the query
+    * body resolves a name from it. */
+  private def withLibrary(spark: SparkSession)(query: => DataFrame): DataFrame = {
+    functions.VectorFunctions.register(spark)
+    query
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = withLibrary(spark) {
     all("q_topn_flagship").fn(spark, "/root/testdata/sf0.001")
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (k, q) => k -> q.fn }
+    all.map { case (k, q) =>
+      k -> ((s: SparkSession, d: String) => withLibrary(s)(q.fn(s, d))) }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

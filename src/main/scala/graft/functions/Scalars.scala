@@ -412,7 +412,6 @@ object Scalars {
     // utf8proc agree byte for byte.
     "q_text_normalize" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val nfc = call_function("nfc_normalize", col("raw"))
         Tables(s, d, "documents")
           .select(col("doc_id"), concat(

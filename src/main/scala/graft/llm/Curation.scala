@@ -242,7 +242,6 @@ object Curation {
     // ----------------------------------------------------------------
     "q_split_hash" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         docs(s, d)
           .withColumn("split", splitAssign(col("doc_id")))
           .groupBy("split")
@@ -276,7 +275,6 @@ object Curation {
     // ----------------------------------------------------------------
     "q_mixture_resample" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val counts = docs(s, d).groupBy("source").agg(count(lit(1)).as("n_orig"))
         // Global mean via a 1-row broadcast, not an unpartitioned window —
         // same answer, no single-partition WindowExec in the plan.
@@ -413,7 +411,6 @@ object Curation {
     // same shape.
     "q_quality_classifier" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val w = (t: Column) =>
           shiftrightunsigned(graft.functions.VectorFunctions.md5Lower(
             concat(lit("w-"), t)), 11).cast(DoubleType) /
@@ -453,7 +450,6 @@ object Curation {
     // over ONE corpus scan; the only exchange carries 20 bin rows.
     "q_classifier_calibration" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val w = (t: Column) =>
           shiftrightunsigned(graft.functions.VectorFunctions.md5Lower(
             concat(lit("w-"), t)), 11).cast(DoubleType) /
@@ -596,7 +592,6 @@ object Curation {
     // ----------------------------------------------------------------
     "q_dp_counts" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         Tables.registerViews(s, d)
         s.sql("""
           WITH c AS (SELECT event_type, COUNT(*) AS n FROM events GROUP BY 1),
@@ -679,7 +674,6 @@ object Curation {
     // codegen — the automaton is a plan-time reference object, not a UDF.
     "q_text_substring_scan" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val pats = Seq("slow", "merge part", "stream spark", "data leak")
         Tables(s, d, "documents")
           .select(posexplode(graft.functions.VectorFunctions
@@ -782,7 +776,6 @@ object Curation {
     // vocabulary-sized.
     "q_source_novelty" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val sh = Tables.checkpoint(
           Tables(s, d, "documents")
             .select(col("source"),
@@ -840,7 +833,6 @@ object Curation {
     // trees on both engines, rounded to 8 dp before any cross-row sum).
     "q_dsir" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val tfb = Tables.checkpoint(
           docs(s, d)
             .select(col("doc_id"), col("lang"),

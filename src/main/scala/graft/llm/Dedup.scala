@@ -30,7 +30,6 @@ object Dedup {
     * starts; this is pure map-side).
     */
   private def shingleSets(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     docs(s, d)
       .select(col("doc_id"),
         graft.functions.VectorFunctions.shingleSet(toks, 3).as("tokens"))
@@ -265,7 +264,6 @@ object Dedup {
     // ----------------------------------------------------------------
     "q_dedup_bloom" -> Q(
       fn = (s, d) => {
-        VectorFunctions.register(s)
         graft.Tables.registerViews(s, d)
         s.sql("""
           WITH corpus AS (SELECT text FROM documents WHERE doc_id % 10 <> 0),
@@ -336,7 +334,6 @@ object Dedup {
     // full corpus — only the tuning census samples.
     "q_lsh_tuning" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val sh = Tables(s, d, "documents")
           .filter(col("doc_id") % 4 === 0)
           .select(col("doc_id"),
@@ -436,7 +433,6 @@ object Dedup {
     // reproduce the full pair set, rows+schema+hash.
     "q_dedup_simhash" -> Q(
       fn = (s, d) => {
-        VectorFunctions.register(s)
         val sh = docs(s, d)
           .select(col("doc_id"), VectorFunctions.simhash(toks).as("sh"))
         val banded = sh.select(col("doc_id"), col("sh"),
@@ -520,7 +516,6 @@ object Dedup {
     // block key becomes an LSH signature (see Similarity.annTopK).
     "q_dedup_embed" -> Q(
       fn = (s, d) => {
-        VectorFunctions.register(s)
         val e = Tables(s, d, "embeddings")
           .select(col("label"), col("vec_id"),
             transform(col("embedding"), _.cast(DoubleType)).as("v"))
@@ -605,7 +600,6 @@ object Dedup {
     // crosses the corpus through one exchange and touches it once.)
     "q_dedup_span_rate" -> Q(
       fn = (s, d) => {
-        VectorFunctions.register(s)
         val spans = docs(s, d)
           .select(col("doc_id"), col("source"), toks.as("t"))
           .filter(size(col("t")) >= 16)
@@ -872,7 +866,6 @@ object Dedup {
     // pairs × 16 rows, never corpus².
     "q_dedup_minhash_audit" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val sh = Tables.checkpoint(shingles(s, d))
         val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
         val pairs = sh.select(col("doc_id").as("da"), col("s"))
@@ -972,7 +965,6 @@ object Dedup {
     // ladder — no float log2).
     "q_dedup_semantic" -> Q(
       fn = (s, d) => {
-        VectorFunctions.register(s)
         val tau = 0.4
         val emb = Tables(s, d, "embeddings")
         val n = emb.count()
@@ -983,10 +975,10 @@ object Dedup {
         val seedEmb = emb.filter(pmod(col("vec_id"), lit(stride)) === 0)
         val bandedV = Similarity.mdPlaneBanded(
           emb.select("vec_id", "embedding"), tables = 8,
-          rowsPerTable = rpt, dims = 64)
+          rowsPerTable = rpt)
         val bandedC = Similarity.mdPlaneBanded(
             seedEmb.select("vec_id", "embedding"), tables = 8,
-            rowsPerTable = rpt, dims = 64)
+            rowsPerTable = rpt)
           .select(col("tbl"), col("bucket"), col("vec_id").as("cid"))
         val cands = bandedV.join(bandedC, Seq("tbl", "bucket"))
           .select("vec_id", "cid").distinct()
@@ -1078,7 +1070,6 @@ object Dedup {
     * substrings that occur more than once in the corpus. Input: a
     * (doc_id, text) relation. */
   private[graft] def substrSpans(docsDF: DataFrame, L: Int): DataFrame = {
-    VectorFunctions.register(docsDF.sparkSession)
     val docsT = docsDF
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= L)
@@ -1390,7 +1381,6 @@ object Dedup {
     * exact token-set Jaccard ≥ tau.
     */
   def minHashDedup(docSets: DataFrame, numHashes: Int, bands: Int, tau: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(docSets.sparkSession)
     val rowsPerBand = numHashes / bands
     // Candidate generation shuffles ONLY (band, bandSig, doc_id). The
     // previous formulation carried each doc's full shingle array through

@@ -36,7 +36,6 @@ object Features {
     // convention), so signed-% can't diverge.
     "q_feature_hashing" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         Tables(s, d, "documents")
           .select(col("doc_id"),
             explode(split(col("text"), " ")).as("token"))
@@ -177,7 +176,6 @@ object Features {
     // because shingle is the group key.
     "q_text_shingle_profile" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         Tables.registerViews(s, d)
         s.sql("""
           WITH sh AS (
@@ -220,7 +218,6 @@ object Features {
     // joins as a broadcast — no corpus shuffle beyond the vec_id agg.
     "q_embed_project" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val K = 8
         val signs = s.range(64).toDF("j").crossJoin(s.range(K).toDF("i"))
           .select(col("j"), col("i"),
@@ -372,7 +369,6 @@ object Features {
     // corpus crosses exactly one label-keyed exchange.
     "q_sample_cluster" -> Q(
       fn = (s, d) => {
-        VectorFunctions.register(s)
         val pr = shiftrightunsigned(VectorFunctions.md5Lower(
           concat(lit("cb-"), col("vec_id").cast(StringType))), 11)
           .cast(DoubleType)

@@ -54,7 +54,6 @@ object Similarity {
     // hash-checked per row — must agree exactly.
     "q_similarity_pq" -> Q(
       fn = (s, d) => {
-        VectorFunctions.register(s)
         val codes = VectorFunctions.pqEncode(
           transform(col("embedding"), _.cast(DoubleType)))
         Tables(s, d, "embeddings")
@@ -101,7 +100,6 @@ object Similarity {
     // hash-checked, not just a recall bound.
     "q_similarity_pq_search" -> Q(
       fn = (s, d) => {
-        VectorFunctions.register(s)
         val corpusCodes = Tables(s, d, "embeddings")
           .withColumn("codes", VectorFunctions.pqEncode(
             transform(col("embedding"), _.cast(DoubleType))))
@@ -307,10 +305,9 @@ object Similarity {
     // candidate relation, never corpus²; totals are 1-row broadcasts.
     "q_ann_recall" -> Q(
       fn = (s, d) => {
-        VectorFunctions.register(s)
         val banded = mdPlaneBanded(
           Tables(s, d, "embeddings").select("vec_id", "embedding"),
-          tables = 8, rowsPerTable = 5, dims = 64)
+          tables = 8, rowsPerTable = 5)
         val e = Tables(s, d, "embeddings").select(col("vec_id"))
         val queries = banded.filter(col("vec_id") < 10)
           .select(col("tbl"), col("bucket"), col("vec_id").as("q_id"))
@@ -758,13 +755,12 @@ object Similarity {
     */
   private def knnGraphAnn(
       s: SparkSession, d: String, tables: Int, cap: Int): DataFrame = {
-    VectorFunctions.register(s)
     val emb = Tables(s, d, "embeddings")
     val rpt = sizedRowsPerTable(emb.count())
     val vq = emb.select(col("vec_id"),
       VectorFunctions.quantize16(col("embedding")).as("vq"))
     val banded = mdPlaneBanded(emb.select("vec_id", "embedding"),
-        tables = tables, rowsPerTable = rpt, dims = 64)
+        tables = tables, rowsPerTable = rpt)
       .join(vq, Seq("vec_id"))
     val capped = banded
       .withColumn("rn", row_number().over(
@@ -882,14 +878,14 @@ object Similarity {
     * `embeddings` under the cross-engine ±1 sign-random-projection family
     * (planes seeded by md5-lower-64 of "hp-<p>-<i>", constant-folded;
     * vectors integer-quantized to ⌊1000·x+0.5⌋ so the per-plane dot
-    * product is exact integer arithmetic). All `tables × rowsPerTable`
-    * projections are computed in ONE map pass. One output row per
+    * product is exact integer arithmetic), each at its own array width.
+    * All `tables × rowsPerTable` projections are computed in ONE map
+    * pass. One output row per
     * (vector, table): the caller's columns other than `embedding`, plus
     * `tbl` and `bucket` — id-only (3 longs) for a `(vec_id, embedding)`
     * input. */
   private[graft] def mdPlaneBanded(embeddings: DataFrame,
-      tables: Int, rowsPerTable: Int, dims: Int): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
+      tables: Int, rowsPerTable: Int): DataFrame = {
     val planes = tables * rowsPerTable
     val kept = embeddings.columns.filter(_ != "embedding").map(col).toSeq
     // All projections in ONE codegen'd kernel pass (md_plane_dots): the
@@ -919,7 +915,6 @@ object Similarity {
     * rank ≤ k filter plans a WindowGroupLimit below the sort — PlanSpec
     * pins both. */
   private[graft] def knnEdges(embeddings: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     val e = embeddings
       .select(col("label"), col("vec_id"),
         transform(col("embedding"), _.cast(DoubleType)).as("v"))
@@ -962,7 +957,6 @@ object Similarity {
     * the ground truth the approximate paths are validated against.
     * Broadcast query set, map-side scoring, per-query rank. */
   private def exactTopK(spark: SparkSession, embeddings: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val e = embeddings
       .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
     val queries = e.filter(col("vec_id") < 10)
@@ -1052,7 +1046,6 @@ object Similarity {
     */
   def ivfTopK(spark: SparkSession, embeddings: DataFrame, k: Int,
       nlist: Int, nprobe: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val e = embeddings
       .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
     val codebook = broadcast(e.filter(col("vec_id") < nlist)
@@ -1109,11 +1102,10 @@ object Similarity {
     * banding explode (512 bytes); at real embedding width band ids only
     * and join vectors back per candidate (see minHashDedup). */
   def annTopK(spark: SparkSession, embeddings: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val corpus = mdPlaneBanded(
       embeddings.select(col("vec_id"), col("embedding"),
         transform(col("embedding"), _.cast(DoubleType)).as("v")),
-      tables = 12, rowsPerTable = 5, dims = 64)
+      tables = 12, rowsPerTable = 5)
     val queries = corpus.filter(col("vec_id") < 10)
       .select(col("tbl"), col("bucket"), col("vec_id").as("q_id"), col("v").as("qv"))
     // topk_pairs tail: a candidate found by several tables collapses inside

@@ -52,7 +52,6 @@ object TextAnalysis {
     * the pruned volume. The checkpoint gives consumers exact stats and a
     * corpus-free final plan (PlanSpec pins zero parquet scans above it). */
   def cooccurEdges(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val docs = Tables(s, d, "documents")
     // zero-column count: parquet row-group metadata speed, folded in as a
     // literal so the threshold costs no extra scan in the edge plan
@@ -378,7 +377,6 @@ object TextAnalysis {
     // final low-cardinality count shuffles).
     "q_text_cooccur" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         Tables(s, d, "documents")
           .select(col("doc_id"),
             explode(graft.functions.VectorFunctions.tokenPairs(
@@ -405,7 +403,6 @@ object TextAnalysis {
     // q_dedup_fuzzy).
     "q_pipeline_e2e" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val pairs = Dedup.minHashDedup(
             Tables(s, d, "documents")
               .select(col("doc_id"),
@@ -899,7 +896,6 @@ object TextAnalysis {
     // associative rollup removed the object buffers entirely.
     "q_bpe_encode" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val (vocab, _) = bpeTrain(s, d, iters = 8)
         val docWords = Tables(s, d, "documents")
           .select(col("doc_id"),
@@ -1135,7 +1131,6 @@ object TextAnalysis {
     // division; ln + r4 per the transcendental convention.
     "q_text_pmi" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val arr = Tables.checkpoint(
           Tables(s, d, "documents")
             .select(col("doc_id"), array_sort(array_distinct(toks)).as("ts")))

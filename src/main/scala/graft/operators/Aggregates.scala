@@ -144,7 +144,6 @@ object Aggregates {
     // deterministic on both engines.
     "q_agg_cms" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         graft.Tables.registerViews(s, d)
         s.sql("""
           WITH sk AS (SELECT count_min_sketch(l_partkey, 0.001d, 0.99d, 42) AS s,

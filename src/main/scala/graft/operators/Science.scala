@@ -852,7 +852,6 @@ object Science {
     // convention).
     "q_bootstrap_ci" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val R = 64
         // Poisson(1) inverse CDF: cumulative e⁻¹·Σ1/k! thresholds
         def pois(u: Column): Column =

@@ -186,7 +186,6 @@ object SetSort {
     // equality and does not mask this.
     "q_sample_weighted" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val h = graft.functions.VectorFunctions.md5Lower(
           concat(lit("wsamp-"), col("doc_id").cast(StringType)))
         Tables(s, d, "documents")
@@ -228,7 +227,6 @@ object SetSort {
     // anyway, and the oracle would flag one.)
     "q_sample_reservoir" -> Q(
       fn = (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         import s.implicits._
         val h = shiftrightunsigned(graft.functions.VectorFunctions.md5Lower(
           concat(lit("resv-"), col("doc_id").cast(StringType))), 11)

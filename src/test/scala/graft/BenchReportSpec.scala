@@ -4,17 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `Bench.render` turns the attempts completed so far into the metric line
   * and the four BENCH_*.json files; Bench calls it after every attempt, so
-  * a run killed during a retry still leaves the best attempt behind. */
+  * a run killed during a retry still leaves the best attempt behind.
+  * `Bench.runCount` and `Bench.nextAttempt` are the battery's other two
+  * decisions: how often a key runs, and whether another attempt starts. */
 class BenchReportSpec extends AnyFunSuite {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private val conf = Bench.RunConf(sfDir = "/data/sf0.1", cpus = 8,
-    shufflePartitions = 8, runs = 3, warmup = true, partial = false,
+    shufflePartitions = 8, partial = false,
     codegenCacheMaxEntries = 512, artifactIsolation = false,
     pageSizeBytes = 524288L, broadcastBlockBytes = 524288L)
 
   private def battery(scale: Double, loadOk: Boolean, cotenant: Double,
-      waited: Long) = Bench.Battery(
+      waited: Long, wall: Double = 600.0) = Bench.Battery(
     results = Seq("q_topk" -> 1.0 * scale, "q_agg_hash" -> 0.5 * scale),
     runsRaw = Seq("q_topk" -> Seq(1.0, 1.0, 1.1).map(_ * scale),
       "q_agg_hash" -> Seq(0.5, 0.5, 0.6).map(_ * scale),
@@ -29,7 +31,7 @@ class BenchReportSpec extends AnyFunSuite {
     queryLoad = Map("q_topk" -> 0.1, "q_agg_hash" -> 0.2),
     loadStart = Seq(0.1, 0.2, 0.3), loadEnd = Seq(1.0, 0.5, 0.4),
     stealPct = 0.5, cotenantCores = cotenant, loadOk = loadOk,
-    waitedSec = waited, deferred = false)
+    waitedSec = waited, deferred = false, wallSec = wall)
 
   private def files(r: Bench.Report) =
     r.files.map { case (name, kv) =>
@@ -50,7 +52,7 @@ class BenchReportSpec extends AnyFunSuite {
     assert(line.get("load").get("load_ok").asBoolean)
     val c = line.get("conf")
     assert(c.get("cpus").asInt == 8 && c.get("shuffle_partitions").asInt == 8)
-    assert(!c.has("oha_fallback"))
+    assert(!c.has("oha_fallback") && !c.has("runs") && !c.has("warmup"))
     assert(c.get("codegen_cache_max_entries").asInt == 512)
     assert(!c.get("artifact_isolation").asBoolean)
     assert(c.get("page_size_bytes").asLong == 524288L)
@@ -99,5 +101,32 @@ class BenchReportSpec extends AnyFunSuite {
     assert(line.get("value").asDouble == 3.0)
     assert(line.get("load").get("cotenant_cores").asDouble == 0.3)
     assert(!line.get("load").get("load_ok").asBoolean)
+  }
+
+  test("runCount: 7 runs under 0.5 s of warm-up, 5 from 0.5 s, 3 after a failed warm-up") {
+    val table = Seq(0.0 -> 7, 0.12 -> 7, 0.4999 -> 7, 0.5 -> 5, 0.51 -> 5,
+      30.0 -> 5, Double.PositiveInfinity -> 5, Double.NaN -> 3)
+    for ((warmupWallS, runs) <- table)
+      assert(Bench.runCount(warmupWallS) == runs, s"warm-up $warmupWallS s")
+  }
+
+  test("nextAttempt: first always, none after load_ok, at most 3, retries only when retryable and in budget") {
+    val failed = battery(1.0, loadOk = false, 0.9, 0L, wall = 600.0)
+    val ok = battery(1.0, loadOk = true, 0.0, 0L, wall = 600.0)
+    val wait = 480.0
+    // Room for the wait plus one more attempt as long as the last one.
+    val edge = Bench.budgetSec - wait - failed.wallSec
+    val table = Seq(
+      ("first attempt, even past the budget", Seq.empty[Bench.Battery], false, 1e9, true),
+      ("after a load_ok attempt", Seq(failed, ok), true, 60.0, false),
+      ("second attempt of a retryable run", Seq(failed), true, 60.0, true),
+      ("third attempt of a retryable run", Seq(failed, failed), true, 60.0, true),
+      ("fourth attempt", Seq(failed, failed, failed), true, 60.0, false),
+      ("retry of a non-retryable run", Seq(failed), false, 60.0, false),
+      ("retry that ends exactly at the budget", Seq(failed), true, edge, true),
+      ("retry that ends past the budget", Seq(failed), true, edge + 0.001, false))
+    for ((what, done, retryable, elapsedSec, expected) <- table)
+      assert(Bench.nextAttempt(done, retryable, elapsedSec, wait) == expected, what)
+    assert(Bench.maxAttempts == 3 && Bench.budgetSec == 3000.0)
   }
 }

@@ -305,7 +305,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("bloom ingest gate probes map-side: no join, no shuffle of the batch") {
-    graft.functions.VectorFunctions.register(spark)
     Tables.registerViews(spark, TestSpark.sf)
     // the production shape: flag arrivals against the standing corpus's
     // sketch — corpus collapses to one binary via a scalar subquery, the
@@ -333,7 +332,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash pigeonhole banding finds EVERY pair within hamming <= 3") {
-    graft.functions.VectorFunctions.register(spark)
     val sigs = Tables(spark, TestSpark.sf, "documents")
       .select(col("doc_id"),
         graft.functions.VectorFunctions.simhash(split(col("text"), " ")).as("sh"))

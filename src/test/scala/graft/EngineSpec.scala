@@ -142,6 +142,9 @@ class EngineSpec extends AnyFunSuite {
     finally files.close()
   }
 
+  private def mainSource(f: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get("src/main", f))
+
   test("Engine.session is the only SparkSession builder under src/main") {
     val builders = mainSourcesContaining("SparkSession.builder")
     assert(builders == List("scala/graft/Engine.scala"),
@@ -153,8 +156,7 @@ class EngineSpec extends AnyFunSuite {
     for (listener <- Seq("SparkListener", "StreamingQueryListener")) {
       val subclass = s"(extends|new|with)\\s+[\\w.]*\\b$listener\\b".r
       val found = mainSourcesContaining(listener).flatMap { f =>
-        val n = subclass.findAllIn(
-          java.nio.file.Files.readString(java.nio.file.Paths.get("src/main", f))).size
+        val n = subclass.findAllIn(mainSource(f)).size
         if (n > 0) Some(f -> n) else None
       }
       assert(found == List("scala/graft/Bench.scala" -> 1), s"$listener subclasses: $found")
@@ -181,7 +183,7 @@ class EngineSpec extends AnyFunSuite {
     // One plane family: a second banding kernel would split the
     // recall/cost curve q_ann_recall measures.
     val calls = mainSourcesContaining("mdPlaneDots(").flatMap { f =>
-      val src = java.nio.file.Files.readString(java.nio.file.Paths.get("src/main", f))
+      val src = mainSource(f)
       val defs = """\n  (?:private(?:\[\w+\])? )?def (\w+)""".r.findAllMatchIn(src).toSeq
       "VectorFunctions\\.mdPlaneDots\\(".r.findAllMatchIn(src).map { m =>
         f -> defs.takeWhile(_.start < m.start).lastOption.map(_.group(1))
@@ -191,6 +193,48 @@ class EngineSpec extends AnyFunSuite {
       s"mdPlaneDots callers: $calls")
     for (kernel <- Seq("hyperplaneSig", "HyperplaneSig", "hyperplane_sig"))
       assert(mainSourcesContaining(kernel).isEmpty, s"$kernel remains in src/main")
+  }
+
+  test("src/main reads exactly six SPARK_GRAFT_ variables") {
+    // A new knob must be added here: every variable is a mode each run
+    // can take, so the set stays small on purpose.
+    val knobs = Set("CPUS", "SF_DIR", "OUT", "ONLY", "WAIT_QUIET", "EXPLAIN_STREAM")
+    val texts = mainSourcesContaining("SPARK_GRAFT_").map(mainSource)
+    def names(re: scala.util.matching.Regex) =
+      texts.flatMap(t => re.findAllMatchIn(t).map(_.group(1))).toSet
+    // A quoted name is a read; comments may name only a variable that is read.
+    assert(names("\"SPARK_GRAFT_([A-Z_]+)\"".r) == knobs)
+    assert(names("SPARK_GRAFT_([A-Z_]+)".r) == knobs)
+  }
+
+  test("the function library is registered only where SparkEntry runs a query") {
+    assert(mainSourcesContaining("VectorFunctions.register(") ==
+      List("scala/graft/SparkEntry.scala"))
+    val own = mainSource("scala/graft/functions/VectorFunctions.scala")
+    assert("\\bregister\\(".r.findAllIn(own).size == 1 && own.contains("def register("))
+  }
+
+  test("SparkEntry.queries runs on a fresh session that holds no graft function") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val base = TestSpark.spark
+    val fresh = base.newSession()
+    def graftFunctions(s: org.apache.spark.sql.SparkSession) =
+      graft.functions.VectorFunctions.functions.map(_._1)
+        .filter(n => s.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+    assert(graftFunctions(fresh).isEmpty)
+    // One key from each module whose bodies used to register the library.
+    val keys = Seq("q_dedup_simhash", "q_similarity_pq", "q_split_hash",
+      "q_text_cooccur", "q_feature_hashing", "q_sample_weighted", "q_agg_cms",
+      "q_bootstrap_ci", "q_text_normalize")
+    def rows(s: org.apache.spark.sql.SparkSession, k: String) =
+      try SparkEntry.queries(k)(s, TestSpark.sf).collect().map(_.toString).sorted.toSeq
+      finally Tables.releaseAll(s)
+    for (k <- keys) {
+      val got = rows(fresh, k)
+      assert(got.nonEmpty, s"$k returned no rows")
+      assert(got == rows(base, k), k)
+    }
+    assert(graftFunctions(fresh) == graft.functions.VectorFunctions.functions.map(_._1))
   }
 
   test("GraftExtensions injects the function library at session build time") {

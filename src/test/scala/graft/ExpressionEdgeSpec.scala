@@ -10,7 +10,6 @@ class ExpressionEdgeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("cosine_similarity: null input → null, empty arrays → 0, length mismatch → common prefix") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Some(Seq(1.0, 2.0)), Some(Seq(1.0, 2.0))),
@@ -28,7 +27,6 @@ class ExpressionEdgeSpec extends AnyFunSuite {
   }
 
   test("shingle_set / minhash_signature / simhash64 / rolling_hash64 on empty and tiny inputs") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq.empty[String]),

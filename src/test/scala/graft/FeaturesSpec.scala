@@ -42,7 +42,6 @@ class FeaturesSpec extends AnyFunSuite {
 
   test("shingle_gen generator matches shingle_set + explode (distinct) and keeps positions") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val df = Seq((1L, "a b c d"), (2L, "x y"), (3L, "p q r"))
       .toDF("id", "text").createOrReplaceTempView("sg_docs")
     val gen = spark.sql(

@@ -33,7 +33,6 @@ class MinhashAuditSpec extends AnyFunSuite {
   test("wide one-pass signature spelling is value-identical to the seed-exploded oracle spelling") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     // shingle-shaped relation with shared and private tokens across docs
     val sh = (1 to 40).flatMap { i =>
       val doc = (i % 7).toLong

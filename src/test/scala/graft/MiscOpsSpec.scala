@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,7 +60,6 @@ class MiscOpsSpec extends AnyFunSuite {
   }
 
   test("nfc normalization composes iff a precomposed codepoint exists; strip recovers base") {
-    VectorFunctions.register(spark)
     val r = spark.sql(
       """SELECT nfc_normalize('e' || '́') AS comp,
                 nfc_normalize('b' || '́') AS nocomp,

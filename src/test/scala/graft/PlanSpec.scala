@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -507,7 +506,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("registered functions are usable from plain SQL text") {
-    VectorFunctions.register(spark)
     val r = spark.sql(
       """SELECT cosine_similarity(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c,
                 simhash64(array('a','b')) AS s,
@@ -974,9 +972,10 @@ class PlanSpec extends AnyFunSuite {
   /** Corpus-proportional base tables: relations derived from these grow
     * with the data unless collapsed by a global agg or limit. The five
     * TPC-H-style dims (region/nation/customer/supplier/part) are the
-    * workload model's broadcast side (ScaleGen and the 100-TB sizing in
-    * SCALE.md keep them dim-sized); the class this invariant polices is
-    * FACT-derived hint subtrees — pair sets, id lists, per-doc rollups. */
+    * workload model's broadcast side (they stay dim-sized at every scale
+    * factor, as in the 100-TB sizing of SCALE.md); the class this
+    * invariant polices is FACT-derived hint subtrees — pair sets, id
+    * lists, per-doc rollups. */
   private val corpusTables = Seq("lineitem", "orders", "events",
     "documents", "embeddings")
 

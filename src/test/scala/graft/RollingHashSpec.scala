@@ -9,7 +9,6 @@ class RollingHashSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("order-sensitive and deterministic") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq("a", "b", "c")),
@@ -23,7 +22,6 @@ class RollingHashSpec extends AnyFunSuite {
   }
 
   test("hash composes: h(a ++ b) == h(a)*B^|b| + h(b)") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq("x", "y")), (2L, Seq("z", "w", "v")), (3L, Seq("x", "y", "z", "w", "v"))

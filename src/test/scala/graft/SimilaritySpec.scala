@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import graft.llm.Similarity
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -59,7 +58,7 @@ class SimilaritySpec extends AnyFunSuite {
     val e = Tables(spark, TestSpark.sf, "embeddings")
     val buckets: Map[Long, Set[(Int, Long)]] =
       Similarity.mdPlaneBanded(e.select("vec_id", "embedding"),
-          tables = 12, rowsPerTable = 5, dims = 64)
+          tables = 12, rowsPerTable = 5)
         .collect().groupBy(_.getLong(0))
         .map { case (id, rows) => id -> rows.map(r => (r.getInt(1), r.getLong(2))).toSet }
     val pairs = Similarity.annTopK(spark, e, 3).collect()
@@ -72,7 +71,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("brute-force top-k matches a driver-side computation") {
-    VectorFunctions.register(spark)
     val vecs = Tables(spark, TestSpark.sf, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), _.cast(DoubleType)).as("v"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
@@ -145,7 +143,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_knn_graph: edges, ranks and mutual flags match brute force within label") {
-    VectorFunctions.register(spark)
     val vecs = Tables(spark, TestSpark.sf, "embeddings")
       .select(col("label"), col("vec_id"),
         transform(col("embedding"), _.cast(DoubleType)).as("v"))
@@ -279,7 +276,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q_graph_pagerank: integer power iteration matches a sequential recompute; mass conserved") {
-    VectorFunctions.register(spark)
     // brute-force edges: exact top-3 cosine within label (the q_knn_graph
     // contract), then the scaled integer recurrence run sequentially.
     val vecs = Tables(spark, TestSpark.sf, "embeddings")

@@ -380,7 +380,6 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.VectorFunctions.register(spark)
     // Batch truth: the oracle-checked gopher gate decides which docs pass;
     // the shared splitAssign expression labels them.
     val batch = SparkEntry.queries("q_quality_gopher")(spark, TestSpark.sf)

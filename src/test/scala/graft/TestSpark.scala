@@ -6,9 +6,16 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (suite-level sessions
   * would pay ~10s startup each). Built by `Engine.session` like every main;
   * `cores` is pinned because the suite's expectations assume local[4]
-  * whatever SPARK_GRAFT_CPUS the environment exports. */
+  * whatever SPARK_GRAFT_CPUS the environment exports. It holds the graft
+  * function library from the start, as `SparkEntry` gives every query's
+  * session, so a spec that calls a helper or the SQL functions directly
+  * does not depend on which spec ran a query first. */
 object TestSpark {
-  lazy val spark: SparkSession = Engine.session("graft-test", cores = 4)
+  lazy val spark: SparkSession = {
+    val s = Engine.session("graft-test", cores = 4)
+    graft.functions.VectorFunctions.register(s)
+    s
+  }
   val sf: String = "/root/testdata/sf0.001"
 
   /** Job groups of the jobs `body` starts ("null" for a job outside any

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{TopKAgg, VectorFunctions}
+import graft.functions.TopKAgg
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,7 +31,6 @@ class TopKAggSpec extends AnyFunSuite {
 
   private def run(items: Seq[(Long, Long, Double)], k: Int, asc: Boolean,
       parts: Int): Map[Long, Seq[(Long, Double)]] = {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = items.toDF("key", "id", "score").repartition(parts)
     df.groupBy("key")

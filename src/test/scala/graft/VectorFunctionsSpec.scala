@@ -8,7 +8,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("cosine_similarity matches a hand-computed value and handles zero vectors") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0, 0.0), Array(1.0, 0.0), 1.0),
@@ -24,7 +23,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
   }
 
   test("cosine approx_count agreement between codegen and interpreted paths") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 100).map(i =>
       (Array.tabulate(16)(j => (i * 31 + j * 7 % 13).toDouble),
@@ -38,7 +36,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
   }
 
   test("simhash: near-duplicate token lists have smaller hamming distance than unrelated") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val a = Seq.tabulate(40)(i => s"tok$i")
     val near = a.updated(3, "changed")
@@ -63,7 +60,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
 
   test("cms_estimate never underestimates and respects the eps*N bound") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     // skewed corpus: key k appears k times, 1..100 (N = 5050)
     val rows = (1L to 100L).flatMap(k => Seq.fill(k.toInt)(k))
     rows.toDF("k").createOrReplaceTempView("cms_corpus")
@@ -82,7 +78,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
   }
 
   test("multi_pattern_count matches brute-force sliding counts incl. unicode") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val pats = Seq("ab", "bc", "abcab", "é x", "zz")
     def brute(s: String, p: String): Long =
@@ -103,7 +98,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
   }
 
   test("multi_pattern_count counts ALL occurrences, overlapping included") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val got = Seq("aaaa").toDF("t")
       .select(VectorFunctions.multiPatternCount(col("t"), Seq("aa", "aaa"))
@@ -113,7 +107,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
   }
 
   test("multi_pattern_count stays in whole-stage codegen (no fallback)") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     // a literal input constant-folds to LocalTableScan (the interpreted
     // eval path, covered above) — codegen only materializes over a real
@@ -132,7 +125,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
   }
 
   test("md_plane_dots / quantize16 / cosine_similarity_int16 match their HOF reference spellings") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val planes = 11 // deliberately not a multiple of anything
     val vecs = Seq(
