@@ -200,7 +200,7 @@ object Bench {
       queryLoad: Map[String, Double],
       loadStart: Seq[Double], loadEnd: Seq[Double],
       stealPct: Double, cotenantCores: Double, loadOk: Boolean,
-      waitedSec: Long, deferred: Boolean, wallSec: Double)
+      waitedSec: Long, deferred: Boolean)
 
   /** What shaped a battery's timings, echoed into the line's `conf` block
     * so every artifact describes the run that produced it. */
@@ -216,8 +216,9 @@ object Bench {
       line: String, files: Seq[(String, Seq[(String, String)])],
       regressions: Seq[(String, Double, Double, Double)])
 
-  /** Render the best attempt so far — load_ok first, then the lowest
-    * cotenant_cores, then the lowest total. A key regresses against
+  /** Render the best of `attempts` (`main` passes its one battery) —
+    * load_ok first, then the lowest cotenant_cores, then the lowest
+    * total. A key regresses against
     * `baseline` at > 1.5x AND > 0.2 s absolute (the floor keeps
     * millisecond noise on tiny keys out of the gate). A failed key is
     * excluded from the total and written as an explicit null, so a partial
@@ -285,25 +286,6 @@ object Bench {
   private[graft] def runCount(warmupWallS: Double): Int =
     if (warmupWallS.isNaN) 3 else if (warmupWallS < 0.5) 7 else 5
 
-  /** Most battery attempts one Bench run makes. */
-  private[graft] val maxAttempts = 3
-
-  /** Wall seconds from the start of a Bench run within which every attempt
-    * must end, so the run prints its line before an unattended caller
-    * kills it. */
-  private[graft] val budgetSec: Double = 50 * 60.0
-
-  /** Whether to start another battery attempt after `done`, `elapsedSec`
-    * into the run, when a retry first waits up to `waitSec` for a quiet
-    * start. The first attempt always runs. A retry needs a retryable run,
-    * no load_ok attempt yet, fewer than [[maxAttempts]] attempts, and room
-    * in [[budgetSec]] for the wait plus one more attempt as long as the
-    * last. */
-  private[graft] def nextAttempt(
-      done: Seq[Battery], retryable: Boolean, elapsedSec: Double, waitSec: Double): Boolean =
-    done.isEmpty || (retryable && done.length < maxAttempts && !done.exists(_.loadOk) &&
-      elapsedSec + waitSec + done.last.wallSec <= budgetSec)
-
   /** One key's BENCH_IO.json row; `stream` only for keys that ran
     * micro-batches. */
   private def ioJson(r: KeyRow): String = {
@@ -322,13 +304,12 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val runStartNs = System.nanoTime()
     // SPARK_GRAFT_WAIT_QUIET=<minutes>: poll for a quiet start (1-min
     // load ≤ 0.15) up to the deadline before running, so an attended
     // battery can outwait a co-tenant window instead of burning 20 minutes
     // producing an untrusted artifact. Unset — the driver's unattended
-    // runs — means no wait on attempt 1; a deadline hit runs anyway and
-    // the artifact marks itself "deferred".
+    // runs — means no wait; a deadline hit runs anyway and the artifact
+    // marks itself "deferred".
     val waitQuietMin = sys.env.get("SPARK_GRAFT_WAIT_QUIET")
       .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(0.0)
     /** Poll for a quiet 1-min load up to `min` minutes; returns seconds
@@ -465,14 +446,9 @@ object Bench {
       val loadOk = loadStart.head <= 0.15 && stealPct <= 3.0 && cotenantCores <= 0.25
       Battery(results.toSeq, runs.toSeq, failed.toSeq, ioProfile.toSeq,
         queryLoad.toMap, loadStart, loadEnd, stealPct, cotenantCores, loadOk,
-        waitedSecIn, deferredIn, wallSec)
+        waitedSecIn, deferredIn)
     }
 
-    // Battery-level auto-retry: on a gate failure the canonical full
-    // battery retries, outwaiting the co-tenant between attempts, and the
-    // best attempt's artifact ships. The gate only certifies the canonical
-    // battery, so nothing else retries.
-    val retryable = sfDir.endsWith("sf0.1") && only.isEmpty
     val conf = RunConf(sfDir, spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       partial = only.nonEmpty,
@@ -500,37 +476,18 @@ object Bench {
     // Where the BENCH_*.json files go: the working directory unless a run
     // keeps its artifacts apart from the committed battery files.
     val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT", ".")
-    val attempts = scala.collection.mutable.ArrayBuffer[Battery]()
-    // Attempt 1 honors SPARK_GRAFT_WAIT_QUIET verbatim (unset = no wait,
-    // the unattended default). Retries always wait — the 1-min load needs ~3 idle
-    // minutes to decay from OUR OWN previous attempt, and retrying straight
-    // into the same co-tenant burst is wasted wall — for up to
-    // max(WAIT_QUIET, 8) minutes, which nextAttempt charges to the budget.
-    val retryWaitMin = math.max(waitQuietMin, 8.0)
-    def elapsedSec = (System.nanoTime() - runStartNs) / 1e9
-    while (nextAttempt(attempts.toSeq, retryable, elapsedSec, retryWaitMin * 60)) {
-      val attempt = attempts.length + 1
-      val waitMin = if (attempt == 1) waitQuietMin else retryWaitMin
-      val waited = waitQuiet(waitMin)
-      val deferred = waitMin > 0 && loadAvg().head > 0.15
-      if (attempt > 1)
-        System.err.println(
-          f"[bench] RETRY attempt $attempt/$maxAttempts after gate failure " +
-            f"(waited ${waited}s, load now ${loadAvg().head}%.2f)")
-      attempts += attemptBattery(waited, deferred)
-      // Report after every completed attempt: the artifacts and the last
-      // stdout line always hold the best attempt so far, so a run killed
-      // during a retry still leaves a parseable result behind.
-      val soFar = render(attempts.toSeq, conf, baseline)
-      soFar.files.foreach { case (name, updates) =>
-        writeBenchFile(s"$outDir/$name", updates, conf.partial)
-      }
-      println(soFar.line)
+    // One battery per run, no retry: a full battery takes 25-31 min, so a
+    // retry after a gate failure would double the run's wall. The line
+    // ships with its load evidence instead.
+    val waited = waitQuiet(waitQuietMin)
+    val deferred = waitQuietMin > 0 && loadAvg().head > 0.15
+    val report = render(Seq(attemptBattery(waited, deferred)), conf, baseline)
+    report.files.foreach { case (name, updates) =>
+      writeBenchFile(s"$outDir/$name", updates, conf.partial)
     }
-    if (retryable && attempts.length < maxAttempts && !attempts.exists(_.loadOk))
-      System.err.println(f"[bench] NO RETRY: the wait and another attempt " +
-        f"would end past the ${budgetSec / 60}%.0f-min budget (${elapsedSec}%.0f s elapsed)")
-    val report = render(attempts.toSeq, conf, baseline)
+    // Print as soon as the battery ends, so a run killed during shutdown
+    // still leaves a parseable line behind.
+    println(report.line)
     report.regressions.foreach { case (k, cur, base, load) =>
       System.err.println(
         f"[bench] REGRESSION $k: $cur%.3f s vs baseline $base%.3f s " +

@@ -2,11 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `Bench.render` turns the attempts completed so far into the metric line
-  * and the four BENCH_*.json files; Bench calls it after every attempt, so
-  * a run killed during a retry still leaves the best attempt behind.
-  * `Bench.runCount` and `Bench.nextAttempt` are the battery's other two
-  * decisions: how often a key runs, and whether another attempt starts. */
+/** `Bench.render` turns battery attempts into the metric line and the four
+  * BENCH_*.json files, shipping the best attempt. `Bench.runCount` is the
+  * battery's other decision: how often a key runs. */
 class BenchReportSpec extends AnyFunSuite {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -16,7 +14,7 @@ class BenchReportSpec extends AnyFunSuite {
     pageSizeBytes = 524288L, broadcastBlockBytes = 524288L)
 
   private def battery(scale: Double, loadOk: Boolean, cotenant: Double,
-      waited: Long, wall: Double = 600.0) = Bench.Battery(
+      waited: Long) = Bench.Battery(
     results = Seq("q_topk" -> 1.0 * scale, "q_agg_hash" -> 0.5 * scale),
     runsRaw = Seq("q_topk" -> Seq(1.0, 1.0, 1.1).map(_ * scale),
       "q_agg_hash" -> Seq(0.5, 0.5, 0.6).map(_ * scale),
@@ -31,7 +29,7 @@ class BenchReportSpec extends AnyFunSuite {
     queryLoad = Map("q_topk" -> 0.1, "q_agg_hash" -> 0.2),
     loadStart = Seq(0.1, 0.2, 0.3), loadEnd = Seq(1.0, 0.5, 0.4),
     stealPct = 0.5, cotenantCores = cotenant, loadOk = loadOk,
-    waitedSec = waited, deferred = false, wallSec = wall)
+    waitedSec = waited, deferred = false)
 
   private def files(r: Bench.Report) =
     r.files.map { case (name, kv) =>
@@ -108,25 +106,5 @@ class BenchReportSpec extends AnyFunSuite {
       30.0 -> 5, Double.PositiveInfinity -> 5, Double.NaN -> 3)
     for ((warmupWallS, runs) <- table)
       assert(Bench.runCount(warmupWallS) == runs, s"warm-up $warmupWallS s")
-  }
-
-  test("nextAttempt: first always, none after load_ok, at most 3, retries only when retryable and in budget") {
-    val failed = battery(1.0, loadOk = false, 0.9, 0L, wall = 600.0)
-    val ok = battery(1.0, loadOk = true, 0.0, 0L, wall = 600.0)
-    val wait = 480.0
-    // Room for the wait plus one more attempt as long as the last one.
-    val edge = Bench.budgetSec - wait - failed.wallSec
-    val table = Seq(
-      ("first attempt, even past the budget", Seq.empty[Bench.Battery], false, 1e9, true),
-      ("after a load_ok attempt", Seq(failed, ok), true, 60.0, false),
-      ("second attempt of a retryable run", Seq(failed), true, 60.0, true),
-      ("third attempt of a retryable run", Seq(failed, failed), true, 60.0, true),
-      ("fourth attempt", Seq(failed, failed, failed), true, 60.0, false),
-      ("retry of a non-retryable run", Seq(failed), false, 60.0, false),
-      ("retry that ends exactly at the budget", Seq(failed), true, edge, true),
-      ("retry that ends past the budget", Seq(failed), true, edge + 0.001, false))
-    for ((what, done, retryable, elapsedSec, expected) <- table)
-      assert(Bench.nextAttempt(done, retryable, elapsedSec, wait) == expected, what)
-    assert(Bench.maxAttempts == 3 && Bench.budgetSec == 3000.0)
   }
 }
